@@ -10358,7 +10358,7 @@ def _nndescent_recall_frame(spark, sf, live_only: bool):
     # report enters Spark. Bit-identical: the same integer micro-L2,
     # the same (dist, cand) tie order in both top-10s, Python integer
     # floor-division for the q6 grid. Distributed fallback unchanged
-    # below (and exercised at gate time via SPARK_GRAFT_NN_FASTPATH=0).
+    # below (exercised at gate time via SPARK_GRAFT_PLACEMENT=distributed).
     res = _beam_probe_fast_arrays(
         g, corpus, probes, 5, 12, "embedding", "vec_id",
         16_000, 20_000, return_panels=True,

@@ -14,6 +14,8 @@ reference's domain implies at 100 TB scale.
 
 Layout:
     session       - tuned SparkSession builder
+    placement     - bounded_collect: the one driver-fast-path decision
+                    (SPARK_GRAFT_PLACEMENT = auto | distributed | cascade)
     schemas       - fixed StructTypes replacing the reference's ad-hoc dicts
     functions/    - scalar expression layer (SURVEY §2.8/2.9: X1-X18, N1-N4)
     operators/    - parse pipeline, joins, aggregates, top-k, dedup, text analysis

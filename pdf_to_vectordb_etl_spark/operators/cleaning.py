@@ -172,21 +172,3 @@ def strip_boilerplate_lines(
             "n_lines_dropped",
         )
     )
-
-
-def boilerplate_line_report(
-    df: DataFrame,
-    min_docs: int = 3,
-    min_chars: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_n: int = 20,
-) -> DataFrame:
-    """The no-silent-drops companion: the ``top_n`` most widespread
-    boilerplate lines with document counts — what a reviewer eyeballs
-    before blessing a strip run. Deterministic order
-    (n_docs DESC, line ASC)."""
-    fl = frequent_lines(df, min_docs, min_chars, text_col, id_col)
-    # bounded: the inventory is already filtered to >= min_docs lines;
-    # rank-limit via orderBy+limit (driver collects nothing)
-    return fl.orderBy(F.desc("n_docs"), "line").limit(top_n)

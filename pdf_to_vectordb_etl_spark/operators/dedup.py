@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions.vector import cosine_similarity, l2_norm
+from ..placement import bounded_collect
 
 
 #: Band buckets holding more than this many signatures are routed
@@ -289,14 +290,6 @@ def minhash_lsh_candidates(
     None means uncapped, the default means the 512 star-routing cap)."""
     sig = minhash_signatures(df, n_hashes, shingle_n, text_col, id_col)
     return _band_candidates(sig, n_hashes, bands, max_bucket_size)
-
-
-def _signatures_from_hashes(ex: DataFrame, n_hashes: int) -> DataFrame:
-    """MinHash signature columns from an (id, h) shingle-hash table."""
-    mins = [
-        F.min(F.xxhash64("h", F.lit(i))).alias(f"h{i}") for i in range(n_hashes)
-    ]
-    return ex.groupBy("id").agg(*mins)
 
 
 def _band_table(sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
@@ -911,7 +904,10 @@ def cluster_pairs(
     replaces ~3 jobs per propagation round (the funnel report spent
     more wall-clock on CC job overhead than on all its real work).
     Identical labels by construction — min member id per component.
-    Pass ``driver_max_edges=None`` to force the distributed path.
+    Pass ``driver_max_edges=None`` (or set a non-auto
+    ``SPARK_GRAFT_PLACEMENT``, see
+    :func:`~pdf_to_vectordb_etl_spark.placement.bounded_collect`) to
+    force the distributed path.
 
     Distributed path — min-label propagation: each round every node
     adopts the smallest label among itself and its neighbours — reach
@@ -934,46 +930,43 @@ def cluster_pairs(
         .distinct()
         .persist()
     )
-    if driver_max_edges is not None:
-        # ONE probing action: collect at most max+1 rows — if the
-        # limit truncates, the graph is too big and the distributed
-        # path below re-reads the persisted edges
-        rows = edges.limit(driver_max_edges + 1).collect()
-        if len(rows) <= driver_max_edges:
-            from pyspark.sql.types import StructField, StructType
+    # ONE probing action (bounded_collect): over the cap, or under a
+    # non-auto placement, the distributed path below re-reads the
+    # persisted edges
+    rows = bounded_collect(edges, driver_max_edges)
+    if rows is not None:
+        from pyspark.sql.types import StructField, StructType
 
-            edges.unpersist()
-            parent: dict = {}
+        edges.unpersist()
+        parent: dict = {}
 
-            def find(x):
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
 
-            for r in rows:
-                a, b = r["src"], r["dst"]
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[rb] = ra
-            comp: dict = {}
-            for x in parent:
-                comp.setdefault(find(x), []).append(x)
-            out = []
-            for members in comp.values():
-                m = min(members)
-                out.extend((x, m) for x in members)
-            st = StructType(
-                [
-                    StructField("id", pairs.schema["id_a"].dataType),
-                    StructField(
-                        "cluster_id", pairs.schema["id_a"].dataType
-                    ),
-                ]
-            )
-            return pairs.sparkSession.createDataFrame(out, st)
+        for r in rows:
+            a, b = r["src"], r["dst"]
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[rb] = ra
+        comp: dict = {}
+        for x in parent:
+            comp.setdefault(find(x), []).append(x)
+        out = []
+        for members in comp.values():
+            m = min(members)
+            out.extend((x, m) for x in members)
+        st = StructType(
+            [
+                StructField("id", pairs.schema["id_a"].dataType),
+                StructField("cluster_id", pairs.schema["id_a"].dataType),
+            ]
+        )
+        return pairs.sparkSession.createDataFrame(out, st)
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()

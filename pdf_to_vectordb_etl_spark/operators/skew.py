@@ -23,16 +23,6 @@ def with_salt(df: DataFrame, key: str, buckets: int, salt_col: str = "_salt") ->
     return df.withColumn(salt_col, F.pmod(nonce, F.lit(buckets)).cast("int"))
 
 
-def replicate_for_salt(
-    df: DataFrame, buckets: int, salt_col: str = "_salt"
-) -> DataFrame:
-    """Explode the (small) build side once per salt bucket so every
-    salted probe partition finds its match. Size cost: x buckets."""
-    return df.withColumn(
-        salt_col, F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    )
-
-
 def salted_join(
     big: DataFrame,
     small: DataFrame,

@@ -71,59 +71,18 @@ def global_dense_rank(
     """Exact 0-based global dense rank over ``key_cols`` without a
     single-partition Window.
 
-    Range-partition the distinct keys (equal keys are never split by a
-    RangePartitioner), number within each partition, then shift by the
-    cumulative distinct-count of the partitions before it. Driver-side
-    state: one (pid, n_distinct) row per partition. Returns ``df`` with
-    ``out_col`` joined on (broadcast of the ranked key table is NOT
-    assumed — the join is a plain equi-join on the keys, shuffling
-    8-byte ranks).
-
-    SIZE-AWARE partitioning (r11): the range exchange carries no
-    explicit partition count, so AQE coalesces it to the data volume
-    (``advisoryPartitionSizeInBytes``) instead of pinning it to the
-    core-count default — kilobyte intermediates stop paying a 32-task
-    scheduling tail and 100 TB inputs still fan out to the configured
-    shuffle parallelism. Per-partition numbering (r11) is
-    ``monotonically_increasing_id`` over the partition-sorted rows —
-    its documented layout keeps a consecutive 0-based row counter in
-    the low 33 bits — replacing the dense_rank Window whose
-    hashpartitioning(_pid) requirement forced a SECOND full exchange
-    of the key table right after the range exchange (the keys are
-    distinct rows, so dense_rank == row_number; parity pinned by
-    test_mid_numbering_matches_window)."""
+    The distinct keys are distinct rows, so their dense rank is their
+    row number minus one: :func:`_row_numbered` over the distinct keys
+    (equal keys are never split by a RangePartitioner), joined back on
+    the keys. Driver-side state: one (pid, count, max) row per
+    partition. The join is a plain equi-join on the keys (broadcast of
+    the ranked key table is NOT assumed), shuffling 8-byte ranks."""
     keys = df.select(*key_cols).distinct()
-    ranged = keys.repartitionByRange(*key_cols).sortWithinPartitions(
-        *key_cols
-    )
-    local = ranged.select(
-        *key_cols,
-        F.spark_partition_id().alias("_pid"),
-        (
-            F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1) + 1
-        ).alias("_lrk"),
-    )
-    local = local.localCheckpoint(eager=True)
-    sizes = (
-        local.groupBy("_pid")
-        .agg(F.max("_lrk").alias("_n"))
-        .orderBy("_pid")
-        .collect()
-    )
-    if not sizes:
-        # empty key set (e.g. a corpus of empty documents): create_map
-        # with zero args types as map<void,void> and breaks resolution
+    numbered, total = _row_numbered(keys, key_cols, out_col)
+    if total == 0:
         return df.withColumn(out_col, F.lit(None).cast("long")).limit(0)
-    offset, offsets = 0, {}
-    for r in sizes:
-        offsets[r["_pid"]] = offset
-        offset += r["_n"]
-    omap = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    )
-    ranked = local.select(
-        *key_cols,
-        (F.col("_lrk") - 1 + omap[F.col("_pid")]).cast("long").alias(out_col),
+    ranked = numbered.select(
+        *key_cols, (F.col(out_col) - 1).cast("long").alias(out_col)
     )
     return df.join(ranked, key_cols)
 
@@ -451,6 +410,24 @@ def repeated_suffix_groups(
     )
 
 
+def _partition_offsets(sizes) -> tuple[dict, int]:
+    """({pid: rows before it}, total) from per-partition (_pid, _n,
+    _max) rows in pid order. The numbering counter lives in the low 33
+    bits of ``monotonically_increasing_id``, so a partition past 2^33
+    rows would wrap it — and then its max would no longer equal its
+    count: raise instead of numbering silently wrong."""
+    offset, offsets = 0, {}
+    for r in sizes:
+        if r["_n"] != r["_max"]:
+            raise RuntimeError(
+                f"row numbering: partition {r['_pid']} has {r['_n']} rows"
+                f" but its 33-bit counter reached {r['_max']}"
+            )
+        offsets[r["_pid"]] = offset
+        offset += r["_n"]
+    return offsets, offset
+
+
 def _row_numbered(
     df: DataFrame, order_cols: list[str], out_col: str
 ) -> tuple[DataFrame, int]:
@@ -466,7 +443,8 @@ def _row_numbered(
     low 33 bits) instead of a row_number Window — the Window's
     hashpartitioning(_pid) requirement forced a second full exchange
     of the rows right after the range exchange. Parity pinned by
-    test_mid_numbering_matches_window."""
+    test_mid_numbering_matches_window; :func:`_partition_offsets`
+    raises if a partition's counter wrapped."""
     ranged = df.repartitionByRange(*order_cols).sortWithinPartitions(
         *order_cols
     )
@@ -478,12 +456,12 @@ def _row_numbered(
     )
     local = local.localCheckpoint(eager=True)
     sizes = (
-        local.groupBy("_pid").agg(F.count("*").alias("_n")).orderBy("_pid").collect()
+        local.groupBy("_pid")
+        .agg(F.count("*").alias("_n"), F.max("_lrn").alias("_max"))
+        .orderBy("_pid")
+        .collect()
     )
-    offset, offsets = 0, {}
-    for r in sizes:
-        offsets[r["_pid"]] = offset
-        offset += r["_n"]
+    offsets, offset = _partition_offsets(sizes)
     if not offsets:
         return (
             local.withColumn(out_col, F.lit(None).cast("long")).drop(

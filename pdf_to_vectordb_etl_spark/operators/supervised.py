@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from pdf_to_vectordb_etl_spark.operators.evaluation import score_bin_histogram
+from pdf_to_vectordb_etl_spark.placement import bounded_collect
 
 
 def stump_split(
@@ -435,60 +436,53 @@ def bradley_terry_strengths(
             "CAST(NULL AS DOUBLE) AS strength_q9",
         )
     a0 = max(int(min_a), int(grid) // k)
-    # bounded driver fast path: below the pair cap (and unless
-    # SPARK_GRAFT_BT_FASTPATH=0) the MM rounds run in Python ints over
-    # the collected (already-checkpointed) pair/item tables — each
-    # distributed round otherwise costs two joins, an agg, a scalar
-    # cross-join and an eager checkpoint of pure planning at item
-    # cardinality. Bit-identical trajectory (_bt_rounds_driver);
-    # distributed loop unchanged below as the above-cap fallback,
-    # exercised at gate time.
-    import os as _os
+    # bounded driver fast path (placement: bounded_collect): below the
+    # pair cap the MM rounds run in Python ints over the collected
+    # (already-checkpointed) pair/item tables — each distributed round
+    # otherwise costs two joins, an agg, a scalar cross-join and an
+    # eager checkpoint of pure planning at item cardinality.
+    # Bit-identical trajectory (_bt_rounds_driver); distributed loop
+    # below as the fallback.
+    p_rows = bounded_collect(pairs, fast_path_max_pairs)
+    if p_rows is not None:
+        from pyspark.sql.types import (
+            DoubleType,
+            LongType,
+            StructField,
+            StructType,
+        )
 
-    if (
-        fast_path_max_pairs is not None
-        and _os.environ.get("SPARK_GRAFT_BT_FASTPATH", "1") != "0"
-    ):
-        p_rows = pairs.limit(fast_path_max_pairs + 1).collect()
-        if len(p_rows) <= fast_path_max_pairs:
-            from pyspark.sql.types import (
-                DoubleType,
-                LongType,
-                StructField,
-                StructType,
-            )
-
-            i_rows = items.collect()
-            a_fin = _bt_rounds_driver(
-                [(r["i"], r["j"], r["n_ij"]) for r in p_rows],
-                {r["i"]: r["wins"] for r in i_rows},
-                a0,
-                n_rounds,
-                grid,
-                min_a,
-            )
-            out_schema = StructType(
-                [
-                    StructField("item", items.schema["i"].dataType),
-                    StructField("wins", LongType()),
-                    StructField("n_comparisons", LongType()),
-                    StructField("a_grid", LongType()),
-                    StructField("strength_q9", DoubleType()),
-                ]
-            )
-            return cells.sparkSession.createDataFrame(
-                [
-                    (
-                        r["i"],
-                        r["wins"],
-                        r["n_comp"],
-                        a_fin[r["i"]],
-                        float(a_fin[r["i"]] / int(grid)),
-                    )
-                    for r in i_rows
-                ],
-                out_schema,
-            )
+        i_rows = items.collect()
+        a_fin = _bt_rounds_driver(
+            [(r["i"], r["j"], r["n_ij"]) for r in p_rows],
+            {r["i"]: r["wins"] for r in i_rows},
+            a0,
+            n_rounds,
+            grid,
+            min_a,
+        )
+        out_schema = StructType(
+            [
+                StructField("item", items.schema["i"].dataType),
+                StructField("wins", LongType()),
+                StructField("n_comparisons", LongType()),
+                StructField("a_grid", LongType()),
+                StructField("strength_q9", DoubleType()),
+            ]
+        )
+        return cells.sparkSession.createDataFrame(
+            [
+                (
+                    r["i"],
+                    r["wins"],
+                    r["n_comp"],
+                    a_fin[r["i"]],
+                    float(a_fin[r["i"]] / int(grid)),
+                )
+                for r in i_rows
+            ],
+            out_schema,
+        )
     cur = items.select("i", F.lit(a0).cast("long").alias("a"))
     for _ in range(int(n_rounds)):
         with_a = (

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..placement import bounded_collect
+
 # marker stopwords per language for the n-gram/stopword-hit heuristic
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "en": ("the", "and", "of", "to", "a"),
@@ -47,14 +49,6 @@ def subword_token_count(text: Column | str) -> Column:
 def _marker_hits(text: Column, markers: tuple[str, ...]) -> Column:
     pat = r"\b(" + "|".join(markers) + r")\b"
     return F.size(F.regexp_extract_all(F.lower(text), F.lit(pat), 0))
-
-
-def language_scores(text: Column | str) -> Column:
-    """Per-language marker-hit counts as a struct (the langid features)."""
-    t = _c(text)
-    return F.struct(
-        *[_marker_hits(t, m).alias(lang) for lang, m in sorted(LANG_MARKERS.items())]
-    )
 
 
 def detect_language(text: Column | str, default: str = "und") -> Column:
@@ -734,44 +728,35 @@ def _merge_rounds(
     segmentation — i.e. the trained tokenizer applied to every vocab
     word, which is what an encode pass joins back to the corpus.
 
-    Below ``fast_path_max_vocab`` rows (and unless
-    ``SPARK_GRAFT_MERGE_FASTPATH=0``) the loop runs on the driver over
+    Below ``fast_path_max_vocab`` rows the loop runs on the driver over
     the collected vocab (:func:`_merge_rounds_driver` — bit-identical,
     property-pinned): the distributed loop pays one argmax job plus
     one checkpoint job of physical planning per round regardless of
     vocab size, which dominates wall time whenever the vocab is small
-    enough to collect. Above the cap the distributed loop below is the
-    automatic fallback (exercised at gate time)."""
-    import os as _os
+    enough to collect. Otherwise — or under a non-auto
+    ``SPARK_GRAFT_PLACEMENT`` (:func:`bounded_collect`) — the
+    distributed loop below runs."""
+    head = bounded_collect(vocab, fast_path_max_vocab)
+    if head is not None:
+        import pandas as pd
+        from pyspark.sql.types import StructType
 
-    if (
-        fast_path_max_vocab is not None
-        and _os.environ.get("SPARK_GRAFT_MERGE_FASTPATH", "1") != "0"
-    ):
-        head = vocab.limit(fast_path_max_vocab + 1).collect()
-        if len(head) <= fast_path_max_vocab:
-            import pandas as pd
-
-            syms_rows = [r["s"].strip(" ").split("  ") for r in head]
-            freqs = [r["freq"] for r in head]
-            merges, changed = _merge_rounds_driver(
-                syms_rows, freqs, n_merges, likelihood
-            )
-            data = {c: [r[c] for r in head] for c in carry}
-            data["s"] = [
-                " " + "  ".join(syms) + " " if ri in changed else r["s"]
-                for ri, (syms, r) in enumerate(zip(syms_rows, head))
-            ]
-            by_name = {f.name: f for f in vocab.schema.fields}
-            from pyspark.sql.types import StructType
-
-            schema = StructType(
-                [by_name[c] for c in carry] + [by_name["s"]]
-            )
-            fv = vocab.sparkSession.createDataFrame(
-                pd.DataFrame(data), schema=schema
-            )
-            return merges, fv
+        syms_rows = [r["s"].strip(" ").split("  ") for r in head]
+        freqs = [r["freq"] for r in head]
+        merges, changed = _merge_rounds_driver(
+            syms_rows, freqs, n_merges, likelihood
+        )
+        data = {c: [r[c] for r in head] for c in carry}
+        data["s"] = [
+            " " + "  ".join(syms) + " " if ri in changed else r["s"]
+            for ri, (syms, r) in enumerate(zip(syms_rows, head))
+        ]
+        by_name = {f.name: f for f in vocab.schema.fields}
+        schema = StructType([by_name[c] for c in carry] + [by_name["s"]])
+        fv = vocab.sparkSession.createDataFrame(
+            pd.DataFrame(data), schema=schema
+        )
+        return merges, fv
     ws = F.split(F.trim(F.col("s")), "  ")
     pairs = F.when(
         F.size(ws) > 1,
@@ -959,37 +944,20 @@ def unigram_seed_pieces(
             .agg(F.count(F.lit(1)).alias("freq"))
             .withColumn("wlen", F.length("w").cast("int"))
         )
-        # bounded driver fast path (r10, same contract/kill switch as
-        # the unigram trainer): seed counts over the collected word
-        # vocab in Python — identical sums and (n desc, piece) cut —
+        # bounded driver fast path (r10, same contract as the unigram
+        # trainer): seed counts over the collected word vocab in Python
         # instead of the span explode + agg + TakeOrdered chain
-        import os as _os
-
-        if _os.environ.get("SPARK_GRAFT_UNIGRAM_FASTPATH", "1") != "0":
-            w_rows = words.limit(200_001).collect()
-            if len(w_rows) <= 200_000:
-                seed: dict = {}
-                for r in w_rows:
-                    w, f = r["w"], int(r["freq"])
-                    ln = len(w)
-                    for i in range(ln):
-                        for j in range(
-                            i + 1, min(i + max_piece_len, ln) + 1
-                        ):
-                            p = w[i:j]
-                            seed[p] = seed.get(p, 0) + f
-                out = [(p, n) for p, n in seed.items() if len(p) == 1]
-                out += sorted(
-                    (
-                        (p, n)
-                        for p, n in seed.items()
-                        if len(p) > 1 and n >= min_count
-                    ),
-                    key=lambda x: (-x[1], x[0]),
-                )[: seed_cap_factor * vocab_size]
-                return df.sparkSession.createDataFrame(
-                    out, "piece string, n long"
-                ).localCheckpoint(eager=True)
+        w_rows = bounded_collect(words, 200_000)
+        if w_rows is not None:
+            chars, multi = _seed_counts_driver(
+                [(r["w"], int(r["freq"])) for r in w_rows],
+                max_piece_len,
+                min_count,
+                seed_cap_factor * vocab_size,
+            )
+            return df.sparkSession.createDataFrame(
+                chars + multi, "piece string, n long"
+            ).localCheckpoint(eager=True)
         occ = _word_spans(words, max_piece_len)
     seed_counts = occ.groupBy("piece").agg(
         F.sum("freq").cast("long").alias("n")
@@ -1003,6 +971,28 @@ def unigram_seed_pieces(
         .limit(seed_cap_factor * vocab_size)
     )
     return chars.unionByName(multi).localCheckpoint(eager=True)
+
+
+def _seed_counts_driver(wf, max_piece_len, min_count, seed_cap):
+    """The unigram seed vocabulary over a collected (word, freq) list —
+    the driver twin of :func:`unigram_seed_pieces`' distributed agg:
+    every substring of length <= ``max_piece_len`` summed by word
+    frequency, then (chars, multi) where chars keeps every single
+    character and multi the top ``seed_cap`` multi-char pieces with
+    count >= ``min_count`` by (count desc, piece asc)."""
+    seed: dict = {}
+    for w, f in wf:
+        L = len(w)
+        for i in range(L):
+            for j in range(i + 1, min(i + max_piece_len, L) + 1):
+                p = w[i:j]
+                seed[p] = seed.get(p, 0) + f
+    chars = [(p, n) for p, n in seed.items() if len(p) == 1]
+    multi = sorted(
+        ((p, n) for p, n in seed.items() if len(p) > 1 and n >= min_count),
+        key=lambda x: (-x[1], x[0]),
+    )[:seed_cap]
+    return chars, multi
 
 
 def _viterbi_k_driver(w, piece_set, max_piece_len, inf):
@@ -1100,79 +1090,54 @@ def unigram_lm_train(
         .localCheckpoint(eager=True)
     )
     # bounded driver fast path (r10, the merge-loop contract): below
-    # the word-vocab cap (SPARK_GRAFT_UNIGRAM_FASTPATH=0 kill switch)
-    # the seed counts and every hard-EM round run in Python over the
-    # collected vocab — the same integer Viterbi objective
-    # (_viterbi_full_driver), the same (n desc, piece) prune order,
-    # the same floor p_q6 — while the distributed rounds below pay a
-    # span explode + join + HOF DP + checkpoint per round at vocab
-    # size. Distributed path unchanged above the cap, gate-exercised.
+    # the word-vocab cap the seed counts and every hard-EM round run
+    # in Python over the collected vocab — the same integer Viterbi
+    # objective (_viterbi_full_driver), the same (n desc, piece) prune
+    # order, the same floor p_q6 — while the distributed rounds below
+    # pay a span explode + join + HOF DP + checkpoint per round at
+    # vocab size (placement: bounded_collect).
     import math as _math
-    import os as _os
 
-    if (
-        fast_path_max_vocab is not None
-        and _os.environ.get("SPARK_GRAFT_UNIGRAM_FASTPATH", "1") != "0"
-    ):
-        w_rows = words.limit(fast_path_max_vocab + 1).collect()
-        if len(w_rows) <= fast_path_max_vocab:
-            wf = [(r["w"], int(r["freq"])) for r in w_rows]
-            seed: dict = {}
+    w_rows = bounded_collect(words, fast_path_max_vocab)
+    if w_rows is not None:
+        wf = [(r["w"], int(r["freq"])) for r in w_rows]
+        chars, multi = _seed_counts_driver(
+            wf, max_piece_len, min_count, seed_cap_factor * vocab_size
+        )
+        piece_n = dict(chars)
+        piece_n.update(dict(multi))
+        for _ in range(n_rounds):
+            recount: dict = {}
             for w, f in wf:
-                L = len(w)
-                for i in range(L):
-                    for j in range(i + 1, min(i + max_piece_len, L) + 1):
-                        p = w[i:j]
-                        seed[p] = seed.get(p, 0) + f
-            chars = {p: n for p, n in seed.items() if len(p) == 1}
-            multi = sorted(
-                (
-                    (p, n)
-                    for p, n in seed.items()
-                    if len(p) > 1 and n >= min_count
-                ),
+                best = _viterbi_full_driver(w, piece_n, max_piece_len)
+                if best is None:
+                    continue
+                for p in best[2]:
+                    recount[p] = recount.get(p, 0) + f
+            kept = {p: recount.get(p, 0) for p in piece_n if len(p) == 1}
+            for p, n in sorted(
+                ((p, n) for p, n in recount.items() if len(p) > 1),
                 key=lambda x: (-x[1], x[0]),
-            )[: seed_cap_factor * vocab_size]
-            piece_n = dict(chars)
-            piece_n.update(dict(multi))
-            for _ in range(n_rounds):
-                recount: dict = {}
-                for w, f in wf:
-                    best = _viterbi_full_driver(w, piece_n, max_piece_len)
-                    if best is None:
-                        continue
-                    for p in best[2]:
-                        recount[p] = recount.get(p, 0) + f
-                kept = {
-                    p: recount.get(p, 0) for p in piece_n if len(p) == 1
-                }
-                for p, n in sorted(
+            )[:vocab_size]:
+                kept[p] = n
+            piece_n = kept
+        total = sum(piece_n.values())
+        return df.sparkSession.createDataFrame(
+            [
+                (
+                    p,
+                    len(p),
+                    int(n),
                     (
-                        (p, n)
-                        for p, n in recount.items()
-                        if len(p) > 1
+                        _math.floor((n * 1000000) / total) / 1e6
+                        if total > 0
+                        else 0.0
                     ),
-                    key=lambda x: (-x[1], x[0]),
-                )[:vocab_size]:
-                    kept[p] = n
-                piece_n = kept
-            total = sum(piece_n.values())
-            return df.sparkSession.createDataFrame(
-                [
-                    (
-                        p,
-                        len(p),
-                        int(n),
-                        (
-                            _math.floor((n * 1000000) / total) / 1e6
-                            if total > 0
-                            else 0.0
-                        ),
-                    )
-                    for p, n in piece_n.items()
-                ],
-                "piece string, piece_len int, n long, p_q6 double",
-            )
+                )
+                for p, n in piece_n.items()
+            ],
+            "piece string, piece_len int, n long, p_q6 double",
+        )
     occ = _word_spans(words, max_piece_len)
     pieces = unigram_seed_pieces(
         vocab_size=vocab_size,
@@ -1263,29 +1228,24 @@ def unigram_lm_encode(
     # in Python over the collected distinct-word vocab and the piece
     # set (tie fields never change k), and the vocab-sized (w, toks)
     # map joins back broadcast — the distributed span explode + join +
-    # HOF DP below is the above-cap fallback
-    # (SPARK_GRAFT_UNIGRAM_FASTPATH=0 kill switch, gate-exercised).
-    import os as _os
-
+    # HOF DP below is the fallback (placement: bounded_collect).
     per_word = None
-    if _os.environ.get("SPARK_GRAFT_UNIGRAM_FASTPATH", "1") != "0":
-        p_rows = pieces.select("piece").limit(1_000_001).collect()
-        if len(p_rows) <= 1_000_000:
-            w_rows = enc.select("w").limit(500_001).collect()
-            if len(w_rows) <= 500_000:
-                piece_set = {r["piece"] for r in p_rows}
-                mapped = []
-                for r in w_rows:
-                    k = _viterbi_k_driver(
-                        r["w"], piece_set, max_piece_len, inf
-                    )
-                    if k < inf:
-                        mapped.append((r["w"], k))
-                per_word = F.broadcast(
-                    df.sparkSession.createDataFrame(
-                        mapped, "w string, toks int"
-                    )
-                )
+    p_rows = bounded_collect(pieces.select("piece"), 1_000_000)
+    w_rows = (
+        bounded_collect(enc.select("w"), 500_000)
+        if p_rows is not None
+        else None
+    )
+    if w_rows is not None:
+        piece_set = {r["piece"] for r in p_rows}
+        mapped = []
+        for r in w_rows:
+            k = _viterbi_k_driver(r["w"], piece_set, max_piece_len, inf)
+            if k < inf:
+                mapped.append((r["w"], k))
+        per_word = F.broadcast(
+            df.sparkSession.createDataFrame(mapped, "w string, toks int")
+        )
     if per_word is None:
         best = _viterbi_best(
             _word_spans(enc, max_piece_len), pieces, inf

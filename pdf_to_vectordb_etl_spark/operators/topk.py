@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.vector import cosine_similarity
+from ..placement import bounded_collect
 from ..schemas import EMBEDDING_DIM
 
 
@@ -400,37 +401,6 @@ def ivf_drift_report(
     )
 
 
-def topk_cosine_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_planes: int = 8,
-    dim: int | None = None,
-    corpus_vec: str = "vector",
-    corpus_id: str = "id",
-    query_vec: str = "vector",
-    query_id: str = "qid",
-) -> DataFrame:
-    """Approximate top-k: bucket corpus and queries by LSH signature and
-    rank only within matching buckets. Recall < 1.0 by design; the scale
-    path when the corpus no longer fits a full scan per query batch."""
-    from pyspark.sql import Window
-
-    if dim is None:
-        dim = len(queries.select(query_vec).first()[0])
-    planes = random_hyperplanes(dim, n_planes)
-    c = corpus.withColumn("_sig", lsh_signature(corpus_vec, planes))
-    q = queries.select(
-        query_id, F.col(query_vec).alias("_qv")
-    ).withColumn("_sig", lsh_signature("_qv", planes))
-    sim = cosine_similarity(F.col(corpus_vec), F.col("_qv"))
-    scored = c.join(F.broadcast(q), "_sig").select(
-        query_id, F.col(corpus_id), sim.alias("cosine_sim")
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine_sim"), F.col(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def mmr_rerank(
     corpus: DataFrame,
     queries: DataFrame,
@@ -752,37 +722,26 @@ def nn_descent_graph(
     # same tie order; property-pinned), while the Spark loop pays ~1s
     # of physical planning per round regardless of data size. Above
     # the cap, the distributed join path below runs; distributed tests
-    # pass fast_path_max_nodes=None, and SPARK_GRAFT_NN_FASTPATH=0
-    # forces the distributed path from the environment (the per-round
-    # gate exercises it against the unchanged oracle so the fallback
-    # cannot rot behind the fast path).
-    import os as _os
-
-    if (
-        fast_path_max_nodes is not None
-        and _os.environ.get("SPARK_GRAFT_NN_FASTPATH", "1") != "0"
-    ):
-        rows = qv.limit(fast_path_max_nodes + 1).collect()
-        if len(rows) <= fast_path_max_nodes:
-            if len(rows) <= 1:
-                return spark.createDataFrame(
-                    [], "src bigint, dst bigint, dist bigint"
-                )
-            import numpy as np
-            import pandas as pd
-
-            ids = np.array([x["id"] for x in rows], dtype=np.int64)
-            mat = np.array([x["q"] for x in rows], dtype=np.int64)
-            order = np.argsort(ids)
-            s_ids, d_ids, dists = _nn_descent_driver(
-                ids[order], np.ascontiguousarray(mat[order]), k, rounds
-            )
+    # pass fast_path_max_nodes=None (placement: bounded_collect).
+    rows = bounded_collect(qv, fast_path_max_nodes)
+    if rows is not None:
+        if len(rows) <= 1:
             return spark.createDataFrame(
-                pd.DataFrame(
-                    {"src": s_ids, "dst": d_ids, "dist": dists}
-                ),
-                schema="src bigint, dst bigint, dist bigint",
+                [], "src bigint, dst bigint, dist bigint"
             )
+        import numpy as np
+        import pandas as pd
+
+        ids = np.array([x["id"] for x in rows], dtype=np.int64)
+        mat = np.array([x["q"] for x in rows], dtype=np.int64)
+        order = np.argsort(ids)
+        s_ids, d_ids, dists = _nn_descent_driver(
+            ids[order], np.ascontiguousarray(mat[order]), k, rounds
+        )
+        return spark.createDataFrame(
+            pd.DataFrame({"src": s_ids, "dst": d_ids, "dist": dists}),
+            schema="src bigint, dst bigint, dist bigint",
+        )
     r = global_row_number(qv, ["id"], "rid").localCheckpoint(eager=True)
     n_total = r.count()
     if n_total <= 1:
@@ -1011,45 +970,43 @@ def _beam_probe_fast_arrays(
     """Collect-and-run wrapper around :func:`_beam_probe_driver`:
     quantize + limit-probe-collect the corpus/probe panels and the
     k-bounded edge list, run the driver loop, and return the visited
-    (qid, cand, dist) int64 arrays — or ``None`` when the fast path is
-    disabled (``SPARK_GRAFT_NN_FASTPATH=0``) or a cap is exceeded, in
-    which case the caller falls back to its distributed plan. Shared
-    by the beam-probe, incremental-assign and tombstone-search serving
+    (qid, cand, dist) int64 arrays — or ``None`` when
+    :func:`bounded_collect` declines (placement or a cap), in which
+    case the caller falls back to its distributed plan. Shared by the
+    beam-probe, incremental-assign and tombstone-search serving
     operators so each can finish its per-probe top-k on the driver and
     ship only the k-bounded RESULT back into Spark."""
-    import os as _os
-
     from pdf_to_vectordb_etl_spark.operators.valuation import (
         _quantize_micro,
     )
 
-    if (
-        fast_path_max_nodes is None
-        or _os.environ.get("SPARK_GRAFT_NN_FASTPATH", "1") == "0"
-    ):
-        return None
-    import numpy as np
-
-    qv0 = corpus.select(
-        F.col(id_col).alias("cid"), _quantize_micro(vec_col).alias("cq")
+    c_rows = bounded_collect(
+        corpus.select(
+            F.col(id_col).alias("cid"), _quantize_micro(vec_col).alias("cq")
+        ),
+        fast_path_max_nodes,
     )
-    c_rows = qv0.limit(fast_path_max_nodes + 1).collect()
-    if len(c_rows) > fast_path_max_nodes:
+    if c_rows is None:
         return None
-    pv0 = probes.select(
-        F.col(id_col).alias("qid"), _quantize_micro(vec_col).alias("pq")
+    p_rows = bounded_collect(
+        probes.select(
+            F.col(id_col).alias("qid"), _quantize_micro(vec_col).alias("pq")
+        ),
+        fast_path_max_probes,
     )
-    p_rows = pv0.limit(fast_path_max_probes + 1).collect()
-    if len(p_rows) > fast_path_max_probes:
+    if p_rows is None:
         return None
     # limit-probe the edge list too (ADVICE r10): the k-bounded-graph
     # contract caps edges at nodes * k, but a caller passing duplicate
     # edges or a huge k must fall back instead of OOMing the driver.
     # 64 comfortably exceeds every k this engine builds (<= 16).
-    max_edges = fast_path_max_nodes * 64
-    g_rows = graph.select("src", "dst").limit(max_edges + 1).collect()
-    if len(g_rows) > max_edges:
+    g_rows = bounded_collect(
+        graph.select("src", "dst"), fast_path_max_nodes * 64
+    )
+    if g_rows is None:
         return None
+    import numpy as np
+
     c_ids = np.array([r["cid"] for r in c_rows], dtype=np.int64)
     c_mat = np.array([r["cq"] for r in c_rows], dtype=np.int64)
     c_ord = np.argsort(c_ids)
@@ -1134,12 +1091,8 @@ def _beam_probe_bsp(
     pure function — so it only collapses, never chooses).
 
     Returns the visited (qid, cand, dist) DataFrame, or ``None`` when
-    the artifact exceeds the caps or under ``SPARK_GRAFT_NN_BSP=0``
-    (the join cascade then runs and stays gate-exercised)."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_NN_BSP", "1") == "0":
-        return None
+    the artifact exceeds the caps or under
+    ``SPARK_GRAFT_PLACEMENT=cascade`` (the join cascade then runs)."""
     import numpy as np
 
     from pdf_to_vectordb_etl_spark.operators.valuation import (
@@ -1147,19 +1100,19 @@ def _beam_probe_bsp(
     )
 
     spark = corpus.sparkSession
-    c_rows = (
+    c_rows = bounded_collect(
         corpus.select(
             F.col(id_col).alias("cid"), _quantize_micro(vec_col).alias("cq")
-        )
-        .limit(max_nodes + 1)
-        .collect()
+        ),
+        max_nodes,
+        "broadcast",
     )
-    if len(c_rows) > max_nodes:
+    if c_rows is None:
         return None
-    g_pdf = (
-        graph.select("src", "dst").limit(max_edges + 1).toPandas()
+    g_pdf = bounded_collect(
+        graph.select("src", "dst"), max_edges, "broadcast", as_pandas=True
     )
-    if len(g_pdf) > max_edges:
+    if g_pdf is None:
         return None
     c_ids = np.array([r["cid"] for r in c_rows], dtype=np.int64)
     c_mat = np.array([r["cq"] for r in c_rows], dtype=np.int64)
@@ -1238,17 +1191,14 @@ def nn_descent_beam_probe(
     relation is the one graph equi-join per hop.
 
     Below ``fast_path_max_nodes`` corpus rows and
-    ``fast_path_max_probes`` probes (and unless
-    ``SPARK_GRAFT_NN_FASTPATH=0``), the whole loop runs on the driver
+    ``fast_path_max_probes`` probes, the whole loop runs on the driver
     over the collected micro matrices + k-bounded edge list
     (:func:`_beam_probe_driver`) — bit-identical visited set,
-    property-pinned. Above the driver caps (or with the fast path
-    killed), the hop-FUSED distributed path runs when the index
-    artifact fits a broadcast (:func:`_beam_probe_bsp`, r11 — one
-    mapInPandas pass instead of a join cascade per hop); the join
-    cascade below is the final fallback (``SPARK_GRAFT_NN_BSP=0`` or
-    an over-cap artifact) and both distributed paths are exercised at
-    gate time."""
+    property-pinned. Otherwise the hop-FUSED distributed path runs
+    when the index artifact fits a broadcast (:func:`_beam_probe_bsp`,
+    r11 — one mapInPandas pass instead of a join cascade per hop); the
+    join cascade below is the final fallback. ``SPARK_GRAFT_PLACEMENT``
+    (:func:`bounded_collect`) can force either distributed path."""
     from pdf_to_vectordb_etl_spark.operators.valuation import (
         _quantize_micro,
     )
@@ -1568,8 +1518,8 @@ def nn_descent_tombstone_search(
     )
     visited = None
     if res is not None:
-        d_rows = deletions.select(F.col(id_col)).limit(16_001).collect()
-        if len(d_rows) <= 16_000:
+        d_rows = bounded_collect(deletions.select(F.col(id_col)), 16_000)
+        if d_rows is not None:
             import numpy as np
             import pandas as pd
 

@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..placement import bounded_collect
+
 PICO = 10**12
 
 
@@ -191,25 +193,20 @@ def knn_shapley(
     # already materializes via crossJoin; below the caps it runs in
     # numpy/Python ints, bit-identical (Python // == the nonneg
     # DECIMAL subtract-modulo floor-div; sign carried separately
-    # exactly as the expressions do). Distributed path unchanged
-    # below as the above-cap fallback, exercised at gate time via
-    # SPARK_GRAFT_SHAPLEY_FASTPATH=0.
-    import os as _os
-
+    # exactly as the expressions do). Distributed path below as the
+    # fallback (placement: bounded_collect).
     from pyspark.sql.types import IntegralType
 
-    if _os.environ.get("SPARK_GRAFT_SHAPLEY_FASTPATH", "1") != "0" and (
-        isinstance(q.schema["qid"].dataType, IntegralType)
-        and isinstance(tr.schema["tid"].dataType, IntegralType)
+    if isinstance(q.schema["qid"].dataType, IntegralType) and isinstance(
+        tr.schema["tid"].dataType, IntegralType
     ):
-        q_rows = q.limit(4_097).collect()
-        if len(q_rows) <= 4_096:
-            t_rows = tr.limit(200_001).collect()
-            if len(t_rows) <= 200_000:
-                return _knn_shapley_driver(
-                    train.sparkSession, q_rows, t_rows, k, top_n,
-                    q.schema["qid"].dataType, tr.schema["tid"].dataType,
-                )
+        q_rows = bounded_collect(q, 4_096)
+        t_rows = bounded_collect(tr, 200_000) if q_rows is not None else None
+        if t_rows is not None:
+            return _knn_shapley_driver(
+                train.sparkSession, q_rows, t_rows, k, top_n,
+                q.schema["qid"].dataType, tr.schema["tid"].dataType,
+            )
     scored = tr.crossJoin(F.broadcast(q)).select(
         "qid",
         "tid",

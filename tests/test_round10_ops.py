@@ -596,13 +596,11 @@ def test_beam_probe_fast_path_degenerate(spark):
     assert none.count() == 0
 
 
-def test_merge_rounds_fast_path_equals_distributed(spark, sf_dir):
+def test_merge_rounds_fast_path_equals_distributed(spark, sf_dir, monkeypatch):
     """The driver fast path for the greedy merge loop must produce the
     IDENTICAL merge table and final vocab segmentation as the
     distributed argmax/rewrite loop — BPE count argmax and WordPiece
     likelihood argmax both (the nn_descent fast-path contract)."""
-    import os
-
     from pdf_to_vectordb_etl_spark.operators.textanalysis import (
         bpe_bytelevel_pieces,
         bpe_bytelevel_train_merges,
@@ -619,33 +617,28 @@ def test_merge_rounds_fast_path_equals_distributed(spark, sf_dir):
     fast_wp = sorted(
         tuple(r) for r in wordpiece_train_merges(docs, 5).collect()
     )
-    os.environ["SPARK_GRAFT_MERGE_FASTPATH"] = "0"
-    try:
-        dist_m = sorted(
-            tuple(r)
-            for r in bpe_bytelevel_train_merges(docs, 6).collect()
-        )
-        dist_v = sorted(
-            tuple(r) for r in bpe_bytelevel_pieces(docs, 6).collect()
-        )
-        dist_wp = sorted(
-            tuple(r) for r in wordpiece_train_merges(docs, 5).collect()
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_MERGE_FASTPATH"]
+    monkeypatch.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
+    dist_m = sorted(
+        tuple(r)
+        for r in bpe_bytelevel_train_merges(docs, 6).collect()
+    )
+    dist_v = sorted(
+        tuple(r) for r in bpe_bytelevel_pieces(docs, 6).collect()
+    )
+    dist_wp = sorted(
+        tuple(r) for r in wordpiece_train_merges(docs, 5).collect()
+    )
     assert fast_m == dist_m and len(fast_m) == 6
     assert fast_v == dist_v and len(fast_v) > 0
     assert fast_wp == dist_wp and len(fast_wp) == 5
 
 
 def test_incremental_assign_and_tombstone_fast_equals_distributed(
-    spark, sf_dir
+    spark, sf_dir, monkeypatch
 ):
     """The fused driver paths (beam probe + per-probe top-k, and the
     tombstone mask) must match the distributed window/anti-join plans
     row for row."""
-    import os
-
     from pdf_to_vectordb_etl_spark.operators.topk import (
         nn_descent_graph,
         nn_descent_incremental_assign,
@@ -673,34 +666,29 @@ def test_incremental_assign_and_tombstone_fast_equals_distributed(
             g, corpus, probes, deletions, k=6, hops=3, beam=5
         ).collect()
     )
-    os.environ["SPARK_GRAFT_NN_FASTPATH"] = "0"
-    try:
-        g2 = nn_descent_graph(corpus, k=5, rounds=3)
-        dist_a = sorted(
-            tuple(r)
-            for r in nn_descent_incremental_assign(
-                g2, corpus, probes, k=4, hops=3, beam=5
-            ).collect()
-        )
-        dist_t = sorted(
-            tuple(r)
-            for r in nn_descent_tombstone_search(
-                g2, corpus, probes, deletions, k=6, hops=3, beam=5
-            ).collect()
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_NN_FASTPATH"]
+    monkeypatch.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
+    g2 = nn_descent_graph(corpus, k=5, rounds=3)
+    dist_a = sorted(
+        tuple(r)
+        for r in nn_descent_incremental_assign(
+            g2, corpus, probes, k=4, hops=3, beam=5
+        ).collect()
+    )
+    dist_t = sorted(
+        tuple(r)
+        for r in nn_descent_tombstone_search(
+            g2, corpus, probes, deletions, k=6, hops=3, beam=5
+        ).collect()
+    )
     assert fast_a == dist_a and len(fast_a) > 0
     assert fast_t == dist_t and len(fast_t) > 0
     deleted = {r["vec_id"] for r in deletions.collect()}
     assert not deleted & {c for (_, c, _) in fast_t}
 
 
-def test_bradley_terry_fast_path_equals_distributed(spark):
+def test_bradley_terry_fast_path_equals_distributed(spark, monkeypatch):
     """The driver MM loop must reproduce the distributed integer
     trajectory bit for bit (same floor divisions, same clamps)."""
-    import os
-
     from pdf_to_vectordb_etl_spark.operators.supervised import (
         bradley_terry_strengths,
     )
@@ -714,14 +702,11 @@ def test_bradley_terry_fast_path_equals_distributed(spark):
         tuple(r)
         for r in bradley_terry_strengths(cells, n_rounds=6).collect()
     )
-    os.environ["SPARK_GRAFT_BT_FASTPATH"] = "0"
-    try:
-        dist = sorted(
-            tuple(r)
-            for r in bradley_terry_strengths(cells, n_rounds=6).collect()
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_BT_FASTPATH"]
+    monkeypatch.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
+    dist = sorted(
+        tuple(r)
+        for r in bradley_terry_strengths(cells, n_rounds=6).collect()
+    )
     assert fast == dist and len(fast) == 4
 
 
@@ -759,12 +744,10 @@ def test_kmeans_assign_literal_equals_window(spark, sf_dir):
         assert lit_out == win_out and len(lit_out) > 0
 
 
-def test_knn_shapley_fast_path_equals_distributed(spark, sf_dir):
+def test_knn_shapley_fast_path_equals_distributed(spark, sf_dir, monkeypatch):
     """The driver valuation (int64 distances, pico suffix recursion,
     top-n cut) must match the distributed rank-primitive plan row for
     row — both with and without the top-n cut."""
-    import os
-
     from pdf_to_vectordb_etl_spark.operators.valuation import knn_shapley
 
     emb = load(spark, sf_dir, "embeddings").filter(
@@ -779,27 +762,22 @@ def test_knn_shapley_fast_path_equals_distributed(spark, sf_dir):
         tuple(r)
         for r in knn_shapley(train, probes, k=5, top_n=None).collect()
     )
-    os.environ["SPARK_GRAFT_SHAPLEY_FASTPATH"] = "0"
-    try:
-        dist_top = sorted(
-            tuple(r)
-            for r in knn_shapley(train, probes, k=5, top_n=7).collect()
-        )
-        dist_all = sorted(
-            tuple(r)
-            for r in knn_shapley(train, probes, k=5, top_n=None).collect()
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_SHAPLEY_FASTPATH"]
+    monkeypatch.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
+    dist_top = sorted(
+        tuple(r)
+        for r in knn_shapley(train, probes, k=5, top_n=7).collect()
+    )
+    dist_all = sorted(
+        tuple(r)
+        for r in knn_shapley(train, probes, k=5, top_n=None).collect()
+    )
     assert fast_top == dist_top and len(fast_top) > 0
     assert fast_all == dist_all and len(fast_all) > len(fast_top)
 
 
-def test_unigram_fast_paths_equal_distributed(spark, sf_dir):
+def test_unigram_fast_paths_equal_distributed(spark, sf_dir, monkeypatch):
     """Driver-side seed+EM training and the min-piece encode DP must
     match the distributed span-explode/HOF plans row for row."""
-    import os
-
     from pdf_to_vectordb_etl_spark.operators.textanalysis import (
         unigram_lm_encode,
         unigram_lm_train,
@@ -813,17 +791,14 @@ def test_unigram_fast_paths_equal_distributed(spark, sf_dir):
     fast_e = sorted(
         tuple(r) for r in unigram_lm_encode(docs, pieces).collect()
     )
-    os.environ["SPARK_GRAFT_UNIGRAM_FASTPATH"] = "0"
-    try:
-        dist_t = sorted(
-            tuple(r)
-            for r in unigram_lm_train(docs, vocab_size=32).collect()
-        )
-        pieces_d = unigram_lm_train(docs, vocab_size=32)
-        dist_e = sorted(
-            tuple(r) for r in unigram_lm_encode(docs, pieces_d).collect()
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_UNIGRAM_FASTPATH"]
+    monkeypatch.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
+    dist_t = sorted(
+        tuple(r)
+        for r in unigram_lm_train(docs, vocab_size=32).collect()
+    )
+    pieces_d = unigram_lm_train(docs, vocab_size=32)
+    dist_e = sorted(
+        tuple(r) for r in unigram_lm_encode(docs, pieces_d).collect()
+    )
     assert fast_t == dist_t and len(fast_t) > 0
     assert fast_e == dist_e and len(fast_e) > 0

@@ -13,14 +13,12 @@ replaced:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from tests.conftest import load
 
 
-def test_beam_probe_three_way_parity(spark, sf_dir):
+def test_beam_probe_three_way_parity(spark, sf_dir, monkeypatch):
     """driver fast path == hop-fused BSP == join cascade, row for row
     (the visited set is a pure function of (graph, corpus, probes))."""
     from pdf_to_vectordb_etl_spark.operators.topk import (
@@ -48,28 +46,25 @@ def test_beam_probe_three_way_parity(spark, sf_dir):
             g, corpus, probes, hops=4, beam=6, fast_path_max_nodes=None
         ).collect()
     )
-    os.environ["SPARK_GRAFT_NN_BSP"] = "0"
-    try:
-        cascade = sorted(
-            tuple(r)
-            for r in nn_descent_beam_probe(
-                g,
-                corpus,
-                probes,
-                hops=4,
-                beam=6,
-                fast_path_max_nodes=None,
-            ).collect()
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_NN_BSP"]
+    monkeypatch.setenv("SPARK_GRAFT_PLACEMENT", "cascade")
+    cascade = sorted(
+        tuple(r)
+        for r in nn_descent_beam_probe(
+            g,
+            corpus,
+            probes,
+            hops=4,
+            beam=6,
+            fast_path_max_nodes=None,
+        ).collect()
+    )
     assert fast == bsp == cascade and len(fast) > 0
 
 
-def test_bsp_serving_consumers_match_cascade(spark, sf_dir):
+def test_bsp_serving_consumers_match_cascade(spark, sf_dir, monkeypatch):
     """incremental assign and tombstone search through the BSP beam
-    probe (NN_FASTPATH=0) must equal the join-cascade plans
-    (NN_FASTPATH=0 + NN_BSP=0)."""
+    probe (placement ``distributed``) must equal the join-cascade plans
+    (placement ``cascade``)."""
     from pdf_to_vectordb_etl_spark.operators.topk import (
         nn_descent_graph,
         nn_descent_incremental_assign,
@@ -101,16 +96,10 @@ def test_bsp_serving_consumers_match_cascade(spark, sf_dir):
         )
         return a, t
 
-    os.environ["SPARK_GRAFT_NN_FASTPATH"] = "0"
-    try:
-        bsp = run()
-        os.environ["SPARK_GRAFT_NN_BSP"] = "0"
-        try:
-            cascade = run()
-        finally:
-            del os.environ["SPARK_GRAFT_NN_BSP"]
-    finally:
-        del os.environ["SPARK_GRAFT_NN_FASTPATH"]
+    monkeypatch.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
+    bsp = run()
+    monkeypatch.setenv("SPARK_GRAFT_PLACEMENT", "cascade")
+    cascade = run()
     assert bsp == cascade and len(bsp[0]) > 0 and len(bsp[1]) > 0
 
 
@@ -209,6 +198,22 @@ def test_mid_numbering_matches_window(spark):
     }
     gotd = {r["k"]: r["rk"] for r in ranked.dropDuplicates(["k"]).collect()}
     assert gotd == exp
+
+
+def test_partition_offsets_raise_on_counter_wrap():
+    """A partition whose 33-bit numbering counter disagrees with its
+    row count (a wrap past 2^33 rows) must raise, never number
+    silently wrong; consistent rows give exclusive cumulative offsets."""
+    import pytest
+    from pyspark.sql import Row
+
+    from pdf_to_vectordb_etl_spark.operators import suffixes
+
+    ok = [Row(_pid=0, _n=3, _max=3), Row(_pid=1, _n=2, _max=2)]
+    assert suffixes._partition_offsets(ok) == ({0: 0, 1: 3}, 5)
+    wrapped = [Row(_pid=0, _n=3, _max=3), Row(_pid=1, _n=2**33 + 1, _max=1)]
+    with pytest.raises(RuntimeError, match="partition 1"):
+        suffixes._partition_offsets(wrapped)
 
 
 def test_rank_primitive_range_exchange_is_size_aware(spark):

@@ -1,22 +1,24 @@
 #!/usr/bin/env python
-"""Time the DISTRIBUTED (above-cap / FASTPATH=0) branches of the five
-driver-fast-pathed families at sf0.1 — the branches the 100 TB run
-actually takes. The headline bench times the driver fast paths, so a
-plan regression in a distributed fallback would otherwise be invisible
-in every committed number (VERDICT r10, "what's wrong" #2).
+"""Time the DISTRIBUTED (above-cap) branches of the driver-fast-pathed
+families at sf0.1 — the branches the 100 TB run actually takes. The
+headline bench times the driver fast paths, so a plan regression in a
+distributed fallback would otherwise be invisible in every committed
+number.
 
 Methodology mirrors bench.py (best-of-3 per query, median also kept,
-same noise verdict) with the relevant SPARK_GRAFT_*_FASTPATH kill
-switches exported BEFORE the queries run. Two modes for the
-NN-descent family:
+same noise verdict) with ``SPARK_GRAFT_PLACEMENT`` exported before the
+queries run (see ``pdf_to_vectordb_etl_spark/placement.py``). One run
+per mode:
 
-- ``fastpath0``      — SPARK_GRAFT_{NN,MERGE,BT,SHAPLEY,UNIGRAM}_FASTPATH=0
-                       (the distributed plans, incl. the hop-fused BSP
-                       beam probe when present);
-- ``fastpath0_bsp0`` — additionally SPARK_GRAFT_NN_BSP=0: the per-hop
-                       join-cascade beam probe (pre-r11 distributed
-                       shape), kept measurable so the two distributed
-                       formulations stay comparable round over round.
+- ``distributed`` — no driver-level collect: the distributed plans,
+                    incl. the hop-fused BSP beam probe;
+- ``cascade``     — also no broadcast-level collect: the per-hop
+                    join-cascade beam probe, kept measurable so the two
+                    distributed formulations stay comparable.
+
+A worker that exits non-zero or prints no record with a ``total``
+fails the whole run (non-zero exit, stderr tail shown) — a crashed
+worker must never read as an empty record.
 
 Writes one JSON line per mode to stdout and the combined record to
 ``BENCH_DISTRIBUTED_<tag>.json`` in the repo root.
@@ -35,8 +37,8 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# the bench keys whose timed plan changes when the kill switches are
-# off: the five fast-pathed families' heaviest declared queries
+# the bench keys whose timed plan changes under a non-auto placement:
+# the five fast-pathed families' heaviest declared queries
 KEYS = [
     "ann_nndescent_recall",
     "ann_incremental_assign",
@@ -91,9 +93,9 @@ print(json.dumps({
 """
 
 
-def run_mode(mode: str, extra_env: dict[str, str]) -> dict:
+def run_mode(mode: str) -> dict:
     env = dict(os.environ)
-    env.update(extra_env)
+    env["SPARK_GRAFT_PLACEMENT"] = mode
     env["SPARK_GRAFT_REPO"] = REPO
     env["SPARK_GRAFT_DIST_KEYS"] = json.dumps(KEYS)
     out = subprocess.run(
@@ -101,29 +103,22 @@ def run_mode(mode: str, extra_env: dict[str, str]) -> dict:
         capture_output=True, text=True,
     )
     sys.stderr.write(out.stderr[-2000:])
-    line = out.stdout.strip().splitlines()[-1] if out.stdout.strip() else "{}"
-    rec = json.loads(line)
+    lines = out.stdout.strip().splitlines()
+    rec = json.loads(lines[-1]) if out.returncode == 0 and lines else {}
+    if "total" not in rec:
+        sys.exit(
+            f"bench_distributed: mode {mode} worker exited "
+            f"{out.returncode} without a record (stderr tail above)"
+        )
     rec["mode"] = mode
-    rec["env"] = extra_env
     return rec
 
 
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "adhoc"
-    off = {
-        "SPARK_GRAFT_NN_FASTPATH": "0",
-        "SPARK_GRAFT_MERGE_FASTPATH": "0",
-        "SPARK_GRAFT_BT_FASTPATH": "0",
-        "SPARK_GRAFT_SHAPLEY_FASTPATH": "0",
-        "SPARK_GRAFT_UNIGRAM_FASTPATH": "0",
-    }
-    modes = [
-        ("fastpath0", dict(off)),
-        ("fastpath0_bsp0", dict(off, SPARK_GRAFT_NN_BSP="0")),
-    ]
     records = []
-    for mode, env in modes:
-        rec = run_mode(mode, env)
+    for mode in ("distributed", "cascade"):
+        rec = run_mode(mode)
         records.append(rec)
         print(json.dumps(rec))
     path = os.path.join(REPO, f"BENCH_DISTRIBUTED_{tag}.json")

@@ -46,39 +46,26 @@ if [[ "${1:-full}" != "quick" ]]; then
   python tools/make_random_fixture.py
   python tools/check_oracle.py --sf /tmp/spark_graft_randfix
 
-  echo "== distributed NN-descent path (driver fast path disabled) =="
-  # the ≤16k-node driver fast path serves every fixture, so without
-  # this the distributed local-join loop would never run at gate time
-  # and could rot; same oracle hash must hold on both paths.
-  # SPARK_GRAFT_NN_FASTPATH=0 disables BOTH the build and the r10
-  # beam-probe fast paths, so this one sweep exercises the full
-  # distributed serving plan too.
-  # FASTPATH=0 exercises the hop-FUSED distributed beam probe (BSP,
-  # r11); adding NN_BSP=0 exercises the per-hop join cascade — the
-  # final fallback when the index artifact exceeds the broadcast caps.
-  SPARK_GRAFT_NN_FASTPATH=0 python tools/check_oracle.py \
-    --sf /root/testdata/sf0.001 ann_nndescent_recall
-  SPARK_GRAFT_NN_FASTPATH=0 SPARK_GRAFT_NN_BSP=0 python tools/check_oracle.py \
+  echo "== distributed fallbacks (SPARK_GRAFT_PLACEMENT=distributed) =="
+  # every driver fast path goes through placement.bounded_collect, and
+  # the fixtures all fit under its caps — so without these sweeps no
+  # distributed fallback would run at gate time and one could rot
+  # behind its fast path. Same oracle hash must hold on every path.
+  # `distributed` turns off every driver-level collect (NN-descent
+  # build + beam probe, merge loop, Bradley-Terry, K-NN Shapley,
+  # unigram seed/EM/encode, near-dup components); the beam probe then
+  # takes its hop-fused broadcast path (BSP).
+  SPARK_GRAFT_PLACEMENT=distributed python tools/check_oracle.py \
+    --sf /root/testdata/sf0.001 ann_nndescent_recall ann_tombstone_search \
+    bpe_bytelevel_train wordpiece_train bradley_terry knn_shapley \
+    unigram_lm_train unigram_lm_encode dedup_clusters dedup_drop
+
+  echo "== per-hop join-cascade beam probe (SPARK_GRAFT_PLACEMENT=cascade) =="
+  # `cascade` also turns off the broadcast-level collect, so the beam
+  # probe runs the per-hop join cascade — the final fallback when the
+  # index artifact exceeds the broadcast caps.
+  SPARK_GRAFT_PLACEMENT=cascade python tools/check_oracle.py \
     --sf /root/testdata/sf0.001 ann_nndescent_recall ann_tombstone_search
-
-  echo "== distributed merge-loop path (driver fast path disabled) =="
-  # same contract for the r10 tokenizer-training fast path: the
-  # distributed argmax/rewrite loop must keep producing the identical
-  # merge table (count argmax AND likelihood argmax)
-  SPARK_GRAFT_MERGE_FASTPATH=0 python tools/check_oracle.py \
-    --sf /root/testdata/sf0.001 bpe_bytelevel_train wordpiece_train
-
-  echo "== distributed Bradley-Terry MM path (driver fast path disabled) =="
-  SPARK_GRAFT_BT_FASTPATH=0 python tools/check_oracle.py \
-    --sf /root/testdata/sf0.001 bradley_terry
-
-  echo "== distributed K-NN Shapley path (driver fast path disabled) =="
-  SPARK_GRAFT_SHAPLEY_FASTPATH=0 python tools/check_oracle.py \
-    --sf /root/testdata/sf0.001 knn_shapley
-
-  echo "== distributed unigram-LM paths (driver fast path disabled) =="
-  SPARK_GRAFT_UNIGRAM_FASTPATH=0 python tools/check_oracle.py \
-    --sf /root/testdata/sf0.001 unigram_lm_train unigram_lm_encode
 
   echo "== global-window audit =="
   python tools/audit_global_windows.py
