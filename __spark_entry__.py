@@ -1262,28 +1262,14 @@ def q_t3_stream_agg(spark, sf):
     """T3 — Structured Streaming parity: availableNow micro-batches over
     the events table must reproduce the batch aggregate exactly (the
     reference's incremental per-file ETL semantics, SURVEY §2.11)."""
-    import tempfile
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    # stream sources are directories: watch the sf dir, glob one table
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "events")
     counts = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-    name = "t3_stream_agg_result"
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t3ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).orderBy("event_type")
+    return drain_to_memory(counts, "t3_stream_agg_result").orderBy("event_type")
 
 
 def q_skew_two_phase_count(spark, sf):
@@ -1298,29 +1284,16 @@ def q_t4_stateful_totals(spark, sf):
     """T4 — custom stateful streaming (applyInPandasWithState): per-user
     running totals across availableNow micro-batches; the final state
     must equal the batch aggregate."""
-    import tempfile
-
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
     from pdf_to_vectordb_etl_spark.streaming.stateful import running_totals
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
+    stream = table_stream(spark, sf, "events")
+    res = drain_to_memory(
+        running_totals(stream), "t4_stateful_totals_result", mode="update"
     )
-    name = "t4_stateful_totals_result"
-    q = (
-        running_totals(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t4ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    res = spark.table(name)
     return res.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"), F.max("total_value").alias("total_value")
     )
@@ -1496,31 +1469,16 @@ def q_t5_stream_join(spark, sf):
     purchase within 1 h after a same-user view, joined across
     availableNow micro-batches with watermark-bounded state; summarized
     per user so the result is compact and order-free."""
-    import tempfile
-
-    from pdf_to_vectordb_etl_spark.streaming.pipeline import stream_interval_join
-
-    # raw file schema (NOT _t's normalized one): the stream reads the
-    # parquet directly; stream_interval_join normalizes ts itself
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        stream_interval_join,
+        table_stream,
     )
+
+    stream = table_stream(spark, sf, "events")
     pairs = stream_interval_join(stream, within="1 hour", watermark="100 days")
-    name = "t5_stream_join_result"
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t5ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
     return (
-        spark.table(name)
+        drain_to_memory(pairs, "t5_stream_join_result", mode="append")
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_pairs"),
@@ -1536,29 +1494,15 @@ def q_t7_stream_sessionize(spark, sf):
     mode; see stream_sessionize docstring for the append+watermark
     24/7 shape). Oracle = the batch islands SQL — stream and batch
     must agree row-for-row."""
-    import tempfile
-
-    from pdf_to_vectordb_etl_spark.streaming.pipeline import stream_sessionize
-
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        stream_sessionize,
+        table_stream,
     )
+
+    stream = table_stream(spark, sf, "events")
     sessions = stream_sessionize(stream, gap="30 minutes")
-    name = "t7_stream_sessionize_result"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t7ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).select(
+    return drain_to_memory(sessions, "t7_stream_sessionize_result").select(
         "user_id", "session_start_us", "n_events", "span_us"
     )
 
@@ -1746,15 +1690,13 @@ def q_t6_stream_enrich(spark, sf):
     per micro-batch against the static customer dim (no watermark, no
     join state — the static side is just a broadcast hash table),
     aggregated per market segment."""
-    import tempfile
-
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    cust = _t(spark, sf, "customer").select("c_custkey", "c_mktsegment")
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
     )
+
+    cust = _t(spark, sf, "customer").select("c_custkey", "c_mktsegment")
+    stream = table_stream(spark, sf, "events")
     enriched = stream.join(
         F.broadcast(cust), stream["user_id"] == cust["c_custkey"], "inner"
     )
@@ -1762,17 +1704,7 @@ def q_t6_stream_enrich(spark, sf):
         F.count("*").alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
-    name = "t6_stream_enrich_result"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t6ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return drain_to_memory(agg, "t6_stream_enrich_result")
 
 
 def q_snapshot_diff(spark, sf):
@@ -1956,11 +1888,11 @@ def q_t28_stream_contamination(spark, sf):
     ingest stream per-row; the only stream state is one associative
     count per benchmark item (≤ |benchmark| rows). Snapshot == the
     batch contamination_bench_telemetry, whose SQL is the oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import curation
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
         stream_contamination_totals,
+        table_stream,
     )
 
     batch_docs = spark.read.parquet(f"{sf}/documents.parquet")
@@ -1969,25 +1901,12 @@ def q_t28_stream_contamination(spark, sf):
         batch_docs.filter(is_bench), n=8
     ).localCheckpoint(eager=True)
     stream = (
-        spark.readStream.schema(batch_docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
+        table_stream(spark, sf, "documents")
         .filter(~is_bench)
         .select("doc_id", "text")
     )
     live = stream_contamination_totals(stream, bench_sh, n=8)
-    name = "t28_contamination"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t28ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).orderBy("bench_id")
+    return drain_to_memory(live, "t28_contamination").orderBy("bench_id")
 
 
 def q_curation_pack_sequences(spark, sf):
@@ -2996,31 +2915,15 @@ def q_t17_stream_gram_hist(spark, sf):
     models (curation.hashed_gram_array/gram_bucket), so over identical
     rows the snapshot equals the batch histogram and the batch SQL is
     the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
         stream_gram_histogram,
+        table_stream,
     )
 
-    raw_schema = spark.read.parquet(f"{sf}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "documents")
     live = stream_gram_histogram(stream, n_buckets=512)
-    name = "t17_gram_hist"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t17ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).select("b", "c")
+    return drain_to_memory(live, "t17_gram_hist").select("b", "c")
 
 
 def q_t19_stream_minhash_screen(spark, sf):
@@ -3035,11 +2938,11 @@ def q_t19_stream_minhash_screen(spark, sf):
     streaming agg. Snapshot hash-matches the batch incremental screen,
     so the oracle is the same DuckDB exact new×corpus-rep Jaccard set
     as dedup_incremental_minhash."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
         minhash_band_table,
         stream_minhash_screen,
+        table_stream,
     )
 
     docs = _t(spark, sf, "documents")
@@ -3047,27 +2950,13 @@ def q_t19_stream_minhash_screen(spark, sf):
     bands = minhash_band_table(
         dedup.exact_set_representatives(docs.filter(h < "8"))
     )
-    raw_schema = spark.read.parquet(f"{sf}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "documents")
     live = stream_minhash_screen(
         stream.filter(h >= "8"), bands, threshold=0.5
     )
-    name = "t19_minhash_screen"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t19ckpt"))
-        .start()
+    return drain_to_memory(live, "t19_minhash_screen").select(
+        "new_id", "corpus_id", "jaccard"
     )
-    q.awaitTermination(300)
-    return spark.table(name).select("new_id", "corpus_id", "jaccard")
 
 
 def q_t30_stream_bloom_dedup(spark, sf):
@@ -3084,27 +2973,20 @@ def q_t30_stream_bloom_dedup(spark, sf):
     import tempfile
 
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        await_stream,
         stream_bloom_dedup_ingest,
+        table_stream,
     )
 
     docs = _t(spark, sf, "documents")
     h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
     corpus = dedup.content_digests(docs.filter(h < "8"))
-    raw_schema = spark.read.parquet(f"{sf}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "documents")
     out = tempfile.mkdtemp(prefix="t30out")
-    q = stream_bloom_dedup_ingest(
-        stream.filter(h >= "8"),
-        corpus,
-        out,
-        tempfile.mkdtemp(prefix="t30ckpt"),
-    )
-    q.awaitTermination(300)
+    with tempfile.TemporaryDirectory(prefix="t30ckpt") as ckpt:
+        await_stream(
+            stream_bloom_dedup_ingest(stream.filter(h >= "8"), corpus, out, ckpt)
+        )
     return spark.read.parquet(f"{out}/data").select(
         "doc_id", "lang", "source"
     )
@@ -3118,10 +3000,10 @@ def q_t20_stream_ivf_drift(spark, sf):
     baseline occupancy feeds the SAME drift-report finale as the
     batch ivf_incremental_assign — whose oracle therefore verifies
     this path too."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
         stream_ivf_occupancy,
+        table_stream,
     )
 
     emb = _t(spark, sf, "embeddings")
@@ -3142,27 +3024,12 @@ def q_t20_stream_ivf_drift(spark, sf):
     base = topk.ivf_occupancy(
         emb.filter(F.col("vec_id") % 4 != 0), cent, "embedding", "vec_id"
     )
-    raw_schema = spark.read.parquet(f"{sf}/embeddings.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "embeddings")
     live = stream_ivf_occupancy(
         stream.filter(F.col("vec_id") % 4 == 0), cent_rows, "embedding"
     )
-    name = "t20_ivf_occ"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t20ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return topk.ivf_drift_report(spark.table(name), base).orderBy("list_id")
+    snap = drain_to_memory(live, "t20_ivf_occ")
+    return topk.ivf_drift_report(snap, base).orderBy("list_id")
 
 
 def q_adaboost_stumps(spark, sf):
@@ -3448,31 +3315,16 @@ def q_t29_stream_gopher_gate(spark, sf):
     rule projection over the document ingest stream, folded into one
     associative (n_docs, n_pass, fail-bit OR) row per source.
     Snapshot == the batch gopher_by_source, whose SQL is the oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
         stream_quality_gate_totals,
+        table_stream,
     )
 
     batch_docs = spark.read.parquet(f"{sf}/documents.parquet")
-    stream = (
-        spark.readStream.schema(batch_docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "documents")
     live = stream_quality_gate_totals(stream, "source")
-    name = "t29_gopher_gate"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t29ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).orderBy("source")
+    return drain_to_memory(live, "t29_gopher_gate").orderBy("source")
 
 
 def q_ks_two_sample(spark, sf):
@@ -3656,18 +3508,16 @@ def q_t26_stream_jackknife(spark, sf):
     partial sums as an associative streaming agg (state ≤ 32 rows),
     snapshot into the IDENTICAL jackknife_finale as the batch path;
     the batch SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import evaluation
     from pdf_to_vectordb_etl_spark.schemas import normalize_event_times
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = normalize_event_times(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    ).filter(F.col("user_id").isNotNull() & F.col("value").isNotNull())
+    stream = normalize_event_times(table_stream(spark, sf, "events")).filter(
+        F.col("user_id").isNotNull() & F.col("value").isNotNull()
+    )
     live = evaluation.jackknife_bucket_sums(
         stream,
         F.pmod(F.col("user_id"), F.lit(32)),
@@ -3679,17 +3529,7 @@ def q_t26_stream_jackknife(spark, sf):
         ),
         n_buckets=32,
     )
-    name = "t26_jackknife"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t26ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return evaluation.jackknife_finale(spark.table(name))
+    return evaluation.jackknife_finale(drain_to_memory(live, "t26_jackknife"))
 
 
 def q_t27_stream_kendall(spark, sf):
@@ -3697,19 +3537,15 @@ def q_t27_stream_kendall(spark, sf):
     contingency cells as an associative streaming agg (state ≤ 240
     rows), snapshot into the IDENTICAL kendall_finale as the batch
     path; the batch SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import evaluation
     from pdf_to_vectordb_etl_spark.schemas import normalize_event_times
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
     stream = (
-        normalize_event_times(
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf)
-        )
+        normalize_event_times(table_stream(spark, sf, "events"))
         .filter(F.col("value").isNotNull() & F.col("ts").isNotNull())
         .select(
             F.least(
@@ -3722,17 +3558,7 @@ def q_t27_stream_kendall(spark, sf):
         )
     )
     live = evaluation.kendall_cells(stream, "vbin", "hour")
-    name = "t27_kendall"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t27ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return evaluation.kendall_finale(spark.table(name))
+    return evaluation.kendall_finale(drain_to_memory(live, "t27_kendall"))
 
 
 def q_max_cover_select(spark, sf):
@@ -3763,10 +3589,12 @@ def q_t25_stream_cuped(spark, sf):
     snapshot into the IDENTICAL cuped_finale as the batch path. The
     split timestamp comes from one bounded batch pre-scan (the T22
     static-side precedent); the batch SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import evaluation
     from pdf_to_vectordb_etl_spark.schemas import normalize_event_times
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
     batch = _t(spark, sf, "events").filter(
         F.col("user_id").isNotNull()
@@ -3779,27 +3607,11 @@ def q_t25_stream_cuped(spark, sf):
         F.substring(F.md5(F.col("user_id").cast("string")), 1, 1) < "8",
         F.lit("A"),
     ).otherwise(F.lit("B"))
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = normalize_event_times(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
+    stream = normalize_event_times(table_stream(spark, sf, "events"))
     live = evaluation.cuped_user_totals(
         stream, "user_id", "ts", "value", split_ts=split, arm_expr=arm
     )
-    name = "t25_cuped"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t25ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return evaluation.cuped_finale(spark.table(name))
+    return evaluation.cuped_finale(drain_to_memory(live, "t25_cuped"))
 
 
 def q_attribution_touch(spark, sf):
@@ -3833,29 +3645,15 @@ def q_t24_stream_benford(spark, sf):
     maintained as an associative streaming agg, snapshot into the
     IDENTICAL benford_finale as the batch path (the T-twin shared-
     finale contract), so the batch SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import profiling
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/orders.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "orders")
     live = profiling.benford_digit_counts(stream, "o_totalprice", 100)
-    name = "t24_benford"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t24ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return profiling.benford_finale(spark.table(name))
+    return profiling.benford_finale(drain_to_memory(live, "t24_benford"))
 
 
 def q_t23_stream_skyline(spark, sf):
@@ -3865,17 +3663,13 @@ def q_t23_stream_skyline(spark, sf):
     1e-6-grid value sum are both merge-able), then the snapshot feeds
     the IDENTICAL skyline_2d finale as the batch path, so the batch
     skyline SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import spatial
-
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
     )
+
+    stream = table_stream(spark, sf, "events")
     live = (
         stream.filter(
             F.col("value").isNotNull() & F.col("user_id").isNotNull()
@@ -3888,19 +3682,11 @@ def q_t23_stream_skyline(spark, sf):
             .alias("value_units"),
         )
     )
-    name = "t23_skyline"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t23ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
     return (
         spatial.skyline_2d(
-            spark.table(name), -F.col("n_events"), -F.col("value_units")
+            drain_to_memory(live, "t23_skyline"),
+            -F.col("n_events"),
+            -F.col("value_units"),
         )
         .select("user_id", "n_events", "value_units")
         .orderBy("user_id")
@@ -4082,30 +3868,19 @@ def q_t21_stream_ddsketch(spark, sf):
     maintained as an associative streaming sum (state ≤ log-γ-range
     rows per event type); the snapshot feeds the identical quantile
     finale as the batch path, so the batch SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import sketch
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "events")
     live = sketch.ddsketch_buckets(stream, "value", by="event_type", alpha=0.01)
-    name = "t21_ddsketch"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t21ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
     return sketch.ddsketch_quantiles(
-        spark.table(name), qs=(0.5, 0.9, 0.99), by="event_type", alpha=0.01
+        drain_to_memory(live, "t21_ddsketch"),
+        qs=(0.5, 0.9, 0.99),
+        by="event_type",
+        alpha=0.01,
     )
 
 
@@ -4117,11 +3892,11 @@ def q_t22_stream_blocklist(spark, sf):
     stream state is the per-pattern associative sum, ≤ blocklist-size
     rows. Snapshot == the batch counts aggregated per pattern, so the
     aggregated batch SQL is the oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import textsearch
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
         stream_blocklist_totals,
+        table_stream,
     )
 
     ascii_lower = F.lower(F.regexp_replace("text", r"[^\x20-\x7e]", ""))
@@ -4143,26 +3918,12 @@ def q_t22_stream_blocklist(spark, sf):
         # degenerate corpus (no >=6-char words): the batch matcher
         # returns empty for an empty blocklist; so does the screen
         return spark.createDataFrame([], "pattern string, n_hits long")
-    raw_schema = batch_docs.schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
+        table_stream(spark, sf, "documents")
         .select("doc_id", ascii_lower.alias("text"))
     )
     live = stream_blocklist_totals(stream, pats)
-    name = "t22_blocklist"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t22ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).orderBy("pattern")
+    return drain_to_memory(live, "t22_blocklist").orderBy("pattern")
 
 
 def q_bpe_train(spark, sf):
@@ -5163,28 +4924,15 @@ def q_t8_stream_anomaly(spark, sf):
     window as bounded applyInPandasWithState state, availableNow
     micro-batches. Oracle = the batch window SQL (anomaly_zscore) —
     stream and batch must flag the identical row set."""
-    import tempfile
-
-    from pdf_to_vectordb_etl_spark.streaming.pipeline import stream_anomaly
-
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        stream_anomaly,
+        table_stream,
     )
+
+    stream = table_stream(spark, sf, "events")
     flags = stream_anomaly(stream, lookback=20, threshold=2.5)
-    name = "t8_stream_anomaly_result"
-    q = (
-        flags.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t8ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return drain_to_memory(flags, "t8_stream_anomaly_result", mode="append")
 
 
 def q_returned_revenue(spark, sf):
@@ -5798,30 +5546,17 @@ def q_t9_stream_hll(spark, sf):
     harmonic-mean estimate over the ≤ sources×256-row snapshot. Over
     identical rows the snapshot equals the batch register file, so the
     batch HLL SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import sketch
-    from pdf_to_vectordb_etl_spark.streaming.pipeline import stream_hll_registers
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        stream_hll_registers,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "documents")
     regs = stream_hll_registers(stream)
-    name = "t9_stream_hll_regs"
-    q = (
-        regs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t9ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return sketch.hll_estimate_from_registers(spark.table(name), by="source")
+    snap = drain_to_memory(regs, "t9_stream_hll_regs")
+    return sketch.hll_estimate_from_registers(snap, by="source")
 
 
 def q_ewma_smooth(spark, sf):
@@ -6455,17 +6190,13 @@ def q_t10_stream_cdc(spark, sf):
 
     from pdf_to_vectordb_etl_spark.operators.cdc import live_rows
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        await_stream,
         read_snapshot,
         stream_apply_changes,
+        table_stream,
     )
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "events")
     ch = stream.filter(F.col("event_id") % 2 == 1).select(
         "user_id",
         "event_type",
@@ -6476,10 +6207,8 @@ def q_t10_stream_cdc(spark, sf):
         F.col("event_id").alias("ord"),
     )
     snap = tempfile.mkdtemp(prefix="t10snap")
-    q = stream_apply_changes(
-        ch, snap, tempfile.mkdtemp(prefix="t10ckpt"), ["user_id"], "ord"
-    )
-    q.awaitTermination(300)
+    with tempfile.TemporaryDirectory(prefix="t10ckpt") as ckpt:
+        await_stream(stream_apply_changes(ch, snap, ckpt, ["user_id"], "ord"))
     return live_rows(read_snapshot(spark, snap)).select(
         "user_id", "event_type", F.round("value", 4).alias("value")
     )
@@ -6805,32 +6534,16 @@ def q_t11_stream_cms(spark, sf):
     point estimates for the exact top-15 tokens over the snapshot.
     Over identical rows the snapshot equals the batch sketch, so the
     batch CMS SQL (cms_heavy_hitters) is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import sketch
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
         stream_countmin_registers,
+        table_stream,
     )
 
-    raw_schema = spark.read.parquet(f"{sf}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "documents")
     regs = stream_countmin_registers(stream)
-    name = "t11_stream_cms_regs"
-    q = (
-        regs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t11ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    cms = spark.table(name)
+    cms = drain_to_memory(regs, "t11_stream_cms_regs")
     docs = _t(spark, sf, "documents")
     toks = docs.select(
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
@@ -6980,29 +6693,15 @@ def q_t12_stream_kmv(spark, sf):
     commutative, so ANY micro-batch split converges to the batch
     sketch — the batch KMV SQL is the parity oracle. The final row per
     key is the max-n_tags row (n_tags is non-decreasing)."""
-    import tempfile
-
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
     from pdf_to_vectordb_etl_spark.streaming.stateful import stream_kmv_bottomk
 
-    raw_schema = spark.read.parquet(f"{sf}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "documents")
     est = stream_kmv_bottomk(stream, k=128)
-    name = "t12_stream_kmv_out"
-    q = (
-        est.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t12ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    snap = spark.table(name)
+    snap = drain_to_memory(est, "t12_stream_kmv_out", mode="update")
     return (
         snap.groupBy("key")
         .agg(
@@ -7237,6 +6936,8 @@ def q_t13_stream_cusum(spark, sf):
     fold ⇒ the batch CUSUM SQL is the parity oracle."""
     import tempfile
 
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import drain_to_memory
+
     ev = _t(spark, sf, "events")
     daily = ev.groupBy(
         "event_type",
@@ -7265,17 +6966,7 @@ def q_t13_stream_cusum(spark, sf):
         slack=0.5,
         threshold=3.0,
     )
-    name = "t13_stream_cusum_out"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t13ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).select(
+    return drain_to_memory(out, "t13_stream_cusum_out", mode="append").select(
         F.col("key").alias("event_type"),
         F.col("t").alias("day"),
         "v",
@@ -7770,30 +7461,16 @@ def q_t14_stream_auc(spark, sf):
     bounded at 1000 rows), then the rank-sum finale over the snapshot.
     Over identical rows the snapshot equals the batch histogram, so
     the batch AUC SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import evaluation as ev
-    from pdf_to_vectordb_etl_spark.streaming.pipeline import stream_score_bins
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        stream_score_bins,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "events")
     bins = stream_score_bins(stream, "value")
-    name = "t14_stream_auc_bins"
-    q = (
-        bins.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t14ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return ev.auc_from_bins(spark.table(name))
+    return ev.auc_from_bins(drain_to_memory(bins, "t14_stream_auc_bins"))
 
 
 def q_theilsen_trend(spark, sf):
@@ -7938,32 +7615,16 @@ def q_t15_stream_survival(spark, sf):
     finale over the snapshot.  Over identical rows the snapshot equals
     the batch per-user table, so the batch KM SQL is the parity
     oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import evaluation as ev
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
         stream_user_lifetimes,
+        table_stream,
     )
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "events")
     lifetimes = stream_user_lifetimes(stream)
-    name = "t15_stream_survival_state"
-    q = (
-        lifetimes.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t15ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    per_user = spark.table(name).select(
+    per_user = drain_to_memory(lifetimes, "t15_stream_survival_state").select(
         F.expr("(last_tus - first_tus) div 86400000000").alias("duration"),
         (F.col("last_type") == "error").alias("observed"),
     )
@@ -8064,10 +7725,12 @@ def q_t16_stream_psi(spark, sf):
     batch-side and enter the stream as literals, so over identical
     rows the snapshot equals the batch 'cur' half and the batch PSI
     SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators.profiling import psi_from_counts
-    from pdf_to_vectordb_etl_spark.streaming.pipeline import stream_psi_counts
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        stream_psi_counts,
+        table_stream,
+    )
 
     ev = _t(spark, sf, "events").select(
         "event_type", F.expr("ts div 1000").alias("tus"), "value"
@@ -8099,27 +7762,13 @@ def q_t16_stream_psi(spark, sf):
         .withColumn("half", F.lit("ref"))
     )
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "events")
     live = stream_psi_counts(
         stream, t_mid, float(b.v_lo), float(b.v_hi), "event_type", "value", 10
     )
-    name = "t16_stream_psi_counts"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t16ckpt"))
-        .start()
+    cur_counts = drain_to_memory(live, "t16_stream_psi_counts").withColumn(
+        "half", F.lit("cur")
     )
-    q.awaitTermination(300)
-    cur_counts = spark.table(name).withColumn("half", F.lit("cur"))
     counts = ref_counts.unionByName(cur_counts.select(
         "event_type", "bin", "c", "half"
     ))
@@ -8379,33 +8028,17 @@ def q_t18_stream_woe(spark, sf):
     purchase counts (24-row bounded state, associative sum) snapshot
     through the SAME woe_from_counts finale as batch eval_woe_iv, so
     the batch WoE SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import evaluation as ev
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
         stream_woe_counts,
+        table_stream,
     )
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "events")
     live = stream_woe_counts(stream)
-    name = "t18_woe_counts"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t18ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
     return ev.woe_from_counts(
-        spark.table(name).select("bucket", "n", "n_pos")
+        drain_to_memory(live, "t18_woe_counts").select("bucket", "n", "n_pos")
     )
 
 
@@ -8440,34 +8073,21 @@ def q_t34_stream_lang_mix(spark, sf):
     (source, lang, c) sentence-vote cells as associative stream state,
     snapshot through the IDENTICAL lang_mix_finale as the batch query;
     the batch SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators.textanalysis import (
         lang_mix_cells,
         lang_mix_finale,
     )
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-    )
+    stream = table_stream(spark, sf, "documents")
     live = lang_mix_cells(stream)
-    name = "t34_lang_mix_cells"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t34ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
+    snap = drain_to_memory(live, "t34_lang_mix_cells")
     # break the shared memory-view lineage before the finale's
     # self-joins (the T31 conflicting-references lesson)
-    return lang_mix_finale(spark.table(name).localCheckpoint(eager=True))
+    return lang_mix_finale(snap.localCheckpoint(eager=True))
 
 
 def q_min_k_prob(spark, sf):
@@ -8516,34 +8136,20 @@ def q_t33_stream_gopher_ablation(spark, sf):
     (gopher_fail_mask, n) histogram as the associative streaming
     state, snapshot through the IDENTICAL ablation finale as the batch
     query; the batch SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators.textanalysis import (
         gopher_ablation_finale,
         gopher_quality_gate,
     )
-
-    raw_schema = spark.read.parquet(f"{sf}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
     )
+
+    stream = table_stream(spark, sf, "documents")
     live = gopher_quality_gate(stream).groupBy("gopher_fail_mask").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
-    name = "t33_gopher_mask_hist"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t33ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return gopher_ablation_finale(spark.table(name))
+    return gopher_ablation_finale(drain_to_memory(live, "t33_gopher_mask_hist"))
 
 
 def q_rfm_segments(spark, sf):
@@ -8644,16 +8250,14 @@ def q_t32_stream_brier(spark, sf):
     of integer sums, associative) as the streaming state, snapshot
     through the IDENTICAL Murphy-decomposition finale as the batch
     query; the batch SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import evaluation as ev
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
+        table_stream(spark, sf, "events")
         .filter(F.col("value").isNotNull() & (F.col("value") >= 0))
         .select(
             F.floor(
@@ -8663,17 +8267,7 @@ def q_t32_stream_brier(spark, sf):
         )
     )
     live = ev.brier_cells(stream, "p_micro", "y", n_bins=20)
-    name = "t32_brier_cells"
-    q = (
-        live.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t32ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    return ev.brier_finale(spark.table(name), n_bins=20)
+    return ev.brier_finale(drain_to_memory(live, "t32_brier_cells"), n_bins=20)
 
 
 def q_repetition_depth(spark, sf):
@@ -8841,36 +8435,24 @@ def q_t31_stream_bradley_terry(spark, sf):
     counts as the associative streaming state (the cells/finale
     recipe), snapshot through the IDENTICAL win-pairing + 6-round MM
     finale as the batch path; the batch SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators.supervised import (
         bradley_terry_strengths,
     )
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
+        table_stream(spark, sf, "events")
         .groupBy(
             F.col("user_id").alias("u"), F.col("event_type").alias("t")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    name = "t31_bt_counts"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t31ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
     # break the shared memory-view lineage before the finale's
     # self-join (conflicting-reference analyzer error otherwise)
-    snap = spark.table(name).localCheckpoint(eager=True)
+    snap = drain_to_memory(stream, "t31_bt_counts").localCheckpoint(eager=True)
     return bradley_terry_strengths(_bt_cells_from_counts(snap), n_rounds=6)
 
 
@@ -8957,34 +8539,22 @@ def q_t35_stream_krippendorff(spark, sf):
     (cells/finale recipe), snapshot through the IDENTICAL
     krippendorff_alpha_from_cells finale as the batch path; the batch
     SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators.evaluation import (
         krippendorff_alpha_from_cells,
     )
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
+        table_stream(spark, sf, "events")
         .groupBy(
             F.col("user_id").alias("i"), F.col("event_type").alias("cat")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("nic"))
     )
-    name = "t35_kripp_cells"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t35ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    snap = spark.table(name).localCheckpoint(eager=True)
+    snap = drain_to_memory(stream, "t35_kripp_cells").localCheckpoint(eager=True)
     return krippendorff_alpha_from_cells(snap)
 
 
@@ -9255,18 +8825,16 @@ def q_t36_stream_offpolicy(spark, sf):
     (per-row floors BEFORE the sums keep the state mergeable), snapshot
     through the IDENTICAL offpolicy_from_action_cells finale as the
     batch path; the batch SQL is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators.valuation import (
         offpolicy_from_action_cells,
     )
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
+        table_stream(spark, sf, "events")
         .select(
             F.col("event_type").alias("a"),
             # NaN-guard matches offpolicy_ips_snips (NaN rewards drop)
@@ -9284,17 +8852,7 @@ def q_t36_stream_offpolicy(spark, sf):
             F.sum(F.col("r_micro").cast("decimal(38,0)")).alias("sr"),
         )
     )
-    name = "t36_offpolicy_cells"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t36ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    snap = spark.table(name).localCheckpoint(eager=True)
+    snap = drain_to_memory(stream, "t36_offpolicy_cells").localCheckpoint(eager=True)
     return offpolicy_from_action_cells(snap)
 
 
@@ -9343,21 +8901,19 @@ def q_t37_stream_lexdiv(spark, sf):
     sentinel rows riding the SAME state to carry doc counts (one
     stream, one agg); snapshot splits the sentinel off and feeds the
     IDENTICAL lexical_diversity_from_cells finale as the batch path."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators.textanalysis import (
         lexical_diversity_from_cells,
+    )
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
     )
 
     # every REAL token is prefixed 't' and the per-doc sentinel is the
     # bare 'd' — a 1-char state key can never collide with a 2+-char
     # prefixed token, whatever bytes a regenerated corpus ships
-    raw_schema = spark.read.parquet(f"{sf}/documents.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
+        table_stream(spark, sf, "documents")
         .select(
             F.col("source").alias("g"),
             F.explode(
@@ -9381,17 +8937,7 @@ def q_t37_stream_lexdiv(spark, sf):
         .groupBy("g", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    name = "t37_lexdiv_cells"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t37ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    snap = spark.table(name).localCheckpoint(eager=True)
+    snap = drain_to_memory(stream, "t37_lexdiv_cells").localCheckpoint(eager=True)
     cells = snap.filter(F.col("tok") != "d").select(
         "g", F.expr("substring(tok, 2)").alias("tok"), "c"
     )
@@ -9437,20 +8983,18 @@ def q_t38_stream_fairness(spark, sf):
     streaming state, snapshot through the IDENTICAL
     fairness_from_group_cells finale as the batch path; the batch SQL
     is the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators.evaluation import (
         fairness_from_group_cells,
     )
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/documents.parquet").schema
     p = F.coalesce(F.col("n_chars") >= 150, F.lit(False))
     y = F.coalesce(F.col("lang") == "en", F.lit(False))
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
+        table_stream(spark, sf, "documents")
         .groupBy(F.col("source").alias("grp"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
@@ -9460,17 +9004,7 @@ def q_t38_stream_fairness(spark, sf):
             F.sum((p & ~y).cast("long")).cast("long").alias("n_fp"),
         )
     )
-    name = "t38_fairness_cells"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t38ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    snap = spark.table(name).localCheckpoint(eager=True)
+    snap = drain_to_memory(stream, "t38_fairness_cells").localCheckpoint(eager=True)
     return fairness_from_group_cells(snap, "source")
 
 
@@ -9525,13 +9059,14 @@ def q_t39_stream_auc_by_source(spark, sf):
     recipe, grouped), snapshot through the IDENTICAL
     auc_by_group_from_cells finale as the batch path; the batch SQL is
     the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators.evaluation import (
         auc_by_group_from_cells,
     )
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/documents.parquet").schema
     width = (600.0 - 0.0) / 200
     b = F.least(
         F.greatest(
@@ -9544,10 +9079,7 @@ def q_t39_stream_auc_by_source(spark, sf):
     # the oracle's CASE..ELSE 0
     y = F.coalesce((F.col("lang") == "en").cast("int"), F.lit(0))
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
+        table_stream(spark, sf, "documents")
         .filter(F.col("n_chars").isNotNull())
         .select(F.col("source").alias("grp"), b.alias("bin"), y.alias("y"))
         .groupBy("grp", "bin")
@@ -9556,17 +9088,7 @@ def q_t39_stream_auc_by_source(spark, sf):
             (F.count("*") - F.sum("y")).alias("neg"),
         )
     )
-    name = "t39_auc_cells"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t39ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    snap = spark.table(name).localCheckpoint(eager=True)
+    snap = drain_to_memory(stream, "t39_auc_cells").localCheckpoint(eager=True)
     return auc_by_group_from_cells(snap, "source")
 
 
@@ -9672,28 +9194,17 @@ def q_t41_stream_bytebpe_fertility(spark, sf):
     Oracle: the cell-level rollup of the bpe_bytelevel_encode replay
     (identical sums, no per-doc roundtrip conjunction — that audit
     stays batch-side)."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import textanalysis as ta
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
     docs = _t(spark, sf, "documents")
     pieces = ta.bpe_bytelevel_pieces(docs, n_merges=12)
-    raw_schema = spark.read.parquet(f"{sf}/documents.parquet").schema
-    stream = spark.readStream.schema(raw_schema).option(
-        "maxFilesPerTrigger", 1
-    ).option("pathGlobFilter", "documents.parquet").parquet(sf)
+    stream = table_stream(spark, sf, "documents")
     cells = ta.bpe_bytelevel_fertility_cells(stream, pieces)
-    name = "t41_bytebpe_cells"
-    q = (
-        cells.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t41ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    snap = spark.table(name).localCheckpoint(eager=True)
+    snap = drain_to_memory(cells, "t41_bytebpe_cells").localCheckpoint(eager=True)
     return ta.bpe_bytelevel_fertility_finale(snap)
 
 
@@ -10149,19 +9660,17 @@ def q_t40_stream_token_budget(spark, sf):
     row per source), snapshot through the IDENTICAL
     token_budget_from_cells finale as the batch path; the batch SQL is
     the parity oracle."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators.curation import (
         token_budget_from_cells,
     )
     from pdf_to_vectordb_etl_spark.operators import textanalysis as ta
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/documents.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
+        table_stream(spark, sf, "documents")
         .groupBy(F.coalesce(F.col("source"), F.lit("")).alias("source"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -10180,17 +9689,7 @@ def q_t40_stream_token_budget(spark, sf):
             .alias("n_tokens"),
         )
     )
-    name = "t40_budget_cells"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t40ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    snap = spark.table(name).localCheckpoint(eager=True)
+    snap = drain_to_memory(stream, "t40_budget_cells").localCheckpoint(eager=True)
     return token_budget_from_cells(snap, budget=200_000)
 
 
@@ -10807,20 +10306,18 @@ def q_t43_stream_split_monitor(spark, sf):
     stratified_split_from_cells finale as the batch report, whose SQL
     is the parity oracle — the live view of whether stratification is
     holding as documents arrive."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators.curation import (
         md5_split,
         stratified_split_from_cells,
     )
     from pdf_to_vectordb_etl_spark.operators import textanalysis as ta
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/documents.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
+        table_stream(spark, sf, "documents")
         .groupBy(
             md5_split("doc_id").alias("split"),
             F.coalesce(F.col("lang"), F.lit("")).alias("lang"),
@@ -10837,17 +10334,7 @@ def q_t43_stream_split_monitor(spark, sf):
             .alias("n_tokens"),
         )
     )
-    name = "t43_split_cells"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t43ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    snap = spark.table(name)
+    snap = drain_to_memory(stream, "t43_split_cells")
     return stratified_split_from_cells(snap, by="lang")
 
 
@@ -10857,18 +10344,16 @@ def q_t42_stream_compaction(spark, sf):
     snapshot through the IDENTICAL ann_compaction_finale projection as
     the batch ann_compaction_signal (whose SQL is the parity oracle);
     fires compaction_due the moment the deleted share crosses 10%."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators.topk import (
         ann_compaction_finale,
     )
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        table_stream,
+    )
 
-    raw_schema = spark.read.parquet(f"{sf}/embeddings.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf)
+        table_stream(spark, sf, "embeddings")
         .filter(F.col("embedding").isNotNull() & (F.col("vec_id") >= 2))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_total"),
@@ -10879,17 +10364,7 @@ def q_t42_stream_compaction(spark, sf):
             .alias("n_deleted"),
         )
     )
-    name = "t42_compaction_cells"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t42ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    snap = spark.table(name)
+    snap = drain_to_memory(stream, "t42_compaction_cells")
     return ann_compaction_finale(snap, threshold_micro=100_000)
 
 

@@ -18,10 +18,14 @@ streaming capability.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans import etl
 from ..schemas import PAGE_SCHEMA, normalize_event_times
+
+STREAM_TIMEOUT_S = 300
 
 
 def read_page_stream(spark: SparkSession, drop_dir: str) -> DataFrame:
@@ -35,11 +39,54 @@ def read_page_stream(spark: SparkSession, drop_dir: str) -> DataFrame:
     )
 
 
+def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """One ``<table>.parquet`` of an sf dir as a file stream, one file
+    per micro-batch. Stream sources must be directories, so the sf dir
+    is watched with a glob on the one table. The schema is the RAW file
+    schema, never ``_t``'s normalized one: transforms normalize event
+    times themselves."""
+    file_name = f"{table}.parquet"
+    return (
+        spark.readStream.schema(spark.read.parquet(f"{sf_dir}/{file_name}").schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", file_name)
+        .parquet(sf_dir)
+    )
+
+
+def await_stream(query):
+    """Wait for an availableNow query to finish. A query still running
+    after ``STREAM_TIMEOUT_S`` is stopped and raises ``TimeoutError``,
+    so no caller reads a partial sink."""
+    if not query.awaitTermination(STREAM_TIMEOUT_S):
+        query.stop()
+        raise TimeoutError(
+            f"stream {query.name or query.id} still running after "
+            f"{STREAM_TIMEOUT_S} s; stopped"
+        )
+
+
+def drain_to_memory(df: DataFrame, name: str, mode: str = "complete") -> DataFrame:
+    """Run a streaming frame to completion (availableNow) into the
+    memory table ``name`` and return that table. The checkpoint is
+    private and removed afterwards; a repeat run with the same ``name``
+    replaces the table."""
+    with tempfile.TemporaryDirectory(prefix=f"{name}_ckpt") as ckpt:
+        await_stream(
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+    return df.sparkSession.table(name)
+
+
 def run_incremental_etl(
     pages_stream: DataFrame,
     checkpoint_dir: str,
     sink: "callable",
-    available_now: bool = True,
 ):
     """T3 — drive the batch DAG incrementally.
 
@@ -56,12 +103,9 @@ def run_incremental_etl(
         questions = etl.extract_questions(batch_df)
         sink(questions, batch_id)
 
-    writer = pages_stream.writeStream.foreachBatch(_process).option(
+    return pages_stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ).trigger(availableNow=True).start()
 
 
 def stream_event_counts(
@@ -206,7 +250,6 @@ def stream_compact_snapshot(
     key: str = "user_id",
     order_col: str = "tus",
     payload_cols: list[str] | None = None,
-    available_now: bool = True,
 ):
     """Streaming materialized view: maintain a latest-per-key snapshot
     of a changelog stream with a foreachBatch merge.
@@ -259,12 +302,9 @@ def stream_compact_snapshot(
         except Exception:  # noqa: BLE001 — GC only; snapshot is committed
             pass
 
-    writer = events_stream.writeStream.foreachBatch(merge).option(
+    return events_stream.writeStream.foreachBatch(merge).option(
         "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ).trigger(availableNow=True).start()
 
 
 def _committed_offsets(spark: SparkSession, offset_path: str) -> dict[int, tuple[int, int]]:
@@ -288,7 +328,6 @@ def run_sequential_id_etl(
     offset_path: str,
     sink,
     base_offset: int = 0,
-    available_now: bool = True,
 ):
     """T4 reference-compat: COUNT-CONTINUATION sequential vector ids
     across micro-batches (reference qdrant_text_loader.py:276,:310 —
@@ -331,12 +370,9 @@ def run_sequential_id_etl(
             Path(f"{offset_path}/_OFFSET-{batch_id}-{start}-{start + n}"), True
         ).close()
 
-    writer = pages_stream.writeStream.foreachBatch(_process).option(
+    return pages_stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ).trigger(availableNow=True).start()
 
 
 def stream_sessionize(
@@ -478,7 +514,6 @@ def stream_apply_changes(
     key_cols: list[str],
     order_col: str,
     op_col: str = "op",
-    available_now: bool = True,
 ):
     """T10 — streaming CDC MERGE with delete semantics: maintain an
     upsert/delete changelog as a versioned snapshot via foreachBatch,
@@ -509,12 +544,9 @@ def stream_apply_changes(
         Path = jvm.org.apache.hadoop.fs.Path
         fs.create(Path(f"{snapshot_path}/_LATEST-{new_v}"), True).close()
 
-    writer = changes_stream.writeStream.foreachBatch(merge).option(
+    return changes_stream.writeStream.foreachBatch(merge).option(
         "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ).trigger(availableNow=True).start()
 
 
 def stream_score_bins(
@@ -926,7 +958,6 @@ def stream_bloom_dedup_ingest(
     id_col: str = "doc_id",
     m_bits: int = 1 << 20,
     k: int = 4,
-    available_now: bool = True,
 ):
     """T30 — LIVE Bloom-screened exact-dedup ingest gate (batch twin:
     ``dedup.incremental_exact_dedup_bloom``). The highest-frequency
@@ -973,12 +1004,9 @@ def stream_bloom_dedup_ingest(
             "digest"
         ).write.mode("append").parquet(f"{out_path}/_digests")
 
-    writer = docs_stream.writeStream.foreachBatch(ingest).option(
+    return docs_stream.writeStream.foreachBatch(ingest).option(
         "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ).trigger(availableNow=True).start()
 
 
 def stream_blocklist_totals(

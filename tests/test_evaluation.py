@@ -243,7 +243,10 @@ def test_poisson_bootstrap_constant_and_coverage(spark):
 def test_stream_score_bins_snapshot_equals_batch(spark, tmp_path):
     import pyspark.sql.functions as SF
 
-    from pdf_to_vectordb_etl_spark.streaming.pipeline import stream_score_bins
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
+        stream_score_bins,
+    )
 
     rows = [(float(i % 50), "purchase" if i % 3 == 0 else "view")
             for i in range(300)]
@@ -262,20 +265,12 @@ def test_stream_score_bins_snapshot_equals_batch(spark, tmp_path):
     bins = stream_score_bins(
         stream, "value", SF.col("event_type") == "purchase", 100, 0.0, 50.0
     )
-    q = (
-        bins.writeStream.format("memory")
-        .queryName("t14_test_bins")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    snap = {r.bin: (r.pos, r.neg) for r in spark.table("t14_test_bins").collect()}
+    snap_df = drain_to_memory(bins, "t14_test_bins")
+    snap = {r.bin: (r.pos, r.neg) for r in snap_df.collect()}
     exact = {r.bin: (r.pos, r.neg) for r in batch.collect()}
     assert snap == exact
     # and the derived AUC matches the batch AUC
-    a1 = ev.auc_from_bins(spark.table("t14_test_bins")).collect()[0].auc
+    a1 = ev.auc_from_bins(snap_df).collect()[0].auc
     a2 = ev.binned_auc(
         raw, "value", SF.col("event_type") == "purchase", 100, 0.0, 50.0
     ).collect()[0].auc

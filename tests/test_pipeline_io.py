@@ -24,6 +24,11 @@ from pdf_to_vectordb_etl_spark.streaming import (
     run_incremental_etl,
     stream_event_counts,
 )
+from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+    await_stream,
+    drain_to_memory,
+    table_stream,
+)
 from tests.conftest import load
 
 
@@ -131,10 +136,9 @@ def test_streaming_matches_batch(spark, tmp_path):
             (r["year"], r["subject"], r["ID"]) for r in questions.collect()
         )
 
-    q = run_incremental_etl(
-        read_page_stream(spark, drop), str(tmp_path / "ckpt"), sink
+    await_stream(
+        run_incremental_etl(read_page_stream(spark, drop), str(tmp_path / "ckpt"), sink)
     )
-    q.awaitTermination(120)
     want = {
         (r["year"], r["subject"], r["ID"])
         for r in etl.extract_questions(corpus).collect()
@@ -148,15 +152,7 @@ def test_stream_event_counts_watermarked(spark, sf_dir, tmp_path):
     events.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(events.schema).parquet(src)
     counts = stream_event_counts(stream, "1 hour", "2 hours")
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("ev_counts")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .start()
-    )
-    q.awaitTermination(120)
+    drain_to_memory(counts, "ev_counts", mode="append")
     got = spark.table("ev_counts").agg(F.sum("n")).first()[0]
     # append mode emits only windows closed by the final watermark;
     # everything before (max_ts - 2h) must have been emitted
@@ -247,30 +243,16 @@ def test_multimodal_plumbing(spark, sf_dir):
         multimodal.decode_media(media).collect()  # real kernel gated
 
 
-def test_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
+def test_stream_interval_join_matches_batch(spark, sf_dir):
     """Stream-stream interval join (availableNow) must reproduce the
     batch join exactly — same pairs, same lags."""
     from pdf_to_vectordb_etl_spark.streaming.pipeline import stream_interval_join
 
     events = load(spark, sf_dir, "events")
-    # raw file schema (load() normalizes ts to long; the file may not be)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = table_stream(spark, sf_dir, "events")
     pairs = stream_interval_join(stream, within="1 hour", watermark="100 days")
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName("t5_pairs")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "t5ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(tuple(r) for r in spark.table("t5_pairs").collect())
+    snap = drain_to_memory(pairs, "t5_pairs", mode="append")
+    got = sorted(tuple(r) for r in snap.collect())
 
     ev = events.withColumn("t", (F.col("ts") / F.lit(1_000_000_000)).cast("timestamp"))
     v = ev.filter(F.col("event_type") == "view").select(
@@ -355,7 +337,7 @@ def test_stream_compact_snapshot_matches_batch(spark, sf_dir, tmp_path):
     q = stream_compact_snapshot(
         stream, snap, str(tmp_path / "ckpt"), key="user_id", order_col="tus"
     )
-    q.awaitTermination(180)
+    await_stream(q)
 
     got = sorted(tuple(r) for r in read_snapshot(spark, snap).collect())
     want = sorted(
@@ -405,7 +387,7 @@ def test_stream_compact_snapshot_fails_loud_on_corrupt_state(
         stream, str(snap), str(tmp_path / "ckpt"), key="user_id", order_col="tus"
     )
     with pytest.raises(Exception, match="(?i)parquet|FileReadException"):
-        q.awaitTermination(180)
+        await_stream(q)
     # the corrupt version was never replaced by a bare-batch rewrite
     import os
 
@@ -529,7 +511,7 @@ def test_sequential_id_stream_continues_across_runs(spark, tmp_path):
     c1 = synthetic.corpus_df(spark, years=(2022,), days=("D1",))
     c1.repartition("doc_id").write.mode("overwrite").json(drop)
     q = run_sequential_id_etl(read_page_stream(spark, drop), ckpt, offsets, sink)
-    q.awaitTermination(180)
+    await_stream(q)
     n1 = len(got)
     assert n1 > 0
     assert sorted(i for i, _ in got) == list(range(n1))  # dense 0..n1-1
@@ -538,7 +520,7 @@ def test_sequential_id_stream_continues_across_runs(spark, tmp_path):
     c2 = synthetic.corpus_df(spark, years=(2023,), days=("D1",))
     c2.repartition("doc_id").write.mode("append").json(drop)
     q2 = run_sequential_id_etl(read_page_stream(spark, drop), ckpt, offsets, sink)
-    q2.awaitTermination(180)
+    await_stream(q2)
     n2 = len(got)
     assert n2 > n1
     assert sorted(i for i, _ in got) == list(range(n2))  # still dense, no reuse

@@ -15,6 +15,11 @@ from pdf_to_vectordb_etl_spark.operators import (
     quantization,
     skew,
 )
+from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+    await_stream,
+    drain_to_memory,
+    table_stream,
+)
 from tests.conftest import load
 
 
@@ -596,35 +601,17 @@ def test_stream_hll_registers_equal_batch(spark, sf_dir):
     """The streaming register snapshot over the full table equals the
     batch register file row-for-row — the associative-max sketch
     property under micro-batching."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import sketch
     from pdf_to_vectordb_etl_spark.streaming.pipeline import stream_hll_registers
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    q = (
-        stream_hll_registers(stream)
-        .writeStream.format("memory")
-        .queryName("t9_regs_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t9t"))
-        .start()
-    )
-    q.awaitTermination(300)
+    stream = table_stream(spark, sf_dir, "documents")
+    streamed = drain_to_memory(stream_hll_registers(stream), "t9_regs_test")
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok"),
     )
     batch = sketch.hll_registers(toks, "tok", by="source")
-    streamed = spark.table("t9_regs_test")
     assert streamed.exceptAll(batch).count() == 0
     assert batch.exceptAll(streamed).count() == 0
 
@@ -853,7 +840,7 @@ def test_stream_cdc_converges_across_adversarial_batches(spark, tmp_path):
     q = stream_apply_changes(
         stream, snap, str(tmp_path / "ckpt"), ["user_id"], "ord"
     )
-    q.awaitTermination(300)
+    await_stream(q)
     streamed = {
         r["user_id"]: r["value"]
         for r in live_rows(read_snapshot(spark, snap)).collect()
@@ -1194,36 +1181,18 @@ def test_stream_cms_registers_equal_batch(spark, sf_dir):
     """T11: the streaming Count-Min counter snapshot over the full
     table equals the batch sketch row-for-row — associative-sum state
     under micro-batching."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import sketch
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
         stream_countmin_registers,
     )
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    q = (
-        stream_countmin_registers(stream)
-        .writeStream.format("memory")
-        .queryName("t11_regs_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t11t"))
-        .start()
-    )
-    q.awaitTermination(300)
+    stream = table_stream(spark, sf_dir, "documents")
+    streamed = drain_to_memory(stream_countmin_registers(stream), "t11_regs_test")
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
     ).filter(F.col("tok") != "")
     batch = sketch.countmin_build(toks, "tok")
-    streamed = spark.table("t11_regs_test")
     assert streamed.exceptAll(batch).count() == 0
     assert batch.exceptAll(streamed).count() == 0
 
@@ -1450,7 +1419,7 @@ def test_pdf_pages_stream_reader_exactly_once(spark, tmp_path):
             .option("checkpointLocation", str(tmp_path / "ck"))
             .start()
         )
-        q.awaitTermination(120)
+        await_stream(q)
         return spark.read.parquet(sink).collect()
 
     first = run_batch()
@@ -1643,12 +1612,10 @@ def test_stream_kmv_multibatch_equals_batch(spark, sf_dir, tmp_path):
     """T12: the streaming KMV snapshot over rows split across TWO
     micro-batches equals the batch bottom-k sketch estimate — min-k
     state is batch-split-invariant."""
-    import tempfile
+    import shutil
 
     from pdf_to_vectordb_etl_spark.operators import sketch
     from pdf_to_vectordb_etl_spark.streaming.stateful import stream_kmv_bottomk
-
-    import shutil
 
     docs = load(spark, sf_dir, "documents")
     half_a = tmp_path / "a"
@@ -1682,7 +1649,7 @@ def test_stream_kmv_multibatch_equals_batch(spark, sf_dir, tmp_path):
             .option("checkpointLocation", ck)
             .start()
         )
-        q.awaitTermination(300)
+        await_stream(q)
 
     # batch 1: even docs only; batch 2 (same checkpoint): odd docs —
     # the state must carry across runs
@@ -1948,8 +1915,6 @@ def test_stream_cusum_carries_recurrence_across_batches(spark, sf_dir, tmp_path)
     """T13: the recurrence frontier survives micro-batch boundaries —
     two time-ordered files replayed through one checkpoint produce
     exactly the batch detector's rows; out-of-order arrival raises."""
-    import tempfile
-
     import pytest
 
     from pdf_to_vectordb_etl_spark.operators import aggregates
@@ -1995,7 +1960,7 @@ def test_stream_cusum_carries_recurrence_across_batches(spark, sf_dir, tmp_path)
             .option("checkpointLocation", ck)
             .start()
         )
-        q.awaitTermination(300)
+        await_stream(q)
 
     run_once()
     n_first = len(rows)
@@ -2036,7 +2001,7 @@ def test_stream_cusum_carries_recurrence_across_batches(spark, sf_dir, tmp_path)
             .option("checkpointLocation", ck)  # frontier already past cut
             .start()
         )
-        q.awaitTermination(120)
+        await_stream(q)
 
 
 def test_monitor_deseasonalized_cusum_beats_raw(spark):
@@ -2106,6 +2071,6 @@ def test_stream_cusum_tolerates_equal_timestamps(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ck"))
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q)
     assert len(rows) == 4  # both t=2 samples processed, none dropped
     assert [r["t"] for r in sorted(rows, key=lambda r: (r["t"], r["v"]))] == [1, 2, 2, 3]

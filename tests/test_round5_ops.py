@@ -427,6 +427,7 @@ def test_stream_minhash_screen_equals_batch_incremental(spark, tmp_path):
 
     from pdf_to_vectordb_etl_spark.operators import dedup
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
         minhash_band_table,
         stream_minhash_screen,
     )
@@ -471,18 +472,9 @@ def test_stream_minhash_screen_equals_batch_incremental(spark, tmp_path):
     live = stream_minhash_screen(
         stream, minhash_band_table(corpus), threshold=0.5
     )
-    q = (
-        live.writeStream.format("memory")
-        .queryName("t19_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
         (r["new_id"], r["corpus_id"]): r["jaccard"]
-        for r in spark.table("t19_test").collect()
+        for r in drain_to_memory(live, "t19_test").collect()
     }
     assert got == batch
 
@@ -840,11 +832,11 @@ def test_stream_blocklist_totals_equal_batch(spark, sf_dir):
     matcher aggregated per pattern — same helper, same rows, so exact
     set equality (the stream state is one associative sum per
     pattern, bounded by the blocklist, not the stream)."""
-    import tempfile
-
     from pdf_to_vectordb_etl_spark.operators import textsearch
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
         stream_blocklist_totals,
+        table_stream,
     )
     from tests.conftest import load
 
@@ -872,32 +864,17 @@ def test_stream_blocklist_totals_equal_batch(spark, sf_dir):
         .collect()
     }
 
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .select(
-            "doc_id",
-            F.lower(
-                F.regexp_replace("text", r"[^\x20-\x7e]", "")
-            ).alias("text"),
-        )
+    stream = table_stream(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.lower(
+            F.regexp_replace("text", r"[^\x20-\x7e]", "")
+        ).alias("text"),
     )
-    q = (
-        stream_blocklist_totals(stream, pats)
-        .writeStream.format("memory")
-        .queryName("t22_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t22t"))
-        .start()
-    )
-    q.awaitTermination(300)
     got = {
         (r["pattern"], r["n_hits"])
-        for r in spark.table("t22_test").collect()
+        for r in drain_to_memory(
+            stream_blocklist_totals(stream, pats), "t22_test"
+        ).collect()
     }
     assert got == batch and len(got) >= 1
 

@@ -860,13 +860,13 @@ def test_stream_contamination_totals_equal_batch(spark, sf_dir):
     """T28: the streaming per-benchmark-item contamination snapshot
     equals the batch telemetry — same shingle join, bounded state
     (one associative count per benchmark doc)."""
-    import tempfile
-
     import pyspark.sql.functions as F
 
     from pdf_to_vectordb_etl_spark.operators import curation
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
         stream_contamination_totals,
+        table_stream,
     )
     from tests.conftest import load
 
@@ -881,28 +881,16 @@ def test_stream_contamination_totals_equal_batch(spark, sf_dir):
     bench_sh = curation.benchmark_shingle_table(
         docs.filter(is_bench), n=8
     ).localCheckpoint(eager=True)
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+        table_stream(spark, sf_dir, "documents")
         .filter(~is_bench)
         .select("doc_id", "text")
     )
-    q = (
-        stream_contamination_totals(stream, bench_sh, n=8)
-        .writeStream.format("memory")
-        .queryName("t28_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t28t"))
-        .start()
-    )
-    q.awaitTermination(300)
     got = {
         (r["bench_id"], r["n_hits"])
-        for r in spark.table("t28_test").collect()
+        for r in drain_to_memory(
+            stream_contamination_totals(stream, bench_sh, n=8), "t28_test"
+        ).collect()
     }
     assert got == batch and len(got) >= 1
 
@@ -971,15 +959,15 @@ def test_unigram_encode_counts(spark):
 
 def test_stream_gopher_gate_equals_batch(spark, sf_dir):
     """T29: streaming per-source gate snapshot == batch gate + groupBy."""
-    import tempfile
-
     import pyspark.sql.functions as F
 
     from pdf_to_vectordb_etl_spark.operators.textanalysis import (
         gopher_quality_gate,
     )
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        drain_to_memory,
         stream_quality_gate_totals,
+        table_stream,
     )
     from tests.conftest import load
 
@@ -995,26 +983,12 @@ def test_stream_gopher_gate_equals_batch(spark, sf_dir):
         )
         .collect()
     }
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    q = (
-        stream_quality_gate_totals(stream, "source")
-        .writeStream.format("memory")
-        .queryName("t29_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="t29t"))
-        .start()
-    )
-    q.awaitTermination(300)
+    stream = table_stream(spark, sf_dir, "documents")
     got = {
         (r.source, r.n_docs, r.n_pass, r.fail_bits_seen)
-        for r in spark.table("t29_test").collect()
+        for r in drain_to_memory(
+            stream_quality_gate_totals(stream, "source"), "t29_test"
+        ).collect()
     }
     assert got == batch and len(got) >= 1
 

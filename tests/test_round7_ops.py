@@ -4,14 +4,13 @@ gate."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
+from pdf_to_vectordb_etl_spark.streaming.pipeline import await_stream
 from tests.conftest import load
 
 
-def test_t30_multibatch_admits_exactly_the_batch_digest_set(spark, sf_dir):
+def test_t30_multibatch_admits_exactly_the_batch_digest_set(spark, sf_dir, tmp_path):
     """Three micro-batches (3 files, maxFilesPerTrigger=1): the admitted
     DIGEST set must equal the batch twin's — each unseen digest admitted
     exactly once, across batch boundaries (the persisted _digests table
@@ -28,7 +27,7 @@ def test_t30_multibatch_admits_exactly_the_batch_digest_set(spark, sf_dir):
     corpus, new = docs.filter(h < "8"), docs.filter(h >= "8")
     corpus_digests = dedup.content_digests(corpus)
 
-    src = tempfile.mkdtemp(prefix="t30src")
+    src = str(tmp_path / "src")
     new.repartition(3).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     stream = (
@@ -36,11 +35,9 @@ def test_t30_multibatch_admits_exactly_the_batch_digest_set(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = tempfile.mkdtemp(prefix="t30out")
-    q = stream_bloom_dedup_ingest(
-        stream, corpus_digests, out, tempfile.mkdtemp(prefix="t30ck")
-    )
-    q.awaitTermination(300)
+    out = str(tmp_path / "out")
+    q = stream_bloom_dedup_ingest(stream, corpus_digests, out, str(tmp_path / "ck"))
+    await_stream(q)
     assert q.lastProgress["batchId"] >= 2, "expected >= 3 micro-batches"
 
     got = spark.read.parquet(f"{out}/data")
@@ -57,7 +54,7 @@ def test_t30_multibatch_admits_exactly_the_batch_digest_set(spark, sf_dir):
     assert len(got_digests) == len(set(got_digests)) == got.count()
 
 
-def test_t30_second_run_admits_nothing_new(spark, sf_dir):
+def test_t30_second_run_admits_nothing_new(spark, sf_dir, tmp_path):
     """Replaying the SAME stream into the same out dir (fresh
     checkpoint, so batches re-fire) must admit zero rows — the
     persisted digest table makes re-ingest idempotent at the digest
@@ -72,23 +69,22 @@ def test_t30_second_run_admits_nothing_new(spark, sf_dir):
     corpus_digests = dedup.content_digests(docs.filter(h < "8"))
     new = docs.filter(h >= "8")
 
-    src = tempfile.mkdtemp(prefix="t30src2")
+    src = str(tmp_path / "src")
     new.coalesce(1).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
-    out = tempfile.mkdtemp(prefix="t30out2")
+    out = str(tmp_path / "out")
 
-    def run():
+    def run(ck):
         stream = spark.readStream.schema(schema).option(
             "maxFilesPerTrigger", 1
         ).parquet(src)
-        q = stream_bloom_dedup_ingest(
-            stream, corpus_digests, out, tempfile.mkdtemp(prefix="t30ck2")
+        await_stream(
+            stream_bloom_dedup_ingest(stream, corpus_digests, out, str(tmp_path / ck))
         )
-        q.awaitTermination(300)
 
-    run()
+    run("ck1")
     n1 = spark.read.parquet(f"{out}/data").count()
-    run()
+    run("ck2")
     n2 = spark.read.parquet(f"{out}/data").count()
     assert n1 > 0 and n2 == n1
 

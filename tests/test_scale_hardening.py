@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from pdf_to_vectordb_etl_spark import sinks
 from pdf_to_vectordb_etl_spark.operators import skew
+from pdf_to_vectordb_etl_spark.streaming.pipeline import drain_to_memory
 from pdf_to_vectordb_etl_spark.streaming.stateful import running_totals, sessionize
 from tests.conftest import load
 
@@ -73,20 +74,8 @@ def test_running_totals_stateful_stream(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
-        running_totals(stream)
-        .writeStream.format("memory")
-        .queryName("running_totals_t")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    q.awaitTermination(180)
     # last emitted row per key == batch totals
-    from pyspark.sql import Window
-
-    res = spark.table("running_totals_t")
+    res = drain_to_memory(running_totals(stream), "running_totals_t", mode="update")
     # memory sink appends each update; the max n_events per key is final
     final = res.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"), F.max("total_value").alias("total_value")
@@ -115,19 +104,12 @@ def test_sessionize_closes_on_gap(spark, tmp_path):
     stream = (
         spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
-    q = (
-        sessionize(stream, gap_ns=hour)
-        .writeStream.format("memory")
-        .queryName("sessions_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .start()
+    sessions = drain_to_memory(
+        sessionize(stream, gap_ns=hour), "sessions_t", mode="append"
     )
-    q.awaitTermination(180)
     got = {
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.table("sessions_t").collect()
+        for r in sessions.collect()
     }
     # closed sessions only (the trailing session per user stays open in state)
     assert got == {
@@ -158,16 +140,7 @@ def test_stream_dedup_first_wins_across_batches(spark, sf_dir, tmp_path):
         time_col="t",
         watermark="400 days",
     )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("stream_dedup_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck_dedup"))
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.table("stream_dedup_t")
+    got = drain_to_memory(deduped, "stream_dedup_t", mode="append")
     # every key exactly once despite 2x input across multiple batches
     assert got.count() == events.count()
     assert got.select("event_id").distinct().count() == events.count()
@@ -189,17 +162,11 @@ def test_stream_cap_per_key_enforces_quota_across_batches(spark, sf_dir, tmp_pat
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
-        stream_cap_per_key(stream, key="source", cap=7, id_col="doc_id")
-        .writeStream.format("memory")
-        .queryName("cap_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.table("cap_stream").collect()
+    got = drain_to_memory(
+        stream_cap_per_key(stream, key="source", cap=7, id_col="doc_id"),
+        "cap_stream",
+        mode="append",
+    ).collect()
     per_key = {}
     for r in got:
         per_key.setdefault(r["key"], []).append(r["admitted_id"])
@@ -248,20 +215,10 @@ def test_stream_anomaly_matches_batch_across_microbatches(spark, sf_dir, tmp_pat
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
-        stream_anomaly(stream, lookback=20, threshold=2.5)
-        .writeStream.format("memory")
-        .queryName("t8_x_batch")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck8"))
-        .start()
+    flags = drain_to_memory(
+        stream_anomaly(stream, lookback=20, threshold=2.5), "t8_x_batch", mode="append"
     )
-    q.awaitTermination(180)
-    got = {
-        (r["user_id"], r["event_id"], r["z"])
-        for r in spark.table("t8_x_batch").collect()
-    }
+    got = {(r["user_id"], r["event_id"], r["z"]) for r in flags.collect()}
     ev = events.withColumn("tus", F.expr("ts div 1000"))
     want = {
         (r["user_id"], r["event_id"], r["z"])
