@@ -74,7 +74,7 @@ def main() -> int:
     qs = entry.queries()
     oracles = entry.oracle_sql()
     names = args.names or list(qs)
-    n_pass = n_fail = n_rows_only = 0
+    n_pass = n_fail = 0
     failures = []
     for name in names:
         t0 = time.time()
@@ -86,10 +86,6 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {e}")
             n_fail += 1
             failures.append(name)
-            continue
-        if name not in oracles:
-            print(f"ROWS  {name}: {len(srows)} rows (no oracle — rows-only check)")
-            n_rows_only += 1
             continue
         try:
             rel = con.sql(oracles[name])
@@ -138,7 +134,7 @@ def main() -> int:
             print(f"PASS  {name}: {len(srows)} rows in {dt:.1f}s")
             n_pass += 1
     print(
-        f"\n{n_pass} pass, {n_rows_only} rows-only, {n_fail} fail"
+        f"\n{n_pass} pass, {n_fail} fail"
         + (f" -> {failures}" if failures else "")
     )
     return 1 if n_fail else 0
