@@ -944,13 +944,16 @@ def q_o7_stats_csv_roundtrip(spark, sf):
             qs.filter(F.col("correct_answer").isNotNull())
         ),
     )
-    path = tempfile.mkdtemp(prefix="o7_stats_csv_")
-    sinks.write_stats_csv(stats, path)
     schema = (
         "year INT, kind STRING, eng BIGINT, lang BIGINT, spani BIGINT, "
         "natu BIGINT, math BIGINT, huma BIGINT"
     )
-    return spark.read.schema(schema).option("header", True).csv(path)
+    # materialised before the directory is removed
+    with tempfile.TemporaryDirectory(prefix="o7_stats_csv_") as path:
+        sinks.write_stats_csv(stats, path)
+        return (
+            spark.read.schema(schema).option("header", True).csv(path)
+        ).localCheckpoint(eager=True)
 
 
 @query(oracle="""
@@ -2458,7 +2461,7 @@ def q_t4_stateful_totals(spark, sf):
 def q_mm_decode_meta(spark, sf):
     """Multimodal decode plumbing — binary payloads through the Arrow-
     batched mapInPandas kernel (deterministic fake decoder; real codecs
-    import-gated). Python kernel: rows-only check."""
+    import-gated). Python kernel; the oracle replays the fake decoder."""
     from pdf_to_vectordb_etl_spark.operators import multimodal
 
     docs = _t(spark, sf, "documents").withColumn(
@@ -6153,14 +6156,15 @@ def q_t30_stream_bloom_dedup(spark, sf):
     h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
     corpus = dedup.content_digests(docs.filter(h < "8"))
     stream = table_stream(spark, sf, "documents")
-    out = tempfile.mkdtemp(prefix="t30out")
-    with tempfile.TemporaryDirectory(prefix="t30ckpt") as ckpt:
-        await_stream(
-            stream_bloom_dedup_ingest(stream.filter(h >= "8"), corpus, out, ckpt)
-        )
-    return spark.read.parquet(f"{out}/data").select(
-        "doc_id", "lang", "source"
-    )
+    with tempfile.TemporaryDirectory(prefix="t30out") as out:
+        with tempfile.TemporaryDirectory(prefix="t30ckpt") as ckpt:
+            await_stream(
+                stream_bloom_dedup_ingest(stream.filter(h >= "8"), corpus, out, ckpt)
+            )
+        # materialised before the directory is removed
+        return spark.read.parquet(f"{out}/data").select(
+            "doc_id", "lang", "source"
+        ).localCheckpoint(eager=True)
 
 
 # the streaming occupancy agg is associative and ranks with the
@@ -8959,65 +8963,6 @@ def q_unigram_lm_train(spark, sf):
         d2, vocab_size=48, n_rounds=2, max_piece_len=4, max_word_len=12,
         min_count=2, seed_cap_factor=4,
     )
-
-
-def _wordpiece_train_oracle_sql(n_merges: int = 6) -> str:
-    """Unrolled DuckDB replay of wordpiece_train_merges — the
-    _bpe_train_oracle_sql skeleton with a per-round symbol-frequency
-    CTE and the likelihood-score argmax: score_q12 =
-    (n * 1e12) // (f_l * f_r) in HUGEINT (mirrors Spark's exact
-    DECIMAL(38,0) div — all operands non-negative), ties (l, r)."""
-    ctes = [
-        r"""v0 AS MATERIALIZED (
-              SELECT CAST(count(*) AS BIGINT) AS freq,
-                     regexp_replace(w, '(.)', ' \1 ', 'g') AS s
-              FROM (SELECT unnest(string_split_regex(lower(
-                       regexp_replace(text, '[^\x20-\x7e]', '', 'g')),
-                       '\s+')) AS w
-                    FROM documents)
-              WHERE length(w) > 0
-              GROUP BY w)"""
-    ]
-    for k in range(1, n_merges + 1):
-        ctes.append(
-            f"""s{k} AS (
-              SELECT sym, CAST(sum(freq) AS BIGINT) AS f
-              FROM (SELECT freq,
-                           unnest(string_split(trim(s), '  ')) AS sym
-                    FROM v{k - 1})
-              GROUP BY sym),
-            p{k} AS (
-              SELECT ws[i] AS l, ws[i + 1] AS r,
-                     CAST(sum(freq) AS BIGINT) AS n
-              FROM (SELECT freq, ws,
-                           unnest(generate_series(1, len(ws) - 1)) AS i
-                    FROM (SELECT freq, string_split(trim(s), '  ') AS ws
-                          FROM v{k - 1})
-                    WHERE len(ws) > 1)
-              GROUP BY l, r),
-            m{k} AS MATERIALIZED (
-              SELECT p.l, p.r, p.n,
-                     CAST((CAST(p.n AS HUGEINT) * 1000000000000)
-                          // (CAST(a.f AS HUGEINT) * b.f) AS BIGINT)
-                       AS score_q12
-              FROM p{k} p
-              JOIN s{k} a ON p.l = a.sym
-              JOIN s{k} b ON p.r = b.sym
-              ORDER BY score_q12 DESC, l, r LIMIT 1),
-            v{k} AS MATERIALIZED (
-              SELECT freq,
-                     replace(s,
-                       ' ' || (SELECT l FROM m{k}) || '  '
-                           || (SELECT r FROM m{k}) || ' ',
-                       ' ' || (SELECT l FROM m{k})
-                           || (SELECT r FROM m{k}) || ' ') AS s
-              FROM v{k - 1})"""
-        )
-    finals = " UNION ALL ".join(
-        f"SELECT {k} AS step, l, r, n, score_q12 FROM m{k}"
-        for k in range(1, n_merges + 1)
-    )
-    return "WITH " + ",\n".join(ctes) + "\n" + finals
 
 
 # GPT-2 pre-tokenization in DuckDB: pass-1 regexp_extract_all with the
@@ -12135,80 +12080,6 @@ def q_bpe_apply(spark, sf):
     return ta.bpe_apply_report(docs)
 
 
-def _bt_oracle_sql(
-    n_rounds: int = 6, grid: int = 10**9, min_a: int = 10**3
-) -> str:
-    """DuckDB twin of bradley_terry_strengths: the MM rounds unrolled
-    as MATERIALIZED CTEs. Every step is HUGEINT arithmetic — integer
-    sums (no accumulation order) and floor-divisions `//` that mirror
-    Spark's subtract-modulo exact DECIMAL division (all operands
-    non-negative, so floor == truncate) — the replay is bit-identical
-    with no rounding-boundary dice; the single final double division
-    is exact-int-over-power-of-ten."""
-    S = "CAST(1000000000000000000 AS HUGEINT)"  # 1e18
-    rounds = []
-    for s in range(n_rounds):
-        rounds.append(f"""
-            d{s} AS MATERIALIZED (
-              SELECT p.i,
-                     sum((CAST(p.n_ij AS HUGEINT) * {S})
-                         // (ai.a + aj.a)) AS denom
-              FROM prs p
-              JOIN r{s} ai ON p.i = ai.i
-              JOIN r{s} aj ON p.j = aj.i
-              GROUP BY p.i),
-            w{s} AS MATERIALIZED (
-              SELECT it.i,
-                     CASE WHEN d.denom > 0
-                          THEN (CAST(it.wins AS HUGEINT) * {S} * 1000000)
-                               // d.denom
-                          ELSE CAST(0 AS HUGEINT) END AS raw
-              FROM items it JOIN d{s} d ON it.i = d.i),
-            t{s} AS (SELECT sum(raw) AS tot FROM w{s}),
-            r{s + 1} AS MATERIALIZED (
-              SELECT i,
-                     greatest(CAST({min_a} AS HUGEINT),
-                       CASE WHEN t.tot > 0
-                            THEN (raw * {grid}) // t.tot
-                            ELSE CAST(0 AS HUGEINT) END) AS a
-              FROM w{s} CROSS JOIN t{s} t)""")
-    return f"""
-            WITH per AS MATERIALIZED (
-              SELECT user_id AS u, event_type AS t,
-                     CAST(count(*) AS BIGINT) AS c
-              FROM events GROUP BY user_id, event_type),
-            cells AS MATERIALIZED (
-              SELECT a.t AS i, b.t AS j, CAST(count(*) AS BIGINT) AS w
-              FROM per a JOIN per b
-                ON a.u = b.u AND a.t <> b.t AND a.c > b.c
-              GROUP BY a.t, b.t),
-            sym AS MATERIALIZED (
-              SELECT i, j, CAST(sum(w) AS BIGINT) AS w FROM (
-                SELECT i, j, w FROM cells
-                UNION ALL
-                SELECT j AS i, i AS j, CAST(0 AS BIGINT) AS w FROM cells)
-              GROUP BY i, j),
-            prs AS MATERIALIZED (
-              SELECT s.i, s.j, s.w,
-                     s.w + coalesce(r.w, 0) AS n_ij
-              FROM sym s LEFT JOIN sym r ON s.i = r.j AND s.j = r.i
-              WHERE s.w + coalesce(r.w, 0) > 0),
-            items AS MATERIALIZED (
-              SELECT i, CAST(sum(w) AS BIGINT) AS wins,
-                     CAST(sum(n_ij) AS BIGINT) AS n_comp
-              FROM prs GROUP BY i),
-            kk AS (SELECT count(*) AS k FROM items),
-            r0 AS MATERIALIZED (
-              SELECT i, CAST(greatest({min_a}, {grid} // kk.k) AS HUGEINT)
-                       AS a
-              FROM items CROSS JOIN kk),{",".join(rounds)}
-            SELECT it.i AS item, it.wins, it.n_comp AS n_comparisons,
-                   CAST(r.a AS BIGINT) AS a_grid,
-                   CAST(r.a AS DOUBLE) / {grid} AS strength_q9
-            FROM items it JOIN r{n_rounds} r ON it.i = r.i
-        """
-
-
 @query(oracle="""
             WITH ch AS (
               SELECT user_id, event_type, value,
@@ -12250,12 +12121,13 @@ def q_t10_stream_cdc(spark, sf):
         .alias("op"),
         F.col("event_id").alias("ord"),
     )
-    snap = tempfile.mkdtemp(prefix="t10snap")
-    with tempfile.TemporaryDirectory(prefix="t10ckpt") as ckpt:
-        await_stream(stream_apply_changes(ch, snap, ckpt, ["user_id"], "ord"))
-    return live_rows(read_snapshot(spark, snap)).select(
-        "user_id", "event_type", F.round("value", 4).alias("value")
-    )
+    with tempfile.TemporaryDirectory(prefix="t10snap") as snap:
+        with tempfile.TemporaryDirectory(prefix="t10ckpt") as ckpt:
+            await_stream(stream_apply_changes(ch, snap, ckpt, ["user_id"], "ord"))
+        # materialised before the directory is removed
+        return live_rows(read_snapshot(spark, snap)).select(
+            "user_id", "event_type", F.round("value", 4).alias("value")
+        ).localCheckpoint(eager=True)
 
 
 @query(oracle="""
@@ -13706,20 +13578,22 @@ def q_t13_stream_cusum(spark, sf):
     }
     from pdf_to_vectordb_etl_spark.streaming.stateful import stream_cusum
 
-    d = tempfile.mkdtemp(prefix="t13in")
-    daily.write.mode("overwrite").parquet(d)
-    raw_schema = spark.read.parquet(d).schema
-    stream = spark.readStream.schema(raw_schema).parquet(d)
-    out = stream_cusum(
-        stream,
-        ref,
-        key_col="event_type",
-        time_col="day",
-        value_col="v",
-        slack=0.5,
-        threshold=3.0,
-    )
-    return drain_to_memory(out, "t13_stream_cusum_out", mode="append").select(
+    # the drained memory table holds the result, so the input dir can go
+    with tempfile.TemporaryDirectory(prefix="t13in") as d:
+        daily.write.mode("overwrite").parquet(d)
+        raw_schema = spark.read.parquet(d).schema
+        stream = spark.readStream.schema(raw_schema).parquet(d)
+        out = stream_cusum(
+            stream,
+            ref,
+            key_col="event_type",
+            time_col="day",
+            value_col="v",
+            slack=0.5,
+            threshold=3.0,
+        )
+        drained = drain_to_memory(out, "t13_stream_cusum_out", mode="append")
+    return drained.select(
         F.col("key").alias("event_type"),
         F.col("t").alias("day"),
         "v",
@@ -17278,6 +17152,65 @@ def q_wordpiece_encode(spark, sf):
     return ta2.wordpiece_encode(d2, v, max_piece_len=4, max_word_len=12)
 
 
+def _wordpiece_train_oracle_sql(n_merges: int = 6) -> str:
+    """Unrolled DuckDB replay of wordpiece_train_merges — the
+    _bpe_train_oracle_sql skeleton with a per-round symbol-frequency
+    CTE and the likelihood-score argmax: score_q12 =
+    (n * 1e12) // (f_l * f_r) in HUGEINT (mirrors Spark's exact
+    DECIMAL(38,0) div — all operands non-negative), ties (l, r)."""
+    ctes = [
+        r"""v0 AS MATERIALIZED (
+              SELECT CAST(count(*) AS BIGINT) AS freq,
+                     regexp_replace(w, '(.)', ' \1 ', 'g') AS s
+              FROM (SELECT unnest(string_split_regex(lower(
+                       regexp_replace(text, '[^\x20-\x7e]', '', 'g')),
+                       '\s+')) AS w
+                    FROM documents)
+              WHERE length(w) > 0
+              GROUP BY w)"""
+    ]
+    for k in range(1, n_merges + 1):
+        ctes.append(
+            f"""s{k} AS (
+              SELECT sym, CAST(sum(freq) AS BIGINT) AS f
+              FROM (SELECT freq,
+                           unnest(string_split(trim(s), '  ')) AS sym
+                    FROM v{k - 1})
+              GROUP BY sym),
+            p{k} AS (
+              SELECT ws[i] AS l, ws[i + 1] AS r,
+                     CAST(sum(freq) AS BIGINT) AS n
+              FROM (SELECT freq, ws,
+                           unnest(generate_series(1, len(ws) - 1)) AS i
+                    FROM (SELECT freq, string_split(trim(s), '  ') AS ws
+                          FROM v{k - 1})
+                    WHERE len(ws) > 1)
+              GROUP BY l, r),
+            m{k} AS MATERIALIZED (
+              SELECT p.l, p.r, p.n,
+                     CAST((CAST(p.n AS HUGEINT) * 1000000000000)
+                          // (CAST(a.f AS HUGEINT) * b.f) AS BIGINT)
+                       AS score_q12
+              FROM p{k} p
+              JOIN s{k} a ON p.l = a.sym
+              JOIN s{k} b ON p.r = b.sym
+              ORDER BY score_q12 DESC, l, r LIMIT 1),
+            v{k} AS MATERIALIZED (
+              SELECT freq,
+                     replace(s,
+                       ' ' || (SELECT l FROM m{k}) || '  '
+                           || (SELECT r FROM m{k}) || ' ',
+                       ' ' || (SELECT l FROM m{k})
+                           || (SELECT r FROM m{k}) || ' ') AS s
+              FROM v{k - 1})"""
+        )
+    finals = " UNION ALL ".join(
+        f"SELECT {k} AS step, l, r, n, score_q12 FROM m{k}"
+        for k in range(1, n_merges + 1)
+    )
+    return "WITH " + ",\n".join(ctes) + "\n" + finals
+
+
 @query(oracle=_wordpiece_train_oracle_sql(6))
 def q_wordpiece_train(spark, sf):
     """WordPiece tokenizer training (6 likelihood-score merge rounds)
@@ -17308,6 +17241,80 @@ def _bt_cells_from_counts(per):
         .groupBy("i", "j")
         .agg(F.count(F.lit(1)).cast("long").alias("w"))
     )
+
+
+def _bt_oracle_sql(
+    n_rounds: int = 6, grid: int = 10**9, min_a: int = 10**3
+) -> str:
+    """DuckDB twin of bradley_terry_strengths: the MM rounds unrolled
+    as MATERIALIZED CTEs. Every step is HUGEINT arithmetic — integer
+    sums (no accumulation order) and floor-divisions `//` that mirror
+    Spark's subtract-modulo exact DECIMAL division (all operands
+    non-negative, so floor == truncate) — the replay is bit-identical
+    with no rounding-boundary dice; the single final double division
+    is exact-int-over-power-of-ten."""
+    S = "CAST(1000000000000000000 AS HUGEINT)"  # 1e18
+    rounds = []
+    for s in range(n_rounds):
+        rounds.append(f"""
+            d{s} AS MATERIALIZED (
+              SELECT p.i,
+                     sum((CAST(p.n_ij AS HUGEINT) * {S})
+                         // (ai.a + aj.a)) AS denom
+              FROM prs p
+              JOIN r{s} ai ON p.i = ai.i
+              JOIN r{s} aj ON p.j = aj.i
+              GROUP BY p.i),
+            w{s} AS MATERIALIZED (
+              SELECT it.i,
+                     CASE WHEN d.denom > 0
+                          THEN (CAST(it.wins AS HUGEINT) * {S} * 1000000)
+                               // d.denom
+                          ELSE CAST(0 AS HUGEINT) END AS raw
+              FROM items it JOIN d{s} d ON it.i = d.i),
+            t{s} AS (SELECT sum(raw) AS tot FROM w{s}),
+            r{s + 1} AS MATERIALIZED (
+              SELECT i,
+                     greatest(CAST({min_a} AS HUGEINT),
+                       CASE WHEN t.tot > 0
+                            THEN (raw * {grid}) // t.tot
+                            ELSE CAST(0 AS HUGEINT) END) AS a
+              FROM w{s} CROSS JOIN t{s} t)""")
+    return f"""
+            WITH per AS MATERIALIZED (
+              SELECT user_id AS u, event_type AS t,
+                     CAST(count(*) AS BIGINT) AS c
+              FROM events GROUP BY user_id, event_type),
+            cells AS MATERIALIZED (
+              SELECT a.t AS i, b.t AS j, CAST(count(*) AS BIGINT) AS w
+              FROM per a JOIN per b
+                ON a.u = b.u AND a.t <> b.t AND a.c > b.c
+              GROUP BY a.t, b.t),
+            sym AS MATERIALIZED (
+              SELECT i, j, CAST(sum(w) AS BIGINT) AS w FROM (
+                SELECT i, j, w FROM cells
+                UNION ALL
+                SELECT j AS i, i AS j, CAST(0 AS BIGINT) AS w FROM cells)
+              GROUP BY i, j),
+            prs AS MATERIALIZED (
+              SELECT s.i, s.j, s.w,
+                     s.w + coalesce(r.w, 0) AS n_ij
+              FROM sym s LEFT JOIN sym r ON s.i = r.j AND s.j = r.i
+              WHERE s.w + coalesce(r.w, 0) > 0),
+            items AS MATERIALIZED (
+              SELECT i, CAST(sum(w) AS BIGINT) AS wins,
+                     CAST(sum(n_ij) AS BIGINT) AS n_comp
+              FROM prs GROUP BY i),
+            kk AS (SELECT count(*) AS k FROM items),
+            r0 AS MATERIALIZED (
+              SELECT i, CAST(greatest({min_a}, {grid} // kk.k) AS HUGEINT)
+                       AS a
+              FROM items CROSS JOIN kk),{",".join(rounds)}
+            SELECT it.i AS item, it.wins, it.n_comp AS n_comparisons,
+                   CAST(r.a AS BIGINT) AS a_grid,
+                   CAST(r.a AS DOUBLE) / {grid} AS strength_q9
+            FROM items it JOIN r{n_rounds} r ON it.i = r.i
+        """
 
 
 @query(oracle=_bt_oracle_sql(6))
@@ -18893,156 +18900,6 @@ def q_t41_stream_bytebpe_fertility(spark, sf):
     return ta.bpe_bytelevel_fertility_finale(snap)
 
 
-def _export_bytebpe_oracle_sql(n_merges: int = 8) -> str:
-    """DuckDB replay of the byte-BPE-denominated training export:
-    the training_export_report prelude verbatim (ascii-project, dedup
-    row_number, word floor, md5 split), then GPT-2 pre-tokens of the
-    projected text, ``n_merges`` merge rounds trained on the TRAIN
-    split's pre-token vocab, the learned rewrites replayed over the
-    FULL corpus vocab, per-doc piece sums, and the identical
-    ceil-division packing totals."""
-    ctes = [
-        r"""d0 AS MATERIALIZED (
-              SELECT doc_id,
-                     regexp_replace(coalesce(text, ''),
-                                    '[^\x20-\x7e]', '', 'g') AS t
-              FROM documents)""",
-        r"""tok AS MATERIALIZED (
-              SELECT doc_id, t,
-                     CASE WHEN length(trim(t)) = 0 THEN 0
-                          ELSE len(string_split_regex(trim(t), '\s+')) END
-                       AS ws
-              FROM d0)""",
-        r"""dd AS MATERIALIZED (
-              SELECT doc_id, t, ws FROM (
-                SELECT doc_id, t, ws,
-                       row_number() OVER (
-                         PARTITION BY
-                           lower(regexp_replace(trim(t), '\s+', ' ', 'g'))
-                         ORDER BY doc_id) AS rn
-                FROM tok) WHERE rn = 1)""",
-        r"""q AS MATERIALIZED (SELECT * FROM dd WHERE ws >= 5)""",
-        r"""sp AS MATERIALIZED (
-              SELECT doc_id, t, ws,
-                     CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)
-                               < '1a'
-                          THEN 'holdout' ELSE 'train' END AS split
-              FROM q)""",
-        f"""bpt AS MATERIALIZED (
-              SELECT doc_id, split, {_GPT2_TOKS_SQL} AS toks
-              FROM (SELECT doc_id, split,
-                           regexp_extract_all(t,
-                             '{_GPT2_PRETOKEN_SQL_RE}', 0) AS tk
-                    FROM sp))""",
-        r"""bstream AS MATERIALIZED (
-              SELECT doc_id, split, unnest(toks) AS w FROM bpt)""",
-        r"""bv0 AS MATERIALIZED (
-              SELECT w, CAST(count(*) AS BIGINT) AS freq,
-                     regexp_replace(hex(encode(w)), '(..)', ' \1 ', 'g')
-                       AS s
-              FROM bstream WHERE split = 'train' GROUP BY w)""",
-    ]
-    for k in range(1, n_merges + 1):
-        ctes.append(
-            f"""bbp{k} AS (
-              SELECT ws[i] AS l, ws[i + 1] AS r,
-                     CAST(sum(freq) AS BIGINT) AS n
-              FROM (SELECT freq, ws,
-                           unnest(generate_series(1, len(ws) - 1)) AS i
-                    FROM (SELECT freq, string_split(trim(s), '  ') AS ws
-                          FROM bv{k - 1})
-                    WHERE len(ws) > 1)
-              GROUP BY l, r),
-            bbm{k} AS MATERIALIZED (
-              SELECT l, r, n FROM bbp{k} ORDER BY n DESC, l, r LIMIT 1),
-            bv{k} AS MATERIALIZED (
-              SELECT freq,
-                     replace(s,
-                       ' ' || coalesce((SELECT l FROM bbm{k}), chr(1))
-                           || '  '
-                           || coalesce((SELECT r FROM bbm{k}), chr(1))
-                           || ' ',
-                       ' ' || coalesce((SELECT l FROM bbm{k}), chr(1))
-                           || coalesce((SELECT r FROM bbm{k}), chr(1))
-                           || ' ') AS s
-              FROM bv{k - 1})"""
-        )
-    fv = [
-        r"""fv0 AS MATERIALIZED (
-              SELECT w,
-                     regexp_replace(hex(encode(w)), '(..)', ' \1 ', 'g')
-                       AS s
-              FROM (SELECT DISTINCT w FROM bstream))"""
-    ]
-    for k in range(1, n_merges + 1):
-        fv.append(
-            f"""fv{k} AS MATERIALIZED (
-              SELECT w,
-                     replace(s,
-                       ' ' || coalesce((SELECT l FROM bbm{k}), chr(1))
-                           || '  '
-                           || coalesce((SELECT r FROM bbm{k}), chr(1))
-                           || ' ',
-                       ' ' || coalesce((SELECT l FROM bbm{k}), chr(1))
-                           || coalesce((SELECT r FROM bbm{k}), chr(1))
-                           || ' ') AS s
-              FROM fv{k - 1})"""
-        )
-    ctes.extend(fv)
-    ctes.append(
-        f"""bseg AS MATERIALIZED (
-              SELECT w, CAST(len(string_split(trim(s), '  ')) AS BIGINT)
-                       AS np
-              FROM fv{n_merges}),
-            bper AS MATERIALIZED (
-              SELECT s.doc_id, any_value(s.split) AS split,
-                     CAST(sum(np) AS BIGINT) AS lm
-              FROM bstream s JOIN bseg USING (w)
-              GROUP BY s.doc_id),
-            pkdoc AS (
-              SELECT split, lm,
-                     CAST((ascii(substr(hh, 1, 1)) * 16
-                           + ascii(substr(hh, 2, 1))) % 4 AS INT) AS shard
-              FROM (SELECT split, lm,
-                           md5(CAST(doc_id AS VARCHAR) || ':epoch0') AS hh
-                    FROM bper WHERE lm > 0)),
-            pksh AS (
-              SELECT split, shard, count(*) AS d,
-                     CAST(sum(lm) AS BIGINT) AS t
-              FROM pkdoc GROUP BY split, shard),
-            pk AS (
-              SELECT split, CAST(sum(d) AS BIGINT) AS n_docs,
-                     CAST(sum(t) AS BIGINT) AS n_tokens,
-                     CAST(sum((t + 255) // 256) AS BIGINT) AS n_seqs
-              FROM pksh GROUP BY split)"""
-    )
-    final = r"""
-        SELECT 'input' AS stage, 'all' AS split,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(coalesce(sum(ws), 0) AS BIGINT) AS n_tokens,
-               CAST(0 AS BIGINT) AS n_seqs
-        FROM tok
-        UNION ALL
-        SELECT 'exact_dedup', 'all', CAST(count(*) AS BIGINT),
-               CAST(coalesce(sum(ws), 0) AS BIGINT), CAST(0 AS BIGINT)
-        FROM dd
-        UNION ALL
-        SELECT 'quality_floor', 'all', CAST(count(*) AS BIGINT),
-               CAST(coalesce(sum(ws), 0) AS BIGINT), CAST(0 AS BIGINT)
-        FROM q
-        UNION ALL
-        SELECT 'split', split, CAST(count(*) AS BIGINT),
-               CAST(sum(ws) AS BIGINT), CAST(0 AS BIGINT)
-        FROM sp GROUP BY split
-        UNION ALL
-        SELECT 'encoded', split, CAST(count(*) AS BIGINT),
-               CAST(sum(lm) AS BIGINT), CAST(0 AS BIGINT)
-        FROM bper GROUP BY split
-        UNION ALL
-        SELECT 'packed', split, n_docs, n_tokens, n_seqs FROM pk"""
-    return "WITH " + ",\n".join(ctes) + "\n" + final
-
-
 def _nndescent_oracle_sql(
     k: int = 6, rounds: int = 2, hops: int = 3, beam: int = 8,
     what: str = "recall",
@@ -19297,6 +19154,156 @@ def _nndescent_oracle_sql(
                       AS BIGINT) / 1e6
                END AS recall_at_10_q6
         FROM nnagg"""
+    return "WITH " + ",\n".join(ctes) + "\n" + final
+
+
+def _export_bytebpe_oracle_sql(n_merges: int = 8) -> str:
+    """DuckDB replay of the byte-BPE-denominated training export:
+    the training_export_report prelude verbatim (ascii-project, dedup
+    row_number, word floor, md5 split), then GPT-2 pre-tokens of the
+    projected text, ``n_merges`` merge rounds trained on the TRAIN
+    split's pre-token vocab, the learned rewrites replayed over the
+    FULL corpus vocab, per-doc piece sums, and the identical
+    ceil-division packing totals."""
+    ctes = [
+        r"""d0 AS MATERIALIZED (
+              SELECT doc_id,
+                     regexp_replace(coalesce(text, ''),
+                                    '[^\x20-\x7e]', '', 'g') AS t
+              FROM documents)""",
+        r"""tok AS MATERIALIZED (
+              SELECT doc_id, t,
+                     CASE WHEN length(trim(t)) = 0 THEN 0
+                          ELSE len(string_split_regex(trim(t), '\s+')) END
+                       AS ws
+              FROM d0)""",
+        r"""dd AS MATERIALIZED (
+              SELECT doc_id, t, ws FROM (
+                SELECT doc_id, t, ws,
+                       row_number() OVER (
+                         PARTITION BY
+                           lower(regexp_replace(trim(t), '\s+', ' ', 'g'))
+                         ORDER BY doc_id) AS rn
+                FROM tok) WHERE rn = 1)""",
+        r"""q AS MATERIALIZED (SELECT * FROM dd WHERE ws >= 5)""",
+        r"""sp AS MATERIALIZED (
+              SELECT doc_id, t, ws,
+                     CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)
+                               < '1a'
+                          THEN 'holdout' ELSE 'train' END AS split
+              FROM q)""",
+        f"""bpt AS MATERIALIZED (
+              SELECT doc_id, split, {_GPT2_TOKS_SQL} AS toks
+              FROM (SELECT doc_id, split,
+                           regexp_extract_all(t,
+                             '{_GPT2_PRETOKEN_SQL_RE}', 0) AS tk
+                    FROM sp))""",
+        r"""bstream AS MATERIALIZED (
+              SELECT doc_id, split, unnest(toks) AS w FROM bpt)""",
+        r"""bv0 AS MATERIALIZED (
+              SELECT w, CAST(count(*) AS BIGINT) AS freq,
+                     regexp_replace(hex(encode(w)), '(..)', ' \1 ', 'g')
+                       AS s
+              FROM bstream WHERE split = 'train' GROUP BY w)""",
+    ]
+    for k in range(1, n_merges + 1):
+        ctes.append(
+            f"""bbp{k} AS (
+              SELECT ws[i] AS l, ws[i + 1] AS r,
+                     CAST(sum(freq) AS BIGINT) AS n
+              FROM (SELECT freq, ws,
+                           unnest(generate_series(1, len(ws) - 1)) AS i
+                    FROM (SELECT freq, string_split(trim(s), '  ') AS ws
+                          FROM bv{k - 1})
+                    WHERE len(ws) > 1)
+              GROUP BY l, r),
+            bbm{k} AS MATERIALIZED (
+              SELECT l, r, n FROM bbp{k} ORDER BY n DESC, l, r LIMIT 1),
+            bv{k} AS MATERIALIZED (
+              SELECT freq,
+                     replace(s,
+                       ' ' || coalesce((SELECT l FROM bbm{k}), chr(1))
+                           || '  '
+                           || coalesce((SELECT r FROM bbm{k}), chr(1))
+                           || ' ',
+                       ' ' || coalesce((SELECT l FROM bbm{k}), chr(1))
+                           || coalesce((SELECT r FROM bbm{k}), chr(1))
+                           || ' ') AS s
+              FROM bv{k - 1})"""
+        )
+    fv = [
+        r"""fv0 AS MATERIALIZED (
+              SELECT w,
+                     regexp_replace(hex(encode(w)), '(..)', ' \1 ', 'g')
+                       AS s
+              FROM (SELECT DISTINCT w FROM bstream))"""
+    ]
+    for k in range(1, n_merges + 1):
+        fv.append(
+            f"""fv{k} AS MATERIALIZED (
+              SELECT w,
+                     replace(s,
+                       ' ' || coalesce((SELECT l FROM bbm{k}), chr(1))
+                           || '  '
+                           || coalesce((SELECT r FROM bbm{k}), chr(1))
+                           || ' ',
+                       ' ' || coalesce((SELECT l FROM bbm{k}), chr(1))
+                           || coalesce((SELECT r FROM bbm{k}), chr(1))
+                           || ' ') AS s
+              FROM fv{k - 1})"""
+        )
+    ctes.extend(fv)
+    ctes.append(
+        f"""bseg AS MATERIALIZED (
+              SELECT w, CAST(len(string_split(trim(s), '  ')) AS BIGINT)
+                       AS np
+              FROM fv{n_merges}),
+            bper AS MATERIALIZED (
+              SELECT s.doc_id, any_value(s.split) AS split,
+                     CAST(sum(np) AS BIGINT) AS lm
+              FROM bstream s JOIN bseg USING (w)
+              GROUP BY s.doc_id),
+            pkdoc AS (
+              SELECT split, lm,
+                     CAST((ascii(substr(hh, 1, 1)) * 16
+                           + ascii(substr(hh, 2, 1))) % 4 AS INT) AS shard
+              FROM (SELECT split, lm,
+                           md5(CAST(doc_id AS VARCHAR) || ':epoch0') AS hh
+                    FROM bper WHERE lm > 0)),
+            pksh AS (
+              SELECT split, shard, count(*) AS d,
+                     CAST(sum(lm) AS BIGINT) AS t
+              FROM pkdoc GROUP BY split, shard),
+            pk AS (
+              SELECT split, CAST(sum(d) AS BIGINT) AS n_docs,
+                     CAST(sum(t) AS BIGINT) AS n_tokens,
+                     CAST(sum((t + 255) // 256) AS BIGINT) AS n_seqs
+              FROM pksh GROUP BY split)"""
+    )
+    final = r"""
+        SELECT 'input' AS stage, 'all' AS split,
+               CAST(count(*) AS BIGINT) AS n_docs,
+               CAST(coalesce(sum(ws), 0) AS BIGINT) AS n_tokens,
+               CAST(0 AS BIGINT) AS n_seqs
+        FROM tok
+        UNION ALL
+        SELECT 'exact_dedup', 'all', CAST(count(*) AS BIGINT),
+               CAST(coalesce(sum(ws), 0) AS BIGINT), CAST(0 AS BIGINT)
+        FROM dd
+        UNION ALL
+        SELECT 'quality_floor', 'all', CAST(count(*) AS BIGINT),
+               CAST(coalesce(sum(ws), 0) AS BIGINT), CAST(0 AS BIGINT)
+        FROM q
+        UNION ALL
+        SELECT 'split', split, CAST(count(*) AS BIGINT),
+               CAST(sum(ws) AS BIGINT), CAST(0 AS BIGINT)
+        FROM sp GROUP BY split
+        UNION ALL
+        SELECT 'encoded', split, CAST(count(*) AS BIGINT),
+               CAST(sum(lm) AS BIGINT), CAST(0 AS BIGINT)
+        FROM bper GROUP BY split
+        UNION ALL
+        SELECT 'packed', split, n_docs, n_tokens, n_seqs FROM pk"""
     return "WITH " + ",\n".join(ctes) + "\n" + final
 
 

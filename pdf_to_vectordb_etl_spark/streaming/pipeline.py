@@ -986,11 +986,14 @@ def stream_bloom_dedup_ingest(
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         seen = corpus_digests.select("digest")
-        try:
-            prev = spark.read.parquet(f"{out_path}/_digests")
+        # only "no digests yet" starts from the corpus alone; a read
+        # error on an existing digest table fails the stream instead of
+        # silently re-admitting every digest it holds
+        digests = f"{out_path}/_digests"
+        fs, jvm = _hadoop_fs(spark, digests)
+        if fs.exists(jvm.org.apache.hadoop.fs.Path(digests)):
+            prev = spark.read.parquet(digests)
             seen = seen.unionByName(prev.select("digest"))
-        except Exception:  # noqa: BLE001 — first batch: no digests yet
-            pass
         admitted = incremental_exact_dedup_bloom(
             batch_df,
             seen.select(F.col("digest")),

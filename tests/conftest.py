@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
 import pytest
@@ -26,6 +27,8 @@ def spark():
         extra_conf={"spark.sql.warehouse.dir": warehouse},
     )
     yield spark
+    spark.stop()
+    shutil.rmtree(warehouse)
 
 
 @pytest.fixture(scope="session")

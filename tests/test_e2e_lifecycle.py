@@ -4,6 +4,10 @@ QDvector_search, reference pdf_to_qdrant_etl.py:107-159)."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_to_vectordb_etl_spark import sinks
@@ -87,6 +91,65 @@ def test_registry_integrity():
     # pin the total so README/COVERAGE counts can't drift silently —
     # update BOTH the docs and this number when adding queries
     assert len(q) == 404, f"registry has {len(q)} queries; docs say 404"
+
+
+def test_registry_rejects_bad_registrations(monkeypatch):
+    """``@query`` raises on a duplicate key, on a name without the
+    ``q_`` prefix and unless exactly one of ``oracle``/``oracle_of`` is
+    given, and inserts nothing when it does; an ``oracle_of`` naming no
+    oracled key makes ``oracle_sql()`` raise."""
+    import __spark_entry__ as entry
+
+    n = len(entry.queries())
+
+    def q_s1_scan_pruned_projection(spark, sf):
+        raise AssertionError("never registered")
+
+    def scan_pruned_projection(spark, sf):
+        raise AssertionError("never registered")
+
+    with pytest.raises(ValueError, match="twice"):
+        entry.query(oracle="SELECT 1")(q_s1_scan_pruned_projection)
+    assert len(entry.queries()) == n
+    with pytest.raises(ValueError, match="q_"):
+        entry.query(oracle="SELECT 1")(scan_pruned_projection)
+    assert len(entry.queries()) == n
+    with pytest.raises(TypeError):
+        entry.query()
+    with pytest.raises(TypeError):
+        entry.query(oracle="x", oracle_of="y")
+    assert len(entry.queries()) == len(entry.oracle_sql()) == n
+
+    # on copies of the registry, so the module's own stays at n keys
+    for name in ("_QUERIES", "_ORACLES", "_ORACLE_OF"):
+        monkeypatch.setattr(entry, name, dict(getattr(entry, name)))
+
+    def q_registry_probe_alias(spark, sf):
+        raise AssertionError("never run")
+
+    entry.query(oracle_of="t7_stream_sessionize")(q_registry_probe_alias)
+    with pytest.raises(KeyError, match="t7_stream_sessionize"):
+        entry.oracle_sql()
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "o7_stats_csv_roundtrip",
+        "t10_stream_cdc",
+        "t13_stream_cusum",
+        "t30_stream_bloom_dedup",
+    ],
+)
+def test_query_removes_its_data_dir(spark, sf_dir, tmp_path, monkeypatch, key):
+    """Queries that write a data dir materialise their result and
+    remove the dir before they return; the rows outlive it."""
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = entry.queries()[key](spark, sf_dir).collect()
+    assert rows
+    assert os.listdir(tmp_path) == []
 
 
 def test_curate_corpus_end_to_end(spark, sf_dir):

@@ -89,6 +89,38 @@ def test_t30_second_run_admits_nothing_new(spark, sf_dir, tmp_path):
     assert n1 > 0 and n2 == n1
 
 
+def test_t30_corrupt_digest_table_fails_the_stream(spark, sf_dir, tmp_path):
+    """An existing but unreadable ``_digests`` table must fail the
+    stream, not be read as "no digests yet" (which would re-admit every
+    digest it holds)."""
+    import pytest
+
+    from pdf_to_vectordb_etl_spark.operators import dedup
+    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
+        stream_bloom_dedup_ingest,
+    )
+
+    docs = load(spark, sf_dir, "documents").limit(60)
+    src = str(tmp_path / "src")
+    docs.coalesce(1).write.parquet(src)
+    schema = spark.read.parquet(src).schema
+    out = tmp_path / "out"
+    no_corpus = dedup.content_digests(docs.limit(0))
+
+    def run(ck):
+        stream = spark.readStream.schema(schema).parquet(src)
+        await_stream(
+            stream_bloom_dedup_ingest(stream, no_corpus, str(out), str(tmp_path / ck))
+        )
+
+    run("ck1")
+    parts = sorted((out / "_digests").glob("part-*.parquet"))
+    assert parts
+    parts[0].write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet|FileReadException"):
+        run("ck2")
+
+
 def test_fleiss_kappa_hand_fixture(spark):
     """Every item rated a,a,a,b,b: P_i = (9+4-5)/20 = 0.4 exactly,
     P_e = 0.6^2+0.4^2 = 0.52, kappa = -0.12/0.48 = -0.25; a singleton

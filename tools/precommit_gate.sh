@@ -2,7 +2,7 @@
 # The full local correctness gate — run before any commit that touches
 # queries, oracles, or operators. Mirrors what the driver grades plus
 # the two surfaces the driver can't see (second SF, degenerate data):
-# 274 of the 324 registry queries are NOT in the driver's fixed 50-key
+# 354 of the 404 registry queries are NOT in the driver's fixed 50-key
 # snapshot, so this script is the only thing standing between an edit
 # to one of them and a silently-shipped regression.
 #
