@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.textops import scrub_long_lines
 from ..schemas import SUBJECT_RANGES
+from .skew import with_salt
 
 ANSWER_MISS_SENTINEL = "não achou a questão"  # reference enem_pdf_extractor.py:210,:227
 
@@ -266,7 +267,8 @@ def salted_join(
     IDENTICAL to the plain join — only the physical distribution
     changes — so any SQL engine replays it as the unsalted join.
 
-    The salt is ``xxhash64(all big columns) % n_salts`` — no RNG, so
+    The salt is ``xxhash64(all big columns) % n_salts``
+    (:func:`skew.with_salt`) — no RNG, so
     task retries and re-runs salt identically (the repo's md5/xxhash
     determinism contract). Rows that are full duplicates share a
     salt; if your skew IS duplicate rows, aggregate first.
@@ -281,10 +283,7 @@ def salted_join(
     small-side rows n_salts times."""
     if how not in ("inner", "left"):
         raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    salt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(n_salts)
-    ).cast("int")
-    b = big.withColumn("_salt", salt)
+    b = with_salt(big, on[0], n_salts)
     s = small.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     ).withColumn("_salt", F.col("_salt").cast("int"))

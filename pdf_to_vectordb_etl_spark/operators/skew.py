@@ -2,8 +2,9 @@
 
 AQE's skew-join splitting (on in session.py) handles sort-merge joins
 whose *partitions* are skewed; these helpers cover the cases AQE cannot:
-a broadcast-infeasible hot-key join, and a hot-key aggregation whose
-map-side combine is defeated by one giant group.
+the salt of a broadcast-infeasible hot-key join (``joins.salted_join``),
+and a hot-key aggregation whose map-side combine is defeated by one
+giant group.
 
 Salting trades one narrow extra column + a small-side replication
 factor for an even key distribution — deterministic (pmod of xxhash64),
@@ -21,30 +22,6 @@ def with_salt(df: DataFrame, key: str, buckets: int, salt_col: str = "_salt") ->
     ``buckets`` shuffle partitions."""
     nonce = F.xxhash64(*[F.col(c) for c in df.columns])
     return df.withColumn(salt_col, F.pmod(nonce, F.lit(buckets)).cast("int"))
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: list[str] | str,
-    buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join resilient to hot keys on the big side.
-
-    big gets a deterministic salt; small is replicated ``buckets``
-    times; the join key becomes (key..., salt) so one hot key's rows
-    spread over ``buckets`` tasks instead of one straggler. Use when the
-    small side is too big to broadcast but small enough to replicate.
-
-    Delegates to :func:`joins.salted_join` (the single
-    implementation), which also enforces the inner/left-only guard: a
-    right/full join against the replicated small side would duplicate
-    every unmatched small-side row ``buckets`` times."""
-    from pdf_to_vectordb_etl_spark.operators.joins import salted_join as _sj
-
-    keys = [on] if isinstance(on, str) else list(on)
-    return _sj(big, small, keys, n_salts=buckets, how=how)
 
 
 def two_phase_count(

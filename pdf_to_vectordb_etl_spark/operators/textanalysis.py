@@ -812,84 +812,6 @@ def _merge_rounds(
     return merges, vocab
 
 
-def _viterbi_best(occ: DataFrame, pieces: DataFrame, inf: int = 1 << 20) -> DataFrame:
-    """Shared integer-exact Viterbi segmenter: ``occ`` is the span
-    table (w, wlen, i, j, piece); ``pieces`` is (piece, n). Returns
-    (w, wlen, best struct<k, negs, ps>) per word that has at least one
-    in-vocab span — k = piece count of the optimal segmentation
-    (inf marker if no full cover exists), objective = min pieces, max
-    summed frequency, lexicographically least path (bit-deterministic
-    in any engine; see unigram_lm_train)."""
-    edges = (
-        occ.join(pieces, "piece")
-        .groupBy("w", "wlen")
-        .agg(
-            F.collect_list(
-                F.struct(F.col("i"), F.col("j"), F.col("n"), F.col("piece"))
-            ).alias("edges")
-        )
-    )
-    dp_init = F.transform(
-        F.sequence(F.lit(0), F.col("wlen")),
-        lambda p: F.struct(
-            F.when(p == 0, 0).otherwise(inf).alias("k"),
-            F.lit(0).cast("long").alias("negs"),
-            F.array().cast("array<string>").alias("ps"),
-        ),
-    )
-
-    def dp_step(dp, j):
-        # array_min over the mapped candidates is NULL exactly when no
-        # edge ends at j from a reachable start — one expression serves
-        # as both the emptiness test and the value. It is BOUND ONCE as
-        # a lambda variable via the single-element-transform trick (the
-        # cdc_chunks lesson: lambda-HOF exprs get no codegen
-        # subexpression elimination, so a bare reference in both the
-        # condition and the value would run the filter+min twice per
-        # step).
-        best = F.array_min(
-            F.transform(
-                F.filter(
-                    F.col("edges"),
-                    lambda e: (e["j"] == j)
-                    & (F.element_at(dp, e["i"] + 1)["k"] < inf),
-                ),
-                lambda e: F.struct(
-                    (F.element_at(dp, e["i"] + 1)["k"] + 1).alias("k"),
-                    (
-                        F.element_at(dp, e["i"] + 1)["negs"] - e["n"]
-                    ).alias("negs"),
-                    F.array_append(
-                        F.element_at(dp, e["i"] + 1)["ps"], e["piece"]
-                    ).alias("ps"),
-                ),
-            )
-        )
-        return F.element_at(
-            F.transform(
-                F.array(best),
-                lambda b: F.transform(
-                    F.sequence(F.lit(0), F.col("wlen")),
-                    lambda p: F.when(
-                        (p == j) & b.isNotNull(), b
-                    ).otherwise(F.element_at(dp, p + 1)),
-                ),
-            ),
-            1,
-        )
-
-    return edges.select(
-        "w",
-        "wlen",
-        F.aggregate(
-            F.sequence(F.lit(1), F.col("wlen")),
-            dp_init,
-            dp_step,
-            lambda dp: F.element_at(dp, F.col("wlen") + 1),
-        ).alias("best"),
-    )
-
-
 def _word_spans(words: DataFrame, max_piece_len: int) -> DataFrame:
     """(w, wlen, i, j, piece) span table: every substring of length
     1..max_piece_len per word — built with one flatten/explode, piece
@@ -914,72 +836,46 @@ def _word_spans(words: DataFrame, max_piece_len: int) -> DataFrame:
     )
 
 
-def unigram_seed_pieces(
-    df: DataFrame | None = None,
-    vocab_size: int = 64,
-    max_piece_len: int = 4,
-    max_word_len: int = 12,
-    min_count: int = 2,
-    seed_cap_factor: int = 4,
-    text_col: str = "text",
-    occ: DataFrame | None = None,
-) -> DataFrame:
-    """The substring candidate vocabulary both the unigram trainer and
-    the encode-with-seed path start from: every single character seen
-    in the (length-capped) word vocab, plus the top
-    ``seed_cap_factor * vocab_size`` multi-char substrings with corpus
-    frequency >= ``min_count`` (count desc, piece asc — deterministic).
-    Returns a checkpointed (piece, n) table, <= seed_cap + |alphabet|
-    rows. Pass a precomputed ``occ`` span table (with a freq column) to
-    skip the word collapse — the trainer shares its own."""
-    if occ is None:
-        words = (
-            df.select(
-                F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias(
-                    "w"
-                )
-            )
-            .filter((F.length("w") > 0) & (F.length("w") <= max_word_len))
-            .groupBy("w")
-            .agg(F.count(F.lit(1)).alias("freq"))
-            .withColumn("wlen", F.length("w").cast("int"))
+def _word_vocab(df: DataFrame, text_col: str, max_word_len: int) -> DataFrame:
+    """(w, freq, wlen) word-frequency vocab of the lower-cased,
+    whitespace-split corpus, words longer than ``max_word_len``
+    excluded — the one corpus collapse of the unigram and wordpiece
+    trainers (vocab is sublinear in corpus size)."""
+    return (
+        df.select(
+            F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("w")
         )
-        # bounded driver fast path (r10, same contract as the unigram
-        # trainer): seed counts over the collected word vocab in Python
-        # instead of the span explode + agg + TakeOrdered chain
-        w_rows = bounded_collect(words, 200_000)
-        if w_rows is not None:
-            chars, multi = _seed_counts_driver(
-                [(r["w"], int(r["freq"])) for r in w_rows],
-                max_piece_len,
-                min_count,
-                seed_cap_factor * vocab_size,
-            )
-            return df.sparkSession.createDataFrame(
-                chars + multi, "piece string, n long"
-            ).localCheckpoint(eager=True)
-        occ = _word_spans(words, max_piece_len)
-    seed_counts = occ.groupBy("piece").agg(
-        F.sum("freq").cast("long").alias("n")
+        .filter((F.length("w") > 0) & (F.length("w") <= max_word_len))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("freq"))
+        .withColumn("wlen", F.length("w").cast("int"))
     )
-    chars = seed_counts.filter(F.length("piece") == 1)
-    multi = (
-        seed_counts.filter(
-            (F.length("piece") > 1) & (F.col("n") >= min_count)
-        )
-        .orderBy(F.desc("n"), "piece")
-        .limit(seed_cap_factor * vocab_size)
-    )
-    return chars.unionByName(multi).localCheckpoint(eager=True)
 
 
-def _seed_counts_driver(wf, max_piece_len, min_count, seed_cap):
-    """The unigram seed vocabulary over a collected (word, freq) list —
-    the driver twin of :func:`unigram_seed_pieces`' distributed agg:
-    every substring of length <= ``max_piece_len`` summed by word
-    frequency, then (chars, multi) where chars keeps every single
-    character and multi the top ``seed_cap`` multi-char pieces with
-    count >= ``min_count`` by (count desc, piece asc)."""
+def _seed_pieces(words, wf, max_piece_len, min_count, seed_cap):
+    """The unigram seed vocabulary as a list of (piece, n): every
+    substring of length <= ``max_piece_len`` summed by word frequency,
+    then every single character plus the top ``seed_cap`` multi-char
+    pieces with count >= ``min_count`` by (count desc, piece asc).
+    Counted in Python over the collected (word, freq) list ``wf`` when
+    there is one, else by the span explode + one aggregate over the
+    ``words`` frame, whose <= seed_cap + |alphabet| selected rows are
+    collected."""
+    if wf is None:
+        seed_counts = (
+            _word_spans(words, max_piece_len)
+            .groupBy("piece")
+            .agg(F.sum("freq").cast("long").alias("n"))
+        )
+        multi = (
+            seed_counts.filter(
+                (F.length("piece") > 1) & (F.col("n") >= min_count)
+            )
+            .orderBy(F.desc("n"), "piece")
+            .limit(seed_cap)
+        )
+        chars = seed_counts.filter(F.length("piece") == 1)
+        return [tuple(r) for r in chars.unionByName(multi).collect()]
     seed: dict = {}
     for w, f in wf:
         L = len(w)
@@ -992,13 +888,51 @@ def _seed_counts_driver(wf, max_piece_len, min_count, seed_cap):
         ((p, n) for p, n in seed.items() if len(p) > 1 and n >= min_count),
         key=lambda x: (-x[1], x[0]),
     )[:seed_cap]
-    return chars, multi
+    return chars + multi
+
+
+def unigram_seed_pieces(
+    df: DataFrame,
+    vocab_size: int = 64,
+    max_piece_len: int = 4,
+    max_word_len: int = 12,
+    min_count: int = 2,
+    seed_cap_factor: int = 4,
+    text_col: str = "text",
+) -> DataFrame:
+    """The substring candidate vocabulary both the unigram trainer and
+    the encode-with-seed path start from: every single character seen
+    in the (length-capped) word vocab, plus the top
+    ``seed_cap_factor * vocab_size`` multi-char substrings with corpus
+    frequency >= ``min_count`` (count desc, piece asc — deterministic).
+    Returns a (piece, n) table of <= seed_cap + |alphabet| local
+    rows."""
+    import pandas as pd
+
+    words = _word_vocab(df, text_col, max_word_len)
+    # bounded driver fast path (r10, same contract as the unigram
+    # trainer): seed counts over the collected word vocab in Python
+    # instead of the span explode + agg + TakeOrdered chain
+    w_rows = bounded_collect(words, 200_000)
+    wf = None if w_rows is None else [(r["w"], int(r["freq"])) for r in w_rows]
+    # built from pandas (one Arrow batch), so reading the table needs no
+    # Python worker; a plain row list would be unpickled on every read
+    return df.sparkSession.createDataFrame(
+        pd.DataFrame(
+            _seed_pieces(
+                words, wf, max_piece_len, min_count, seed_cap_factor * vocab_size
+            ),
+            columns=["piece", "n"],
+        ),
+        "piece string, n long",
+    )
 
 
 def _viterbi_k_driver(w, piece_set, max_piece_len, inf):
     """Min-piece-count DP for one word over the in-vocab spans — the
-    ``k`` field of :func:`_viterbi_best`'s objective (the tie fields
-    never change k). Returns k or ``inf`` when no full cover exists."""
+    ``k`` field of :func:`_viterbi_full_driver`'s objective (the tie
+    fields never change k). Returns k or ``inf`` when no full cover
+    exists."""
     L = len(w)
     dp = [0] + [inf] * L
     for j in range(1, L + 1):
@@ -1013,12 +947,12 @@ def _viterbi_k_driver(w, piece_set, max_piece_len, inf):
 
 
 def _viterbi_full_driver(w, piece_n, max_piece_len):
-    """Full (k, negs, ps) Viterbi for one word — the exact
-    :func:`_viterbi_best` objective: min piece count, then max summed
-    frequency (negs = −Σn), then the lexicographically least piece
-    sequence. Python tuple/list comparison reproduces the Spark struct
-    + array<string> ordering (UTF-8 byte order == code-point order).
-    Returns the best tuple or None when no full cover exists."""
+    """Full (k, negs, ps) Viterbi for one word — the unigram
+    objective: min piece count, then max summed frequency
+    (negs = −Σn), then the lexicographically least piece sequence
+    (Python tuple/list comparison is code-point order, which the
+    DuckDB oracle's VARCHAR[] ordering matches). Returns the best
+    tuple or None when no full cover exists."""
     L = len(w)
     dp = [None] * (L + 1)
     dp[0] = (0, 0, [])
@@ -1037,6 +971,44 @@ def _viterbi_full_driver(w, piece_n, max_piece_len):
                 best = cand
         dp[j] = best
     return dp[L]
+
+
+def _viterbi_recount(wf, piece_n, max_piece_len):
+    """One hard-EM count step over (word, freq) pairs: every piece of
+    a word's :func:`_viterbi_full_driver` segmentation gains the word's
+    frequency; words without a full cover add nothing. Returns
+    {piece: count}. The driver runs it over the whole collected vocab,
+    the executors over their partitions of it."""
+    recount: dict = {}
+    for w, f in wf:
+        best = _viterbi_full_driver(w, piece_n, max_piece_len)
+        if best is None:
+            continue
+        for p in best[2]:
+            recount[p] = recount.get(p, 0) + f
+    return recount
+
+
+def _viterbi_recount_executors(words, piece_n, max_piece_len):
+    """:func:`_viterbi_recount` in ``mapInPandas`` over the (w, freq)
+    word frame — the piece dict travels in the task closure — with the
+    per-partition counts summed by one groupBy of <= |pieces| rows."""
+    import pandas as pd
+
+    def run(batches):
+        wf = (p for b in batches for p in zip(b["w"], b["freq"].tolist()))
+        counts = _viterbi_recount(wf, piece_n, max_piece_len)
+        if counts:
+            yield pd.DataFrame({"piece": list(counts), "n": list(counts.values())})
+
+    rows = (
+        words.select("w", "freq")
+        .mapInPandas(run, "piece string, n long")
+        .groupBy("piece")
+        .agg(F.sum("n").cast("long").alias("n"))
+        .collect()
+    )
+    return {r["piece"]: r["n"] for r in rows}
 
 
 def unigram_lm_train(
@@ -1070,59 +1042,54 @@ def unigram_lm_train(
 
     Scale shape: the corpus collapses ONCE to the word-frequency vocab
     (the bpe_train_merges contract; vocab is sublinear in corpus
-    size); every round runs on vocab rows only — one bounded position
-    explode (≤ max_word_len·max_piece_len edges/word), one equi-join
-    against the ≤ seed_cap piece table, one per-word array-HOF DP
-    (≤ max_word_len² cells), one hash recount — with the piece table
-    localCheckpointed per round (the iterative-lineage rule). Words
+    size); every round runs on vocab rows only — one per-word Python
+    DP (≤ max_word_len·max_piece_len cells) against the ≤ seed_cap
+    piece table, one hash recount. The piece table stays on the
+    driver between rounds (it is bounded by construction). Words
     longer than ``max_word_len`` are excluded from training (the
     SentencePiece max-sentence-length analogue); single-char pieces
     are always retained so every word stays segmentable."""
-    inf = 1 << 20
-    words = (
-        df.select(
-            F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("w")
-        )
-        .filter((F.length("w") > 0) & (F.length("w") <= max_word_len))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .withColumn("wlen", F.length("w").cast("int"))
-        .localCheckpoint(eager=True)
-    )
-    # bounded driver fast path (r10, the merge-loop contract): below
-    # the word-vocab cap the seed counts and every hard-EM round run
-    # in Python over the collected vocab — the same integer Viterbi
-    # objective (_viterbi_full_driver), the same (n desc, piece) prune
-    # order, the same floor p_q6 — while the distributed rounds below
-    # pay a span explode + join + HOF DP + checkpoint per round at
-    # vocab size (placement: bounded_collect).
     import math as _math
 
+    import pandas as pd
+
+    words = _word_vocab(df, text_col, max_word_len)
+    # one kernel, two placements: below the word-vocab cap the seed
+    # counts and every round's segmentation run in Python over the
+    # collected vocab; above it (or under a non-auto
+    # SPARK_GRAFT_PLACEMENT, see bounded_collect) the same recount runs
+    # in mapInPandas over the persisted word frame. Seed selection,
+    # the (n desc, piece) prune and the floor p_q6 are shared.
     w_rows = bounded_collect(words, fast_path_max_vocab)
     if w_rows is not None:
         wf = [(r["w"], int(r["freq"])) for r in w_rows]
-        chars, multi = _seed_counts_driver(
-            wf, max_piece_len, min_count, seed_cap_factor * vocab_size
+        recount = lambda pn: _viterbi_recount(wf, pn, max_piece_len)
+    else:
+        wf = None
+        words = words.persist()  # read by the seed and by every round
+        recount = lambda pn: _viterbi_recount_executors(words, pn, max_piece_len)
+    try:
+        piece_n = dict(
+            _seed_pieces(
+                words, wf, max_piece_len, min_count, seed_cap_factor * vocab_size
+            )
         )
-        piece_n = dict(chars)
-        piece_n.update(dict(multi))
         for _ in range(n_rounds):
-            recount: dict = {}
-            for w, f in wf:
-                best = _viterbi_full_driver(w, piece_n, max_piece_len)
-                if best is None:
-                    continue
-                for p in best[2]:
-                    recount[p] = recount.get(p, 0) + f
-            kept = {p: recount.get(p, 0) for p in piece_n if len(p) == 1}
-            for p, n in sorted(
-                ((p, n) for p, n in recount.items() if len(p) > 1),
-                key=lambda x: (-x[1], x[0]),
-            )[:vocab_size]:
-                kept[p] = n
+            counts = recount(piece_n)
+            kept = {p: counts.get(p, 0) for p in piece_n if len(p) == 1}
+            kept.update(
+                sorted(
+                    ((p, n) for p, n in counts.items() if len(p) > 1),
+                    key=lambda x: (-x[1], x[0]),
+                )[:vocab_size]
+            )
             piece_n = kept
-        total = sum(piece_n.values())
-        return df.sparkSession.createDataFrame(
+    finally:
+        if wf is None:
+            words.unpersist()
+    total = sum(piece_n.values())
+    return df.sparkSession.createDataFrame(
+        pd.DataFrame(
             [
                 (
                     p,
@@ -1136,54 +1103,22 @@ def unigram_lm_train(
                 )
                 for p, n in piece_n.items()
             ],
-            "piece string, piece_len int, n long, p_q6 double",
-        )
-    occ = _word_spans(words, max_piece_len)
-    pieces = unigram_seed_pieces(
-        vocab_size=vocab_size,
-        min_count=min_count,
-        seed_cap_factor=seed_cap_factor,
-        occ=occ,
+            columns=["piece", "piece_len", "n", "p_q6"],
+        ),
+        "piece string, piece_len int, n long, p_q6 double",
     )
 
-    for _ in range(n_rounds):
-        best = _viterbi_best(
-            occ.select("w", "wlen", "i", "j", "piece"), pieces, inf
-        )
-        segs = (
-            words.join(best, ["w", "wlen"])
-            .filter(F.col("best.k") < inf)
-            .select("freq", F.col("best.ps").alias("ps"))
-        )
-        recount = (
-            segs.select("freq", F.explode("ps").alias("piece"))
-            .groupBy("piece")
-            .agg(F.sum("freq").cast("long").alias("n"))
-        )
-        kept_chars = (
-            pieces.filter(F.length("piece") == 1)
-            .select("piece")
-            .join(recount, "piece", "left")
-            .select("piece", F.coalesce("n", F.lit(0)).cast("long").alias("n"))
-        )
-        kept_multi = (
-            recount.filter(F.length("piece") > 1)
-            .orderBy(F.desc("n"), "piece")
-            .limit(vocab_size)
-        )
-        pieces = kept_chars.unionByName(kept_multi).localCheckpoint(
-            eager=True
-        )
 
-    total = pieces.agg(F.sum("n")).first()[0] or 0
-    return pieces.select(
-        "piece",
-        F.length("piece").cast("int").alias("piece_len"),
-        "n",
-        F.when(
-            F.lit(total) > 0, F.floor(F.col("n") * 1000000 / F.lit(total)) / 1e6
-        ).otherwise(F.lit(0.0)).alias("p_q6"),
-    )
+def _encode_words(words, piece_set, max_piece_len, inf):
+    """(w, k) for every word with a full piece cover, k its
+    :func:`_viterbi_k_driver` token count — the encode kernel of both
+    placements."""
+    out = []
+    for w in words:
+        k = _viterbi_k_driver(w, piece_set, max_piece_len, inf)
+        if k < inf:
+            out.append((w, k))
+    return out
 
 
 def unigram_lm_encode(
@@ -1206,6 +1141,8 @@ def unigram_lm_encode(
     than ``max_word_len`` or without a full piece cover count as OOV
     (0 tokens). Returns (id, n_words, n_oov_words, n_tokens) for
     every input document (0s for empty docs)."""
+    import pandas as pd
+
     inf = 1 << 20
     # explode_outer keeps empty documents as a single null-word row, so
     # the per-doc aggregate covers them directly — no second corpus
@@ -1224,36 +1161,35 @@ def unigram_lm_encode(
         .withColumn("wlen", F.length("w").cast("int"))
     )
     enc = vocab.filter(F.col("wlen") <= max_word_len)
-    # bounded driver fast path (r10): the per-word min-piece DP runs
-    # in Python over the collected distinct-word vocab and the piece
-    # set (tie fields never change k), and the vocab-sized (w, toks)
-    # map joins back broadcast — the distributed span explode + join +
-    # HOF DP below is the fallback (placement: bounded_collect).
-    per_word = None
-    p_rows = bounded_collect(pieces.select("piece"), 1_000_000)
-    w_rows = (
-        bounded_collect(enc.select("w"), 500_000)
-        if p_rows is not None
-        else None
-    )
+    # one kernel, two placements (tie fields never change k, so the
+    # min-piece DP needs only the piece set, a tokenizer artifact read
+    # with one collect): below the word cap the vocab-sized (w, toks)
+    # map is built on the driver and joins back broadcast; above it
+    # (placement: bounded_collect) the same kernel runs in mapInPandas
+    # with the piece set in the task closure.
+    piece_set = {r["piece"] for r in pieces.select("piece").collect()}
+    w_rows = bounded_collect(enc.select("w"), 500_000)
     if w_rows is not None:
-        piece_set = {r["piece"] for r in p_rows}
-        mapped = []
-        for r in w_rows:
-            k = _viterbi_k_driver(r["w"], piece_set, max_piece_len, inf)
-            if k < inf:
-                mapped.append((r["w"], k))
         per_word = F.broadcast(
-            df.sparkSession.createDataFrame(mapped, "w string, toks int")
+            df.sparkSession.createDataFrame(
+                pd.DataFrame(
+                    _encode_words(
+                        (r["w"] for r in w_rows), piece_set, max_piece_len, inf
+                    ),
+                    columns=["w", "toks"],
+                ),
+                "w string, toks int",
+            )
         )
-    if per_word is None:
-        best = _viterbi_best(
-            _word_spans(enc, max_piece_len), pieces, inf
-        )
-        per_word = best.select(
-            "w",
-            F.when(F.col("best.k") < inf, F.col("best.k")).alias("toks"),
-        )
+    else:
+
+        def run(batches):
+            for pdf in batches:
+                mapped = _encode_words(pdf["w"], piece_set, max_piece_len, inf)
+                if mapped:
+                    yield pd.DataFrame(mapped, columns=["w", "toks"])
+
+        per_word = enc.select("w").mapInPandas(run, "w string, toks int")
     real = F.col("w").isNotNull()
     return (
         stream.join(per_word, "w", "left")
@@ -1274,6 +1210,7 @@ def unigram_lm_encode(
             "n_tokens",
         )
     )
+
 
 def pmi_collocations(
     df: DataFrame,
@@ -1724,16 +1661,7 @@ def wordpiece_vocab(
 
     Scale: the corpus collapses ONCE to the word-frequency vocab; the
     span explosion runs over vocab rows only (sublinear in corpus)."""
-    words = (
-        df.select(
-            F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("w")
-        )
-        .filter((F.length("w") > 0) & (F.length("w") <= max_word_len))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .withColumn("wlen", F.length("w").cast("int"))
-    )
-    occ = _word_spans(words, max_piece_len)
+    occ = _word_spans(_word_vocab(df, text_col, max_word_len), max_piece_len)
     fc = occ.groupBy("piece", (F.col("i") > 0).alias("is_cont")).agg(
         F.sum("freq").cast("long").alias("n")
     )

@@ -12,7 +12,9 @@ placement setting forbids the collect.
 
 - ``auto`` (default) — every bounded collect is allowed;
 - ``distributed`` — no ``driver``-level collect: every family runs its
-  distributed plan (the hop-fused broadcast beam probe still runs);
+  executor placement — a distributed plan, or the driver's own kernel
+  in ``mapInPandas`` (the unigram Viterbi kernels; the hop-fused
+  broadcast beam probe still runs);
 - ``cascade`` — additionally no ``broadcast``-level collect: the beam
   probe runs its per-hop join cascade.
 

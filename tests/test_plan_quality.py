@@ -546,6 +546,17 @@ def test_unigram_train_no_corpus_collect_shape(spark, sf_dir):
     assert "Window" not in plan
 
 
+def test_unigram_encode_executor_placement_maps_in_pandas(
+    spark, sf_dir, monkeypatch
+):
+    # above the word cap the encode runs the driver's min-piece kernel
+    # in mapInPandas over the distinct words — no span cross product
+    monkeypatch.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
+    plan = _plan(_q(spark, sf_dir, "unigram_lm_encode"), "simple")
+    assert "MapInPandas" in plan
+    assert "CartesianProduct" not in plan
+
+
 def test_wordpiece_encode_broadcasts_vocab_no_cartesian(spark, sf_dir):
     # the checkpointed piece table is tiny -> the span⋈vocab join must
     # broadcast, and the greedy map-walk adds no cartesian/window

@@ -775,30 +775,60 @@ def test_knn_shapley_fast_path_equals_distributed(spark, sf_dir, monkeypatch):
     assert fast_all == dist_all and len(fast_all) > len(fast_top)
 
 
+def _persisted_rdd_ids(spark):
+    """Ids of the persisted RDDs the context holds, read after a Python
+    and a JVM GC (dropped DataFrame proxies release their RDDs first).
+    Ids, not a count: RDDs that earlier tests dropped may be released
+    while a test runs, which would hide a new one in a count."""
+    import gc
+    import time
+
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(0.2)
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_unigram_fast_paths_equal_distributed(spark, sf_dir, monkeypatch):
     """Driver-side seed+EM training and the min-piece encode DP must
-    match the distributed span-explode/HOF plans row for row."""
+    match the executor placement (the same kernels in mapInPandas) row
+    for row — on the corpus, on words no piece table covers (a snowman
+    word and a word over max_word_len) and on an empty corpus — and
+    neither placement may leave a persisted RDD behind."""
     from pdf_to_vectordb_etl_spark.operators.textanalysis import (
         unigram_lm_encode,
         unigram_lm_train,
     )
 
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 80)
-    fast_t = sorted(
-        tuple(r) for r in unigram_lm_train(docs, vocab_size=32).collect()
+    with_oov = docs.select("doc_id", "text").unionByName(
+        spark.createDataFrame(
+            [(-1, "the \u2603\u2603 incomprehensibilities"), (-2, "")],
+            "doc_id long, text string",
+        )
     )
-    pieces = unigram_lm_train(docs, vocab_size=32)
-    fast_e = sorted(
-        tuple(r) for r in unigram_lm_encode(docs, pieces).collect()
-    )
+    empty = docs.limit(0)
+
+    def run():
+        pieces = unigram_lm_train(docs, vocab_size=32)
+        pieces_0 = unigram_lm_train(empty, vocab_size=32)
+        return [
+            sorted(tuple(r) for r in frame.collect())
+            for frame in (
+                pieces,
+                unigram_lm_encode(with_oov, pieces),
+                pieces_0,
+                unigram_lm_encode(empty, pieces_0),
+            )
+        ]
+
+    before = _persisted_rdd_ids(spark)
+    fast_t, fast_e, fast_t0, fast_e0 = run()
     monkeypatch.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
-    dist_t = sorted(
-        tuple(r)
-        for r in unigram_lm_train(docs, vocab_size=32).collect()
-    )
-    pieces_d = unigram_lm_train(docs, vocab_size=32)
-    dist_e = sorted(
-        tuple(r) for r in unigram_lm_encode(docs, pieces_d).collect()
-    )
+    dist_t, dist_e, dist_t0, dist_e0 = run()
+    assert _persisted_rdd_ids(spark) <= before  # nothing new left
     assert fast_t == dist_t and len(fast_t) > 0
     assert fast_e == dist_e and len(fast_e) > 0
+    # the snowman word (no piece) and the 21-char word are OOV
+    assert [r[:3] for r in fast_e[:2]] == [(-2, 0, 0), (-1, 3, 2)]
+    assert fast_t0 == dist_t0 == [] and fast_e0 == dist_e0 == []

@@ -7,7 +7,7 @@ import os
 from pyspark.sql import functions as F
 
 from pdf_to_vectordb_etl_spark import sinks
-from pdf_to_vectordb_etl_spark.operators import skew
+from pdf_to_vectordb_etl_spark.operators import joins, skew
 from pdf_to_vectordb_etl_spark.streaming.pipeline import drain_to_memory
 from pdf_to_vectordb_etl_spark.streaming.stateful import running_totals, sessionize
 from tests.conftest import load
@@ -22,7 +22,7 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
     plain = ev.join(dim, "k").agg(F.count("*"), F.sum("v")).first()
-    salted = skew.salted_join(ev, dim, "k", buckets=8).agg(
+    salted = joins.salted_join(ev, dim, ["k"], n_salts=8).agg(
         F.count("*"), F.sum("v")
     ).first()
     assert plain == salted

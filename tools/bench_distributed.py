@@ -50,6 +50,7 @@ KEYS = [
     "bradley_terry",
     "knn_shapley",
     "unigram_lm_train",
+    "unigram_lm_encode",
 ]
 
 _WORKER = r"""

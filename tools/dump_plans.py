@@ -80,7 +80,7 @@ HEADLINE = [
     ("min_k_prob", "r7: broadcast KN model onto the bigram stream; per-doc key-partitioned bottom-k window"),
     ("lang_mix_by_source", "r7: sentence explode -> stateless vote projection -> |sources|x6 cell agg; majority via struct max"),
     ("dedup_incremental_bloom", "r6: broadcast Bloom screen (4 BHJ) gates the anti-join; zero batch-side shuffle before it"),
-    ("unigram_lm_train", "r6: vocab-collapse + per-word HOF Viterbi; no windows, no cartesian"),
+    ("unigram_lm_train", "vocab-collapse + one per-word Python Viterbi kernel (driver, or mapInPandas above the cap); no windows, no cartesian"),
     ("ks_two_sample", "r6: packed global_prefix_sum CDF walk; range partition, no single-partition window"),
     ("query_expansion", "feedback ids broadcast; TakeOrdered on rounded weight, no global sort"),
     ("record_linkage", "blocked equi-join candidates; literal log-weights in one codegen projection"),

@@ -54,7 +54,8 @@ if [[ "${1:-full}" != "quick" ]]; then
   # `distributed` turns off every driver-level collect (NN-descent
   # build + beam probe, merge loop, Bradley-Terry, K-NN Shapley,
   # unigram seed/EM/encode, near-dup components); the beam probe then
-  # takes its hop-fused broadcast path (BSP).
+  # takes its hop-fused broadcast path (BSP), and the unigram family
+  # runs its driver Viterbi kernels in mapInPandas over the words.
   SPARK_GRAFT_PLACEMENT=distributed python tools/check_oracle.py \
     --sf /root/testdata/sf0.001 ann_nndescent_recall ann_tombstone_search \
     bpe_bytelevel_train wordpiece_train bradley_terry knn_shapley \
