@@ -7532,7 +7532,7 @@ def q_curation_pipeline_report(spark, sf):
     # stage — unpersisted, the six report branches re-run the whole
     # prefix (the near-dup CC three times over; measured 9.1 s -> ~3 s
     # at sf0.1). The same persist-the-stage-boundaries trade a 100-TB
-    # run makes (plans/curate.py docstring).
+    # run makes.
     g = g.persist(StorageLevel.MEMORY_AND_DISK)
     d1 = dedup.drop_exact_duplicates(g).persist(StorageLevel.MEMORY_AND_DISK)
     pairs = dedup.ngram_jaccard_pairs(d1, threshold=0.5)
@@ -19686,8 +19686,7 @@ def _nndescent_recall_frame(spark, sf, live_only: bool):
     # floor-division for the q6 grid. Distributed fallback unchanged
     # below (exercised at gate time via SPARK_GRAFT_PLACEMENT=distributed).
     res = _beam_probe_fast_arrays(
-        g, corpus, probes, 5, 12, "embedding", "vec_id",
-        16_000, 20_000, return_panels=True,
+        g, corpus, probes, 5, 12, "embedding", "vec_id", return_panels=True,
     )
     if res is not None:
         import numpy as np

@@ -7,7 +7,6 @@ from .filename import (  # noqa: F401
     year_of,
 )
 from .textops import (  # noqa: F401
-    append_terminator,
     canonical_delim,
     make_question_id,
     page_question_count,

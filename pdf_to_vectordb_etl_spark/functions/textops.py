@@ -39,13 +39,6 @@ def scrub_barcodes(text: Column | str) -> Column:
     return F.regexp_replace(F.regexp_replace(_c(text), _BARCODE_9, ""), _BARCODE_10, "")
 
 
-def append_terminator(text: Column | str) -> Column:
-    """X11 — append a sentinel delimiter so the last question closes
-    (reference :263,:294). Split-based segmentation does not strictly
-    need it; kept for parity with the reference's slicing scheme."""
-    return F.concat(_c(text), F.lit(" " + DELIM))
-
-
 def page_question_count(text: Column | str) -> Column:
     """A1 — number of questions on a page = delimiter occurrences
     (reference :250-252,:291-292). Expects canonicalized text."""

@@ -115,7 +115,7 @@ def sessionize_gaps(
     (same units as ``time_col``). Adds a per-key ``session_id``
     (1-based, in time order).
 
-    Batch twin of streaming/stateful.py's sessionizer: one window
+    Batch twin of the t7 stream sessionizer: one window
     (single shuffle on the key) computes lag-gap flags and their
     running sum — the standard islands formulation, linear per key and
     embarrassingly parallel across keys.

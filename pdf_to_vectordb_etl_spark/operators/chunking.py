@@ -174,9 +174,10 @@ def portable_embedding(text, dim: int = 16, salt: str = "se") -> "F.Column":
 def chunk_units(text, segment_tokens: int | None = None) -> "F.Column":
     """The ONE definition of a document's chunkable units: sentence
     array by default, fixed N-token segments when ``segment_tokens``
-    is set. semantic_chunks and plans/rag share this expression — the
-    (doc, sent_idx) join between them silently corrupts chunk text if
-    two copies of the segmentation ever drift apart."""
+    is set. semantic_chunks builds its units from this expression;
+    anything that joins back to its (doc, sent_idx) keys must reuse it,
+    or chunk text silently corrupts when two copies of the segmentation
+    drift apart."""
     t = F.col(text) if isinstance(text, str) else text
     if segment_tokens:
         toks = F.split(t, r"\s+")
@@ -321,24 +322,6 @@ def content_defined_chunks(
         (F.col("p.lo") + 1).cast("int").alias("start"),
         (F.col("p.hi") - F.col("p.lo")).cast("int").alias("chunk_len"),
         F.md5(chunk).alias("digest"),
-    )
-
-
-def cdc_dedup_stats(chunks: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Corpus dedup accounting over a content-defined chunk table: per
-    duplicated digest, how many copies and how many chars the
-    single-instance store saves. One hash agg on 32-char digests."""
-    return (
-        chunks.groupBy("digest")
-        .agg(
-            F.count("*").alias("n_copies"),
-            F.countDistinct(id_col).alias("n_docs"),
-            F.max("chunk_len").alias("chunk_len"),
-            (
-                (F.count("*") - 1) * F.max("chunk_len")
-            ).alias("dup_chars"),
-        )
-        .filter(F.col("n_copies") > 1)
     )
 
 

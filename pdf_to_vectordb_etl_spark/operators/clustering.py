@@ -267,19 +267,6 @@ def kmeans_fit(
     return centroids
 
 
-def kmeans_predict(
-    df: DataFrame,
-    centroids: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Label a (possibly different) corpus with a fitted model —
-    e.g. assign new documents to existing semantic shards."""
-    return kmeans_assign(
-        df, centroids.select("cluster_id", "centroid"), vec_col, id_col
-    ).select(id_col, "cluster_id")
-
-
 def kcenter_select(
     df: DataFrame,
     k: int = 8,

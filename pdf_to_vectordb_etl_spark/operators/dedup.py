@@ -42,6 +42,9 @@ from ..placement import bounded_collect
 #: observed occupancy is single digits) but bounds the blowup when a
 #: boilerplate template is duplicated millions of times at 100 TB.
 DEFAULT_MAX_BUCKET_SIZE = 512
+#: driver fast-path cap on undirected edges for cluster_pairs'
+#: union-find (placement: bounded_collect)
+DRIVER_MAX_EDGES = 100_000
 
 
 def normalize_text(text, *, lower: bool = True) -> Column:
@@ -272,26 +275,6 @@ def minhash_signatures(
     return ex.groupBy("id").agg(*mins)
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    n_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-) -> DataFrame:
-    """LSH candidate pairs: split the signature into ``bands`` groups of
-    ``n_hashes/bands`` mins, hash each group to one bucket key, and
-    self-equi-join on it. Probability a pair with Jaccard j collides:
-    1-(1-j^r)^b. The join key folds the band index into the bucket hash
-    so one equi-join covers all bands. ``max_bucket_size=None``
-    disables the occupancy cap (the convention every sibling follows —
-    None means uncapped, the default means the 512 star-routing cap)."""
-    sig = minhash_signatures(df, n_hashes, shingle_n, text_col, id_col)
-    return _band_candidates(sig, n_hashes, bands, max_bucket_size)
-
-
 def _band_table(sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
     """(id, bucket) rows: one folded band-bucket hash per band."""
     rows = n_hashes // bands
@@ -367,36 +350,6 @@ def _band_candidates(
     return pairs.groupBy("id_a", "id_b").agg(
         F.min("from_capped_bucket").alias("from_capped_bucket")
     )
-
-
-def lsh_band_plan(
-    threshold: float, n_hashes: int = 32
-) -> tuple[int, int, float, float]:
-    """Pick the band count for a target Jaccard threshold: among the
-    divisors b of ``n_hashes`` (rows r = n_hashes/b, collision
-    probability p(s) = 1 − (1 − s^r)^b), choose the b whose S-curve
-    midpoint (1/b)^(1/r) lands closest to ``threshold`` — the standard
-    LSH tuning rule (Leskovec et al., MMDS ch.3, public). Driver-side
-    pure arithmetic; returns (bands, rows, p_at_threshold,
-    p_at_0.1_below) so callers can eyeball recall vs junk-candidate
-    rate before launching a 100-TB job."""
-    if not 0 < threshold < 1:
-        raise ValueError(f"threshold must be in (0,1), got {threshold}")
-    best = None
-    for b in range(1, n_hashes + 1):
-        if n_hashes % b:
-            continue
-        r = n_hashes // b
-        midpoint = (1.0 / b) ** (1.0 / r)
-        cand = (abs(midpoint - threshold), b, r)
-        if best is None or cand < best:
-            best = cand
-    _, b, r = best
-
-    def p(s: float) -> float:
-        return 1.0 - (1.0 - s**r) ** b
-
-    return b, r, round(p(threshold), 6), round(p(max(threshold - 0.1, 0.01)), 6)
 
 
 def lsh_bucket_stats(
@@ -875,39 +828,24 @@ def simhash_signatures(
     return agg.select("id", sig.alias("simhash"))
 
 
-def simhash_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", shingle_n: int = 2
-) -> DataFrame:
-    """Docs sharing an identical SimHash signature (Hamming distance 0
-    buckets; for radius r, join on r+1 signature segments instead)."""
-    return (
-        simhash_signatures(df, text_col, id_col, shingle_n)
-        .groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.min("id").alias("canonical_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 # ------------------------------------------------ near-dup cluster + drop
 
 def cluster_pairs(
     pairs: DataFrame,
     max_iterations: int = 20,
-    driver_max_edges: int | None = 100_000,
 ) -> DataFrame:
     """Connected components over near-dup pair edges -> (id, cluster_id)
     with cluster_id = the component's minimum member id.
 
-    Small graphs (≤ ``driver_max_edges`` undirected edges — near-dup
+    Small graphs (≤ ``DRIVER_MAX_EDGES`` undirected edges — near-dup
     pair tables are usually tiny relative to the corpus) take a
     driver union-find fast path: ONE count + ONE bounded collect
     replaces ~3 jobs per propagation round (the funnel report spent
     more wall-clock on CC job overhead than on all its real work).
     Identical labels by construction — min member id per component.
-    Pass ``driver_max_edges=None`` (or set a non-auto
-    ``SPARK_GRAFT_PLACEMENT``, see
-    :func:`~pdf_to_vectordb_etl_spark.placement.bounded_collect`) to
-    force the distributed path.
+    ``SPARK_GRAFT_PLACEMENT=distributed`` (see
+    :func:`~pdf_to_vectordb_etl_spark.placement.bounded_collect`)
+    forces the distributed path.
 
     Distributed path — min-label propagation: each round every node
     adopts the smallest label among itself and its neighbours — reach
@@ -933,7 +871,7 @@ def cluster_pairs(
     # ONE probing action (bounded_collect): over the cap, or under a
     # non-auto placement, the distributed path below re-reads the
     # persisted edges
-    rows = bounded_collect(edges, driver_max_edges)
+    rows = bounded_collect(edges, DRIVER_MAX_EDGES)
     if rows is not None:
         from pyspark.sql.types import StructField, StructType
 

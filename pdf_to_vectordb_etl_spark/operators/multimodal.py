@@ -247,16 +247,6 @@ def resize_images(
     return passthrough.unionByName(resized)
 
 
-def _real_feature_kernel(kind: str, payload: bytes) -> list[int]:
-    """Real per-media feature extractor (CLIP/CNN image embedding,
-    mel-spectrogram stats for audio) — import-gated: none of the model
-    runtimes ship in this environment."""
-    raise NotImplementedError(
-        "feature-extraction model runtimes (torch/librosa) are not "
-        "installed; use fake_feature_kernel for the hermetic path"
-    )
-
-
 def fake_feature_kernel(kind: str, payload: bytes, n_dims: int = 16) -> list[int]:
     """Deterministic stand-in feature extractor: the codepoint-bucket
     histogram of the payload decoded as UTF-8 (bucket = min(cp,255)//16

@@ -2,8 +2,8 @@
 
 Delta-expectations / dbt-test class checks for a corpus pipeline: each
 expectation is a boolean Column; ALL expectations evaluate in ONE pass
-(a single aggregate over conditional counts — no per-check scan), and
-enforcement either raises, drops violating rows, or just reports.
+(a single aggregate over conditional counts — no per-check scan) into
+one report row per expectation.
 
 At 100 TB the one-pass property is the whole point: N checks cost one
 scan, and the violation report is N tiny rows on the driver.
@@ -21,16 +21,6 @@ class Expectation:
     name: str
     condition: Column  # True = row passes
     max_violation_rate: float = 0.0  # tolerated fraction of violating rows
-
-
-class ExpectationError(AssertionError):
-    """Raised when an expectation breaches its tolerated violation rate;
-    carries the full report so the failure is actionable."""
-
-    def __init__(self, report: list[dict]):
-        self.report = report
-        breached = [r["name"] for r in report if r["breached"]]
-        super().__init__(f"expectations breached: {breached}; report={report}")
 
 
 def check_report(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
@@ -59,26 +49,6 @@ def check_report(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
             )
         )
     return row.select(F.explode(F.array(*reports)).alias("r")).select("r.*")
-
-
-def enforce(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
-    """Raise :class:`ExpectationError` if any expectation breaches its
-    tolerance; otherwise return ``df`` unchanged. The report costs one
-    aggregate job; the returned frame is untouched (no extra scan on
-    the success path)."""
-    report = [r.asDict() for r in check_report(df, expectations).collect()]
-    if any(r["breached"] for r in report):
-        raise ExpectationError(report)
-    return df
-
-
-def drop_violations(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
-    """Row-level enforcement: keep only rows passing EVERY expectation
-    (NULL condition = violation). One narrow filter, no aggregate."""
-    cond = F.lit(True)
-    for e in expectations:
-        cond = cond & F.coalesce(e.condition, F.lit(False))
-    return df.filter(cond)
 
 
 def k_anonymity_report(

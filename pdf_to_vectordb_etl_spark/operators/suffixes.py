@@ -395,21 +395,6 @@ def repeated_window_starts(
     )
 
 
-def repeated_suffix_groups(
-    ranks: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Suffix-rank groups shared by >1 suffix — i.e. full suffixes that
-    are IDENTICAL strings (the dense-rank ties). One hash agg."""
-    return (
-        ranks.groupBy("srank")
-        .agg(
-            F.count("*").alias("n_suffixes"),
-            F.countDistinct(id_col).alias("n_docs"),
-        )
-        .filter(F.col("n_suffixes") > 1)
-    )
-
-
 def _partition_offsets(sizes) -> tuple[dict, int]:
     """({pid: rows before it}, total) from per-partition (_pid, _n,
     _max) rows in pid order. The numbering counter lives in the low 33

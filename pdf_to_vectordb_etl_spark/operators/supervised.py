@@ -22,6 +22,10 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from pdf_to_vectordb_etl_spark.operators.evaluation import score_bin_histogram
 from pdf_to_vectordb_etl_spark.placement import bounded_collect
 
+#: driver fast-path cap on pair rows for the Bradley–Terry MM rounds
+#: (placement: bounded_collect)
+FAST_PATH_MAX_PAIRS = 200_000
+
 
 def stump_split(
     df: DataFrame,
@@ -362,7 +366,6 @@ def bradley_terry_strengths(
     n_rounds: int = 6,
     grid: int = 10**9,
     min_a: int = 10**3,
-    fast_path_max_pairs: int | None = 200_000,
 ) -> DataFrame:
     """Bradley–Terry preference strengths via Hunter's MM algorithm
     (Bradley & Terry 1952; Hunter 2004 "MM algorithms for generalized
@@ -443,8 +446,9 @@ def bradley_terry_strengths(
     # eager checkpoint of pure planning at item cardinality.
     # Bit-identical trajectory (_bt_rounds_driver); distributed loop
     # below as the fallback.
-    p_rows = bounded_collect(pairs, fast_path_max_pairs)
+    p_rows = bounded_collect(pairs, FAST_PATH_MAX_PAIRS)
     if p_rows is not None:
+        import pandas as pd
         from pyspark.sql.types import (
             DoubleType,
             LongType,
@@ -471,16 +475,19 @@ def bradley_terry_strengths(
             ]
         )
         return cells.sparkSession.createDataFrame(
-            [
-                (
-                    r["i"],
-                    r["wins"],
-                    r["n_comp"],
-                    a_fin[r["i"]],
-                    float(a_fin[r["i"]] / int(grid)),
-                )
-                for r in i_rows
-            ],
+            pd.DataFrame(
+                [
+                    (
+                        r["i"],
+                        r["wins"],
+                        r["n_comp"],
+                        a_fin[r["i"]],
+                        float(a_fin[r["i"]] / int(grid)),
+                    )
+                    for r in i_rows
+                ],
+                columns=out_schema.fieldNames(),
+            ),
             out_schema,
         )
     cur = items.select("i", F.lit(a0).cast("long").alias("a"))

@@ -22,6 +22,10 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "pt": ("o", "que", "de", "em", "uma"),
 }
 
+#: driver fast-path cap on word-vocab rows for the merge-round loop
+#: and the unigram trainer (placement: bounded_collect)
+FAST_PATH_MAX_VOCAB = 200_000
+
 STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is", "it")
 
 
@@ -596,13 +600,18 @@ def bpe_train_merges(
     every other occurrence). Words never contain spaces, so the
     encoding is unambiguous and replays byte-identically in any SQL
     engine with literal replace()."""
+    import pandas as pd
+
     rows = [
         (step, a, b, n)
         for step, a, b, n, _ in _train_merges(df, n_merges, text_col,
                                               likelihood=False)
     ]
+    # built from pandas (one Arrow batch), so reading the table needs no
+    # Python worker; a plain row list would be unpickled on every read
     return df.sparkSession.createDataFrame(
-        rows, "step INT, l STRING, r STRING, n BIGINT"
+        pd.DataFrame(rows, columns=["step", "l", "r", "n"]),
+        "step INT, l STRING, r STRING, n BIGINT",
     )
 
 
@@ -716,7 +725,6 @@ def _merge_rounds(
     n_merges: int,
     likelihood: bool,
     carry: tuple[str, ...] = ("freq",),
-    fast_path_max_vocab: int | None = 200_000,
 ) -> tuple[list[tuple], DataFrame]:
     """The greedy merge-round loop over a pre-built vocab table with a
     ``' sym '`` double-space-wrapped symbol string column ``s`` and a
@@ -728,7 +736,7 @@ def _merge_rounds(
     segmentation — i.e. the trained tokenizer applied to every vocab
     word, which is what an encode pass joins back to the corpus.
 
-    Below ``fast_path_max_vocab`` rows the loop runs on the driver over
+    Below ``FAST_PATH_MAX_VOCAB`` rows the loop runs on the driver over
     the collected vocab (:func:`_merge_rounds_driver` — bit-identical,
     property-pinned): the distributed loop pays one argmax job plus
     one checkpoint job of physical planning per round regardless of
@@ -736,7 +744,7 @@ def _merge_rounds(
     enough to collect. Otherwise — or under a non-auto
     ``SPARK_GRAFT_PLACEMENT`` (:func:`bounded_collect`) — the
     distributed loop below runs."""
-    head = bounded_collect(vocab, fast_path_max_vocab)
+    head = bounded_collect(vocab, FAST_PATH_MAX_VOCAB)
     if head is not None:
         import pandas as pd
         from pyspark.sql.types import StructType
@@ -913,7 +921,7 @@ def unigram_seed_pieces(
     # bounded driver fast path (r10, same contract as the unigram
     # trainer): seed counts over the collected word vocab in Python
     # instead of the span explode + agg + TakeOrdered chain
-    w_rows = bounded_collect(words, 200_000)
+    w_rows = bounded_collect(words, FAST_PATH_MAX_VOCAB)
     wf = None if w_rows is None else [(r["w"], int(r["freq"])) for r in w_rows]
     # built from pandas (one Arrow batch), so reading the table needs no
     # Python worker; a plain row list would be unpickled on every read
@@ -1020,7 +1028,6 @@ def unigram_lm_train(
     max_word_len: int = 12,
     min_count: int = 2,
     seed_cap_factor: int = 4,
-    fast_path_max_vocab: int | None = 200_000,
 ) -> DataFrame:
     """Unigram-LM tokenizer training (SentencePiece-class, Kudo 2018,
     public) — the second of the two tokenizer families next to
@@ -1060,7 +1067,7 @@ def unigram_lm_train(
     # SPARK_GRAFT_PLACEMENT, see bounded_collect) the same recount runs
     # in mapInPandas over the persisted word frame. Seed selection,
     # the (n desc, piece) prune and the floor p_q6 are shared.
-    w_rows = bounded_collect(words, fast_path_max_vocab)
+    w_rows = bounded_collect(words, FAST_PATH_MAX_VOCAB)
     if w_rows is not None:
         wf = [(r["w"], int(r["freq"])) for r in w_rows]
         recount = lambda pn: _viterbi_recount(wf, pn, max_piece_len)
@@ -1809,8 +1816,13 @@ def wordpiece_train_merges(
     Same ``' sym '`` double-space symbol encoding, vocab-collapsed
     corpus, per-round localCheckpoint, and O(n_merges) 1-row driver
     argmax loop as bpe_train_merges (textanalysis.py:497)."""
+    import pandas as pd
+
     return df.sparkSession.createDataFrame(
-        _train_merges(df, n_merges, text_col, likelihood=True),
+        pd.DataFrame(
+            _train_merges(df, n_merges, text_col, likelihood=True),
+            columns=["step", "l", "r", "n", "score_q12"],
+        ),
         "step INT, l STRING, r STRING, n BIGINT, score_q12 BIGINT",
     )
 
@@ -2413,11 +2425,14 @@ def bpe_bytelevel_train_merges(
     Scale shape: identical to bpe_train_merges — corpus collapses once
     to the checkpointed vocab, each round is one agg + one driver
     argmax scalar + one native rewrite."""
+    import pandas as pd
+
     vocab = gpt2_byte_vocab(df, text_col).select("freq", "s")
     merges, _ = _merge_rounds(vocab, n_merges, likelihood=False)
     rows = [(step, a, b, n) for step, a, b, n, _ in merges]
     return df.sparkSession.createDataFrame(
-        rows, "step INT, l STRING, r STRING, n BIGINT"
+        pd.DataFrame(rows, columns=["step", "l", "r", "n"]),
+        "step INT, l STRING, r STRING, n BIGINT",
     )
 
 

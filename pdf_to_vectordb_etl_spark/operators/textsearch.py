@@ -293,42 +293,6 @@ def multi_pattern_hits(
     )
 
 
-def blocklist_filter(
-    docs: DataFrame,
-    patterns: DataFrame,
-    max_hits: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    pattern_col: str = "pattern",
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Drop (well: flag) documents whose total blocklist-hit mass
-    exceeds ``max_hits`` — the standard web-corpus gate composed from
-    :func:`multi_pattern_hits`. With ``weight_col`` on the pattern
-    table, hits are weighted (severity scores); otherwise each
-    occurrence counts 1. Returns every input doc with
-    (total_hits, keep) so the caller can filter or audit."""
-    hits = multi_pattern_hits(docs, patterns, id_col, text_col, pattern_col)
-    if weight_col is not None:
-        w = patterns.select(
-            F.col(pattern_col).alias(pattern_col),
-            F.col(weight_col).alias("_w"),
-        )
-        hits = hits.join(F.broadcast(w), pattern_col).withColumn(
-            "n_hits", F.col("n_hits") * F.col("_w")
-        )
-    per_doc = hits.groupBy(id_col).agg(F.sum("n_hits").alias("total_hits"))
-    return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("total_hits", F.lit(0)).cast("long").alias("total_hits"),
-            (F.coalesce("total_hits", F.lit(0)) <= max_hits).alias("keep"),
-        )
-    )
-
-
 def phrase_search(
     docs: DataFrame,
     phrase: list[str],

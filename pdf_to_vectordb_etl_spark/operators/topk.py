@@ -19,6 +19,16 @@ from ..functions.vector import cosine_similarity
 from ..placement import bounded_collect
 from ..schemas import EMBEDDING_DIM
 
+#: driver fast-path caps of the NN-descent family (placement:
+#: bounded_collect): corpus rows for the graph build and the beam
+#: probe, and probe rows for the beam probe
+FAST_PATH_MAX_NODES = 16_000
+FAST_PATH_MAX_PROBES = 20_000
+#: broadcast caps of the hop-fused beam probe: corpus rows and edges
+#: of the index artifact it ships to the executors
+BSP_MAX_NODES = 100_000
+BSP_MAX_EDGES = 4_000_000
+
 
 def dim_guard(df: DataFrame, vec_col: str, dim: int = EMBEDDING_DIM) -> DataFrame:
     """K2 — reject vectors of the wrong dimensionality (reference
@@ -683,7 +693,6 @@ def nn_descent_graph(
     rounds: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    fast_path_max_nodes: int | None = 16_000,
 ) -> DataFrame:
     """Approximate kNN GRAPH by NN-descent (Dong et al. 2011, public):
     start from a deterministic ring over the id order, then each round
@@ -721,9 +730,9 @@ def nn_descent_graph(
     # numpy — identical graph by construction (integer arithmetic,
     # same tie order; property-pinned), while the Spark loop pays ~1s
     # of physical planning per round regardless of data size. Above
-    # the cap, the distributed join path below runs; distributed tests
-    # pass fast_path_max_nodes=None (placement: bounded_collect).
-    rows = bounded_collect(qv, fast_path_max_nodes)
+    # the cap, or under SPARK_GRAFT_PLACEMENT=distributed, the
+    # distributed join path below runs (placement: bounded_collect).
+    rows = bounded_collect(qv, FAST_PATH_MAX_NODES)
     if rows is not None:
         if len(rows) <= 1:
             return spark.createDataFrame(
@@ -964,7 +973,6 @@ def _beam_probe_driver(src_ids, dst_ids, c_ids, c_mat, p_ids, p_mat, hops, beam)
 
 def _beam_probe_fast_arrays(
     graph, corpus, probes, hops, beam, vec_col, id_col,
-    fast_path_max_nodes, fast_path_max_probes,
     return_panels: bool = False,
 ):
     """Collect-and-run wrapper around :func:`_beam_probe_driver`:
@@ -984,7 +992,7 @@ def _beam_probe_fast_arrays(
         corpus.select(
             F.col(id_col).alias("cid"), _quantize_micro(vec_col).alias("cq")
         ),
-        fast_path_max_nodes,
+        FAST_PATH_MAX_NODES,
     )
     if c_rows is None:
         return None
@@ -992,7 +1000,7 @@ def _beam_probe_fast_arrays(
         probes.select(
             F.col(id_col).alias("qid"), _quantize_micro(vec_col).alias("pq")
         ),
-        fast_path_max_probes,
+        FAST_PATH_MAX_PROBES,
     )
     if p_rows is None:
         return None
@@ -1001,7 +1009,7 @@ def _beam_probe_fast_arrays(
     # edges or a huge k must fall back instead of OOMing the driver.
     # 64 comfortably exceeds every k this engine builds (<= 16).
     g_rows = bounded_collect(
-        graph.select("src", "dst"), fast_path_max_nodes * 64
+        graph.select("src", "dst"), FAST_PATH_MAX_NODES * 64
     )
     if g_rows is None:
         return None
@@ -1070,8 +1078,6 @@ def _beam_probe_bsp(
     beam,
     vec_col,
     id_col,
-    max_nodes: int = 100_000,
-    max_edges: int = 4_000_000,
 ):
     """Hop-FUSED distributed beam probe (r11): the join-cascade
     fallback pays one graph equi-join + one corpus equi-join + one
@@ -1104,13 +1110,13 @@ def _beam_probe_bsp(
         corpus.select(
             F.col(id_col).alias("cid"), _quantize_micro(vec_col).alias("cq")
         ),
-        max_nodes,
+        BSP_MAX_NODES,
         "broadcast",
     )
     if c_rows is None:
         return None
     g_pdf = bounded_collect(
-        graph.select("src", "dst"), max_edges, "broadcast", as_pandas=True
+        graph.select("src", "dst"), BSP_MAX_EDGES, "broadcast", as_pandas=True
     )
     if g_pdf is None:
         return None
@@ -1175,8 +1181,6 @@ def nn_descent_beam_probe(
     k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    fast_path_max_nodes: int | None = 16_000,
-    fast_path_max_probes: int = 20_000,
 ) -> DataFrame:
     """Beam-search probe over a persisted neighbor graph (the greedy
     search of HNSW's base layer, Malkov & Yashunin 2016, public):
@@ -1190,33 +1194,41 @@ def nn_descent_beam_probe(
     probe; the probe panel is broadcast; the only corpus-sized
     relation is the one graph equi-join per hop.
 
-    Below ``fast_path_max_nodes`` corpus rows and
-    ``fast_path_max_probes`` probes, the whole loop runs on the driver
+    Below ``FAST_PATH_MAX_NODES`` corpus rows and
+    ``FAST_PATH_MAX_PROBES`` probes, the whole loop runs on the driver
     over the collected micro matrices + k-bounded edge list
     (:func:`_beam_probe_driver`) — bit-identical visited set,
     property-pinned. Otherwise the hop-FUSED distributed path runs
     when the index artifact fits a broadcast (:func:`_beam_probe_bsp`,
     r11 — one mapInPandas pass instead of a join cascade per hop); the
-    join cascade below is the final fallback. ``SPARK_GRAFT_PLACEMENT``
-    (:func:`bounded_collect`) can force either distributed path."""
-    from pdf_to_vectordb_etl_spark.operators.valuation import (
-        _quantize_micro,
-    )
-    from pyspark.sql import Window
-
-    spark = corpus.sparkSession
+    join cascade (:func:`_beam_probe_distributed`) is the final
+    fallback. ``SPARK_GRAFT_PLACEMENT`` (:func:`bounded_collect`) can
+    force either distributed path."""
     res = _beam_probe_fast_arrays(
-        graph, corpus, probes, hops, beam, vec_col, id_col,
-        fast_path_max_nodes, fast_path_max_probes,
+        graph, corpus, probes, hops, beam, vec_col, id_col
     )
     if res is not None:
         import pandas as pd
 
         qid_a, cand_a, dist_a = res
-        return spark.createDataFrame(
+        return corpus.sparkSession.createDataFrame(
             pd.DataFrame({"qid": qid_a, "cand": cand_a, "dist": dist_a}),
             schema="qid bigint, cand bigint, dist bigint",
         )
+    return _beam_probe_distributed(
+        graph, corpus, probes, hops, beam, vec_col, id_col
+    )
+
+
+def _beam_probe_distributed(graph, corpus, probes, hops, beam, vec_col, id_col):
+    """The beam probe's executor placements: the hop-fused BSP pass
+    when the index artifact fits a broadcast, else the per-hop join
+    cascade. Returns the visited (qid, cand, dist) DataFrame."""
+    from pdf_to_vectordb_etl_spark.operators.valuation import (
+        _quantize_micro,
+    )
+    from pyspark.sql import Window
+
     bsp = _beam_probe_bsp(
         graph, corpus, probes, hops, beam, vec_col, id_col
     )
@@ -1304,8 +1316,7 @@ def nn_descent_incremental_assign(
     from pyspark.sql import Window
 
     res = _beam_probe_fast_arrays(
-        graph, corpus, newvecs, hops, beam, vec_col, id_col,
-        16_000, 20_000,
+        graph, corpus, newvecs, hops, beam, vec_col, id_col
     )
     if res is not None:
         import pandas as pd
@@ -1318,10 +1329,8 @@ def nn_descent_incremental_assign(
             ),
             schema="src bigint, dst bigint, dist bigint",
         )
-    visited = nn_descent_beam_probe(
-        graph, corpus, newvecs,
-        hops=hops, beam=beam, k=k, vec_col=vec_col, id_col=id_col,
-        fast_path_max_nodes=None,
+    visited = _beam_probe_distributed(
+        graph, corpus, newvecs, hops, beam, vec_col, id_col
     )
     w = Window.partitionBy("qid").orderBy("dist", "cand")
     return (
@@ -1513,12 +1522,13 @@ def nn_descent_tombstone_search(
     from pyspark.sql import Window
 
     res = _beam_probe_fast_arrays(
-        graph, corpus, probes, hops, beam, vec_col, id_col,
-        16_000, 20_000,
+        graph, corpus, probes, hops, beam, vec_col, id_col
     )
     visited = None
     if res is not None:
-        d_rows = bounded_collect(deletions.select(F.col(id_col)), 16_000)
+        d_rows = bounded_collect(
+            deletions.select(F.col(id_col)), FAST_PATH_MAX_NODES
+        )
         if d_rows is not None:
             import numpy as np
             import pandas as pd
@@ -1552,10 +1562,8 @@ def nn_descent_tombstone_search(
             schema="qid bigint, cand bigint, dist bigint",
         )
     if visited is None:
-        visited = nn_descent_beam_probe(
-            graph, corpus, probes,
-            hops=hops, beam=beam, k=k, vec_col=vec_col, id_col=id_col,
-            fast_path_max_nodes=None,
+        visited = _beam_probe_distributed(
+            graph, corpus, probes, hops, beam, vec_col, id_col
         )
     alive = visited.join(
         F.broadcast(

@@ -59,6 +59,7 @@ def _knn_shapley_driver(spark, q_rows, t_rows, k, top_n, qid_t, tid_t):
     (−s_pico, tid) top-n cut. Property-pinned against the distributed
     output."""
     import numpy as np
+    import pandas as pd
 
     from pyspark.sql.types import (
         BooleanType,
@@ -85,7 +86,9 @@ def _knn_shapley_driver(spark, q_rows, t_rows, k, top_n, qid_t, tid_t):
         ]
     )
     if not q_rows or not t_rows:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame(
+            pd.DataFrame([], columns=schema.fieldNames()), schema
+        )
     tid = np.array([r["tid"] for r in t_rows], dtype=np.int64)
     tmat = np.array([r["tv"] for r in t_rows], dtype=np.int64)
     ty = [r["ty"] for r in t_rows]
@@ -130,7 +133,11 @@ def _knn_shapley_driver(spark, q_rows, t_rows, k, top_n, qid_t, tid_t):
                 row.append(vranks[int(j)])
             row += [float(int(s[j]) / 1e12), bool(ind[j] == 1)]
             out.append(tuple(row))
-    return spark.createDataFrame(out, schema)
+    # built from pandas (one Arrow batch), so reading the result needs no
+    # Python worker; a plain row list would be unpickled on every read
+    return spark.createDataFrame(
+        pd.DataFrame(out, columns=schema.fieldNames()), schema
+    )
 
 
 def knn_shapley(

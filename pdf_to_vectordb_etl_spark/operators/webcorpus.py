@@ -358,16 +358,6 @@ def exact_substring_dedup(
     )
 
 
-def domain_stats(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Docs per registrable domain — the input to per-domain capping
-    (curation.cap_per_group) and crawl-skew review. One hash agg."""
-    return (
-        df.withColumn("_domain", registrable_domain(F.col(url_col)))
-        .groupBy(F.col("_domain").alias("domain"))
-        .agg(F.count("*").alias("n_docs"))
-    )
-
-
 #: 1:1 accent-fold pairs (multi-char expansions like ß→ss are out of
 #: scope for translate; they belong to a locale-aware pass). Kept as
 #: pairs so the from/to strings can never drift out of alignment, and

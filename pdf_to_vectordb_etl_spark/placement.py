@@ -18,8 +18,9 @@ placement setting forbids the collect.
 - ``cascade`` — additionally no ``broadcast``-level collect: the beam
   probe runs its per-hop join cascade.
 
-Caps stay with the operators (each is a parameter or constant at its
-call site); results are identical under every value, which the
+Caps stay with the operators, each a module constant passed at its
+call site (no caller can switch a fast path off; the setting is the
+one switch); results are identical under every value, which the
 precommit gate checks by running the fallback-bearing registry keys
 under ``distributed`` and ``cascade``.
 """
@@ -49,15 +50,15 @@ def placement() -> str:
 
 
 def bounded_collect(
-    df: DataFrame, cap: int | None, level: str = "driver", *, as_pandas: bool = False
+    df: DataFrame, cap: int, level: str = "driver", *, as_pandas: bool = False
 ):
     """Collect ``df`` when it has at most ``cap`` rows and the placement
     allows a ``level`` collect (``"driver"``: the rows feed a Python
     loop; ``"broadcast"``: they ship to the executors once). Returns
     the rows (a pandas DataFrame with ``as_pandas`` — the Arrow
     transfer), or ``None`` — the caller then runs its distributed
-    plan. ``cap=None`` means no fast path at this call site."""
-    if cap is None or PLACEMENTS.index(placement()) >= _OFF_FROM[level]:
+    plan."""
+    if PLACEMENTS.index(placement()) >= _OFF_FROM[level]:
         return None
     head = df.limit(cap + 1)
     rows = head.toPandas() if as_pandas else head.collect()

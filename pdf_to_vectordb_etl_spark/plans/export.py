@@ -1,13 +1,13 @@
 """Training-data EXPORT composition (beyond-reference flagship #2).
 
-``plans.curate`` ends where a curated document set begins; this module
-finishes the job the way a 100-TB pretraining pipeline actually ships:
+This module takes a curated document set to shipped training data
+the way a 100-TB pretraining pipeline does:
 
   1. exact dedup            (digest groupBy — byte clones never reach
                              the tokenizer)
   2. quality floor          (minimum word count — the cheap pre-gate;
-                             run the full Gopher gate upstream via
-                             plans.curate when curating from raw crawl)
+                             run the full Gopher gate upstream when
+                             curating from raw crawl)
   3. leakage split          (deterministic md5 holdout — eval text must
                              never influence the tokenizer OR training)
   4. tokenize               (unigram-LM Viterbi encode; pieces trained

@@ -238,23 +238,6 @@ def console_progress(stats_long: DataFrame) -> str:
     return "\n".join(lines)
 
 
-def overwrite_partitions(df, path: str, partition_cols: list[str]) -> None:
-    """Dynamic partition overwrite: rewrite ONLY the hive-style
-    partitions present in ``df``, leave every other partition's files
-    untouched — the idempotent daily-backfill write (static overwrite
-    would truncate the whole table; append would duplicate the day).
-
-    Session-safe: the dynamic mode is set per-WRITE via the
-    DataFrameWriter option, not globally.
-    """
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
-
-
 def write_sharded_with_manifest(
     df,
     path: str,

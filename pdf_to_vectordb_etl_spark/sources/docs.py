@@ -136,21 +136,3 @@ def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     bad = df.filter(F.col(CORRUPT_COL).isNotNull() & anchored)
     good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     return good, bad
-
-
-def read_corpus(
-    spark: SparkSession,
-    paths: list[str],
-    schema: T.StructType = DOCUMENT_SCHEMA,
-) -> DataFrame:
-    """Union heterogeneous drops into one corpus frame (clean rows
-    only). Each drop keeps its native scan; the union is free (no
-    shuffle) and downstream predicates still push into every branch."""
-    frames = []
-    for p in paths:
-        clean, _ = split_quarantine(read_documents(spark, p, schema=schema))
-        frames.append(clean)
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out

@@ -133,28 +133,6 @@ def stream_event_counts(
     )
 
 
-def stream_dedup(
-    stream: DataFrame,
-    keys: list[str],
-    time_col: str | None = None,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: keep the first row per key across
-    micro-batches.
-
-    With ``time_col``, state is bounded by a watermark — late
-    duplicates beyond it may re-emit, but state never grows past the
-    window (the only sane contract for an unbounded 100 TB/day
-    stream). Without it, state is unbounded (reference-scale only).
-    ``time_col`` must be a timestamp column for the watermark clock.
-    """
-    if time_col is not None:
-        return stream.withWatermark(time_col, watermark).dropDuplicatesWithinWatermark(
-            keys
-        )
-    return stream.dropDuplicates(keys)
-
-
 def stream_interval_join(
     events_stream: DataFrame,
     key: str = "user_id",
@@ -303,74 +281,6 @@ def stream_compact_snapshot(
             pass
 
     return events_stream.writeStream.foreachBatch(merge).option(
-        "checkpointLocation", checkpoint_dir
-    ).trigger(availableNow=True).start()
-
-
-def _committed_offsets(spark: SparkSession, offset_path: str) -> dict[int, tuple[int, int]]:
-    """{batch_id: (start, end)} from committed ``_OFFSET-<b>-<s>-<e>``
-    markers (empty files whose NAME carries the state — creation is
-    atomic, so a crash leaves either the old set or old+new)."""
-    fs, jvm = _hadoop_fs(spark, offset_path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(Path(offset_path)):
-        return {}
-    out = {}
-    for s in fs.globStatus(Path(offset_path + "/_OFFSET-*")) or []:
-        _, b, lo, hi = s.getPath().getName().split("-")
-        out[int(b)] = (int(lo), int(hi))
-    return out
-
-
-def run_sequential_id_etl(
-    pages_stream: DataFrame,
-    checkpoint_dir: str,
-    offset_path: str,
-    sink,
-    base_offset: int = 0,
-):
-    """T4 reference-compat: COUNT-CONTINUATION sequential vector ids
-    across micro-batches (reference qdrant_text_loader.py:276,:310 —
-    "ids continue from the collection's current count").
-
-    Hash ids (embedding.assign_ids default) made this state unnecessary
-    for the engine's own pipelines; this mode exists for sinks that
-    REQUIRE dense sequential ids. Per batch: start = the committed end
-    of the highest batch BELOW this one (so a REPLAYED batch reuses its
-    own recorded start instead of double-advancing — exactly-once ids
-    on an idempotent sink); assign ``start + row_number`` within the
-    batch; sink; commit ``_OFFSET-<batch>-<start>-<end>`` atomically.
-    The within-batch window is single-partition — exactly the
-    reference's serialization, confined to one micro-batch.
-    """
-    from ..operators.embedding import assign_ids
-    from ..plans import etl
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        offsets = _committed_offsets(spark, offset_path)
-        if batch_id in offsets:  # replay: reuse the recorded start
-            start = offsets[batch_id][0]
-        else:
-            prior = [e for b, (s, e) in offsets.items() if b < batch_id]
-            start = max(prior) if prior else base_offset
-        questions = etl.extract_questions(batch_df)
-        with_ids = assign_ids(
-            questions, mode="sequential", offset=start,
-            order_cols=("subject", "ID"),
-        )
-        n = with_ids.count()
-        sink(with_ids, batch_id)
-        fs, jvm = _hadoop_fs(spark, offset_path)
-        Path = jvm.org.apache.hadoop.fs.Path
-        fs.mkdirs(Path(offset_path))
-        fs.create(
-            Path(f"{offset_path}/_OFFSET-{batch_id}-{start}-{start + n}"), True
-        ).close()
-
-    return pages_stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir
     ).trigger(availableNow=True).start()
 

@@ -3,9 +3,10 @@
 The reference's only cross-batch state is the sink-count ID continuation
 (SURVEY §2.11 T4), which deterministic IDs eliminate. These operators
 are the beyond-reference stateful surface: arbitrary per-key state kept
-by the engine across micro-batches — running totals and gap-based
-sessionization — the pattern any 100 TB streaming curation pipeline
-needs (per-source dedup state, rate accounting, session windows).
+by the engine across micro-batches — running totals, per-key ingestion
+quotas, rolling z-score flags, KMV and CUSUM state — the pattern any
+100 TB streaming curation pipeline needs (per-source dedup state, rate
+accounting, change detection).
 
 State is per group key, stored in the state store (checkpointed,
 fault-tolerant); each micro-batch hands the operator the key's new rows
@@ -64,70 +65,6 @@ def running_totals(events_stream: DataFrame) -> DataFrame:
         outputStructType=RUNNING_OUT,
         stateStructType=RUNNING_STATE,
         outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-SESSION_OUT = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", LongType()),
-        StructField("session_end", LongType()),
-        StructField("n_events", LongType()),
-    ]
-)
-SESSION_STATE = StructType(
-    [
-        StructField("start", LongType()),
-        StructField("last", LongType()),
-        StructField("n", LongType()),
-    ]
-)
-
-
-def make_sessionizer(gap_ns: int):
-    """Gap-based sessionizer kernel: events more than ``gap_ns`` apart
-    open a new session; closed sessions are emitted, the open one stays
-    in state. (Event order within a batch is sorted here; cross-batch
-    order relies on source ordering — add a watermark + sort upstream
-    for out-of-order feeds.)"""
-
-    def _sessionize(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if rows.empty:
-            return
-        rows = rows.sort_values("ts")
-        (start, last, n) = state.get if state.exists else (None, None, 0)
-        out = []
-        for ts in rows["ts"]:
-            ts = int(ts)
-            if start is None:
-                start, last, n = ts, ts, 1
-            elif ts - last > gap_ns:
-                out.append((key[0], start, last, n))
-                start, last, n = ts, ts, 1
-            else:
-                last, n = ts, n + 1
-        state.update((start, last, n))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "session_start", "session_end", "n_events"]
-            )
-
-    return _sessionize
-
-
-def sessionize(events_stream: DataFrame, gap_ns: int = 3_600_000_000_000) -> DataFrame:
-    """Emit closed sessions per user (default gap: 1 hour in the ts
-    column's nanosecond unit)."""
-    prepped = events_stream.select("user_id", "ts")
-    return prepped.groupBy("user_id").applyInPandasWithState(
-        make_sessionizer(gap_ns),
-        outputStructType=SESSION_OUT,
-        stateStructType=SESSION_STATE,
-        outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 

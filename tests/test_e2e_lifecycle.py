@@ -150,46 +150,3 @@ def test_query_removes_its_data_dir(spark, sf_dir, tmp_path, monkeypatch, key):
     rows = entry.queries()[key](spark, sf_dir).collect()
     assert rows
     assert os.listdir(tmp_path) == []
-
-
-def test_curate_corpus_end_to_end(spark, sf_dir):
-    """The composed curation chain: monotone non-increasing stage counts,
-    duplicates gone, every survivor labeled with split + shard + pos."""
-    from pdf_to_vectordb_etl_spark.plans.curate import curate_corpus
-    from tests.conftest import load
-
-    docs = load(spark, sf_dir, "documents")
-    # plant exact + near duplicates to give stages 1-2 real work
-    clones = docs.limit(20).withColumn("doc_id", F.col("doc_id") + 1_000_000)
-    corpus = docs.union(clones)
-
-    curated, report = curate_corpus(corpus, cap_per_source=40)
-    rep = {r["stage"]: r["n_docs"] for r in report.collect()}
-    assert rep["input"] == corpus.count()
-    order = ["input", "exact_dedup", "near_dedup", "quality_filter",
-             "source_cap", "split_shuffle"]
-    counts = [rep[s] for s in order]
-    assert counts == sorted(counts, reverse=True)  # monotone shrink
-    assert rep["exact_dedup"] == docs.count()  # planted clones removed
-    assert rep["split_shuffle"] > 0
-
-    rows = curated.collect()
-    assert len(rows) == rep["split_shuffle"]
-    assert {r["split"] for r in rows} <= {"train", "val", "test"}
-
-    # optional DSIR stage: target the English slice, keep 100 —
-    # the stage slots between quality filter and source cap and the
-    # report gains its row
-    curated2, report2 = curate_corpus(
-        corpus,
-        cap_per_source=40,
-        dsir_target=docs.filter(F.col("lang") == "en"),
-        dsir_keep=100,
-    )
-    rep2 = {r["stage"]: r["n_docs"] for r in report2.collect()}
-    assert rep2["dsir_select"] == 100
-    assert rep2["source_cap"] <= rep2["dsir_select"]
-    assert all(r["shard"] is not None and r["pos"] is not None for r in rows)
-    # no text survives twice
-    texts = [r["text"] for r in rows]
-    assert len(texts) == len(set(texts))

@@ -141,14 +141,12 @@ def test_quality_checks_empty_frame_no_breach(spark):
     from pdf_to_vectordb_etl_spark.operators.quality_checks import (
         Expectation,
         check_report,
-        enforce,
     )
 
     empty = spark.createDataFrame([], "doc_id long, text string")
     exps = [Expectation("id_not_null", F.col("doc_id").isNotNull())]
     rep = check_report(empty, exps).collect()
     assert rep[0]["n_rows"] == 0 and not rep[0]["breached"]
-    enforce(empty, exps)  # must not raise
 
 
 def test_pq_train_rejects_indivisible_dim(spark):

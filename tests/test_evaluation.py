@@ -370,8 +370,6 @@ def test_permutation_test_shift_vs_null(spark):
 
 
 def test_mm_extract_features_counts_and_gate(spark):
-    import pytest as _pytest
-
     from pdf_to_vectordb_etl_spark.operators import multimodal as mm
 
     df = spark.createDataFrame([(1, "abab"), (2, "")], "doc_id long, t string")
@@ -383,9 +381,6 @@ def test_mm_extract_features_counts_and_gate(spark):
     assert out[1].n_units == 4 and out[1].counts[6] == 4
     assert sum(out[1].counts) == 4
     assert out[2].n_units == 0 and sum(out[2].counts) == 0
-    # the real kernel is import-gated, never silently fake
-    with _pytest.raises(NotImplementedError):
-        mm._real_feature_kernel("image", b"x")
 
 
 def test_runs_test_alternating_vs_blocked(spark, sf_dir, tmp_path):

@@ -397,7 +397,7 @@ def test_stream_compact_snapshot_fails_loud_on_corrupt_state(
 
 
 def test_read_documents_multiformat_and_quarantine(spark, tmp_path):
-    """JSONL with a malformed line + CSV + evolved parquet must unify
+    """JSONL with a malformed line, CSV and evolved parquet each read
     onto the document contract; the bad line lands in quarantine."""
     from pdf_to_vectordb_etl_spark.sources import docs as D
 
@@ -421,15 +421,13 @@ def test_read_documents_multiformat_and_quarantine(spark, tmp_path):
     assert bad.count() == 1 and "NOT JSON" in bad.first()[D.CORRUPT_COL]
     assert {r["doc_id"] for r in good.collect()} == {1, 2}
 
-    corpus = D.read_corpus(spark, [str(jl), str(cs), pq_dir])
-    rows = {r["doc_id"]: r for r in corpus.collect()}
-    assert set(rows) == {1, 2, 3, 4}
-    assert rows[3]["text"] == "from csv" and rows[3]["n_chars"] == 8
-    assert rows[4]["n_chars"] is None  # evolved: padded with typed NULL
-    assert "extra" not in corpus.columns
-    assert [f.name for f in corpus.schema.fields] == [
+    csv_row = D.split_quarantine(D.read_documents(spark, str(cs)))[0].first()
+    assert csv_row["text"] == "from csv" and csv_row["n_chars"] == 8
+    pq = D.read_documents(spark, pq_dir)
+    assert pq.first()["n_chars"] is None  # evolved: padded with typed NULL
+    assert [f.name for f in pq.schema.fields] == [
         "doc_id", "text", "lang", "source", "n_chars"
-    ]
+    ]  # "extra" dropped
 
 
 def test_read_documents_text_lines(spark, tmp_path):
@@ -443,25 +441,10 @@ def test_read_documents_text_lines(spark, tmp_path):
     assert df.filter(F.col("doc_id").isNull()).count() == 0
 
 
-def test_overwrite_partitions_touches_only_present_partitions(spark, tmp_path):
-    path = str(tmp_path / "table")
-    day1 = spark.createDataFrame([("d1", 1), ("d1", 2)], "day string, v int")
-    day2 = spark.createDataFrame([("d2", 3)], "day string, v int")
-    sinks.overwrite_partitions(day1.union(day2), path, ["day"])
-    # backfill day2 only; day1 must survive byte-for-byte
-    fix = spark.createDataFrame([("d2", 99)], "day string, v int")
-    sinks.overwrite_partitions(fix, path, ["day"])
-    got = {(r["day"], r["v"]) for r in spark.read.parquet(path).collect()}
-    assert got == {("d1", 1), ("d1", 2), ("d2", 99)}
-
-
 def test_expectations_one_pass_report_and_enforce(spark, sf_dir):
     from pdf_to_vectordb_etl_spark.operators.quality_checks import (
         Expectation,
-        ExpectationError,
         check_report,
-        drop_violations,
-        enforce,
     )
 
     docs = load(spark, sf_dir, "documents")
@@ -475,55 +458,6 @@ def test_expectations_one_pass_report_and_enforce(spark, sf_dir):
     rep = {r["name"]: r for r in check_report(docs, exps).collect()}
     assert len(rep) == 4 and all(r["n_rows"] == docs.count() for r in rep.values())
     assert not rep["doc_id_not_null"]["breached"]
-
-    # enforce passes on the real corpus contract
-    enforce(docs, exps[:1])
-
-    # a planted violation breaches and reports precisely
-    import pytest
-
-    broken = docs.limit(10).withColumn("doc_id", F.lit(None).cast("long"))
-    with pytest.raises(ExpectationError) as ei:
-        enforce(broken, exps[:1])
-    assert ei.value.report[0]["n_violations"] == 10
-
-    kept = drop_violations(broken.union(docs.limit(5)), exps[:1])
-    assert kept.count() == 5
-
-
-def test_sequential_id_stream_continues_across_runs(spark, tmp_path):
-    """T4 compat: dense sequential ids must continue across micro-batches
-    AND across separate stream runs (offset recovered from committed
-    markers, not from memory)."""
-    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
-        read_page_stream,
-        run_sequential_id_etl,
-    )
-
-    drop = str(tmp_path / "drop")
-    ckpt = str(tmp_path / "ckpt")
-    offsets = str(tmp_path / "offsets")
-    got: list = []
-
-    def sink(df, batch_id):
-        got.extend((r["id"], r["subject"]) for r in df.collect())
-
-    c1 = synthetic.corpus_df(spark, years=(2022,), days=("D1",))
-    c1.repartition("doc_id").write.mode("overwrite").json(drop)
-    q = run_sequential_id_etl(read_page_stream(spark, drop), ckpt, offsets, sink)
-    await_stream(q)
-    n1 = len(got)
-    assert n1 > 0
-    assert sorted(i for i, _ in got) == list(range(n1))  # dense 0..n1-1
-
-    # second run: new files land; ids must continue at n1
-    c2 = synthetic.corpus_df(spark, years=(2023,), days=("D1",))
-    c2.repartition("doc_id").write.mode("append").json(drop)
-    q2 = run_sequential_id_etl(read_page_stream(spark, drop), ckpt, offsets, sink)
-    await_stream(q2)
-    n2 = len(got)
-    assert n2 > n1
-    assert sorted(i for i, _ in got) == list(range(n2))  # still dense, no reuse
 
 
 def test_write_sharded_with_manifest(spark, sf_dir, tmp_path):

@@ -14,7 +14,6 @@ def test_bounded_collect_caps_and_levels(spark, monkeypatch):
     assert placement() == "auto"
     assert [r["id"] for r in bounded_collect(df, 5)] == [0, 1, 2, 3, 4]
     assert bounded_collect(df, 4) is None
-    assert bounded_collect(df, None) is None
     pdf = bounded_collect(df, 5, "broadcast", as_pandas=True)
     assert list(pdf["id"]) == [0, 1, 2, 3, 4]
 

@@ -574,11 +574,25 @@ def test_ccnet_buckets_no_per_source_window(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_bradley_terry_rounds_are_checkpoint_truncated(spark, sf_dir):
+def test_bradley_terry_rounds_are_checkpoint_truncated(spark, sf_dir, monkeypatch):
     # per-round localCheckpoint: the final plan must not contain the
     # unrolled 6-round join chain (lineage truncation contract) — a
-    # scan of the checkpointed RDD appears instead
+    # scan of the checkpointed RDD appears instead. The fixture fits
+    # the driver fast path, so the rounds run only when forced.
+    monkeypatch.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
     df = _q(spark, sf_dir, "bradley_terry")
     plan = _plan(df, "simple")
     assert "Scan ExistingRDD" in plan
     assert plan.count("SortMergeJoin") + plan.count("BroadcastHashJoin") <= 4
+
+
+def test_driver_results_are_local_table_scans(spark, sf_dir):
+    # the driver fast paths build their results from pandas (one Arrow
+    # batch): a LocalTableScan, read without a Python worker. A row
+    # list would plan as a pickled-RDD scan (Scan ExistingRDD) and run
+    # a Python-worker job on every read.
+    for name in ["bpe_train", "wordpiece_train", "bpe_bytelevel_train",
+                 "bradley_terry", "knn_shapley"]:
+        plan = _plan(_q(spark, sf_dir, name), "simple")
+        assert "LocalTableScan" in plan, name
+        assert "ExistingRDD" not in plan, name

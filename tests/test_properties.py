@@ -6,6 +6,7 @@ single-word docs, duplicate texts."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from pyspark.sql import functions as F
@@ -106,10 +107,12 @@ def test_cluster_pairs_matches_union_find(spark, edges):
     )
     # distributed min-label propagation (driver fast path off — the
     # fast path IS union-find, which would make this test circular)
-    got = {
-        r["id"]: r["cluster_id"]
-        for r in dedup.cluster_pairs(pairs, driver_max_edges=None).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
+        got = {
+            r["id"]: r["cluster_id"]
+            for r in dedup.cluster_pairs(pairs).collect()
+        }
     got_fast = {
         r["id"]: r["cluster_id"]
         for r in dedup.cluster_pairs(pairs).collect()

@@ -538,7 +538,7 @@ def test_stratified_split_cells_finale_composition(spark, sf_dir):
 # r10 optimization: beam-probe driver fast path parity
 # ---------------------------------------------------------------------------
 
-def test_beam_probe_fast_path_equals_distributed(spark, sf_dir):
+def test_beam_probe_fast_path_equals_distributed(spark, sf_dir, monkeypatch):
     """The bounded driver fast path for the beam probe (collected
     micro matrices + k-bounded edge list, vectorized exact-int64
     numpy) must produce the IDENTICAL visited set as the distributed
@@ -564,12 +564,14 @@ def test_beam_probe_fast_path_equals_distributed(spark, sf_dir):
             g, corpus, probes, hops=4, beam=6
         ).collect()
     )
-    dist = sorted(
-        tuple(r)
-        for r in nn_descent_beam_probe(
-            g, corpus, probes, hops=4, beam=6, fast_path_max_nodes=None
-        ).collect()
-    )
+    with monkeypatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
+        dist = sorted(
+            tuple(r)
+            for r in nn_descent_beam_probe(
+                g, corpus, probes, hops=4, beam=6
+            ).collect()
+        )
     assert fast == dist and len(fast) > 0
 
 

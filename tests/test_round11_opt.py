@@ -40,22 +40,19 @@ def test_beam_probe_three_way_parity(spark, sf_dir, monkeypatch):
             g, corpus, probes, hops=4, beam=6
         ).collect()
     )
-    bsp = sorted(
-        tuple(r)
-        for r in nn_descent_beam_probe(
-            g, corpus, probes, hops=4, beam=6, fast_path_max_nodes=None
-        ).collect()
-    )
+    with monkeypatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
+        bsp = sorted(
+            tuple(r)
+            for r in nn_descent_beam_probe(
+                g, corpus, probes, hops=4, beam=6
+            ).collect()
+        )
     monkeypatch.setenv("SPARK_GRAFT_PLACEMENT", "cascade")
     cascade = sorted(
         tuple(r)
         for r in nn_descent_beam_probe(
-            g,
-            corpus,
-            probes,
-            hops=4,
-            beam=6,
-            fast_path_max_nodes=None,
+            g, corpus, probes, hops=4, beam=6
         ).collect()
     )
     assert fast == bsp == cascade and len(fast) > 0
@@ -103,6 +100,54 @@ def test_bsp_serving_consumers_match_cascade(spark, sf_dir, monkeypatch):
     assert bsp == cascade and len(bsp[0]) > 0 and len(bsp[1]) > 0
 
 
+def _broadcast_blocks(sc):
+    """Names of the broadcast blocks in the driver's memory store, read
+    after a Python then a JVM GC (the context cleaner releases blocks
+    of dropped broadcasts asynchronously)."""
+    import gc
+    import time
+
+    gc.collect()
+    sc._jvm.System.gc()
+    time.sleep(0.5)
+    store = sc._jvm.org.apache.spark.SparkEnv.get().blockManager().memoryStore()
+    field = store.getClass().getDeclaredField("entries")
+    field.setAccessible(True)
+    names = field.get(store).keySet().toString().strip("[]").split(", ")
+    return {b for b in names if b.startswith("broadcast_") and "piece" not in b}
+
+
+def test_bsp_broadcast_released_with_its_result(spark, monkeypatch):
+    """The BSP beam probe broadcasts the index artifact once per call.
+    The block lives as long as the result frame (a recompute reads it)
+    and is released once that frame is dropped: no block of the call
+    survives. Block ids are compared, not counts, so an unrelated
+    release cannot hide a survivor."""
+    from pdf_to_vectordb_etl_spark.operators.topk import (
+        nn_descent_beam_probe,
+        nn_descent_graph,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 7), float(i % 5), float(i % 3)]) for i in range(60)],
+        "vec_id long, embedding array<double>",
+    )
+    corpus, probes = vecs.filter("vec_id >= 6"), vecs.filter("vec_id < 6")
+    g = nn_descent_graph(corpus, k=4, rounds=2)
+    sc = spark.sparkContext
+    monkeypatch.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
+    before = _broadcast_blocks(sc)
+    res = nn_descent_beam_probe(g, corpus, probes, hops=2, beam=4)
+    assert len(res.collect()) > 0
+    assert _broadcast_blocks(sc) - before  # the artifact is held
+    del res
+    left = _broadcast_blocks(sc) - before
+    for _ in range(20):
+        if not left:
+            break
+        left &= _broadcast_blocks(sc)
+    assert not left
+
 def test_tombstone_overcap_deletions_reuses_fast_probe(spark, sf_dir):
     """The >16k-deletions branch now reuses the already-computed fast
     visited set and applies the distributed anti-join/top-k to it
@@ -136,7 +181,7 @@ def test_tombstone_overcap_deletions_reuses_fast_probe(spark, sf_dir):
     import pandas as pd
 
     qid, cand, dist = _beam_probe_fast_arrays(
-        g, corpus, probes, 3, 5, "embedding", "vec_id", 16_000, 20_000
+        g, corpus, probes, 3, 5, "embedding", "vec_id"
     )
     visited = spark.createDataFrame(
         pd.DataFrame({"qid": qid, "cand": cand, "dist": dist}),

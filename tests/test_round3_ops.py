@@ -761,31 +761,6 @@ def test_negative_edges_disjoint_from_positives(spark):
     assert all(v <= 2 for v in per_src.values())
 
 
-def test_rag_ingest_to_index_end_to_end(spark, sf_dir):
-    """The composed RAG plan: chunks >= docs, every chunk routed to a
-    valid list, report stages present; and with a never-split
-    threshold each doc collapses to exactly ONE chunk whose rebuilt
-    text equals the whitespace-normalized original (order-preserving
-    concat proof)."""
-    from pdf_to_vectordb_etl_spark.plans.rag import ingest_to_index
-
-    docs = load(spark, sf_dir, "documents").limit(60)
-    chunks, cents, report = ingest_to_index(docs, dim=16, n_lists=4)
-    rep = {r["stage"]: r["n"] for r in report.collect()}
-    assert rep["input"] == 60 and rep["chunks"] >= rep["exact_dedup"]
-    rows = chunks.collect()
-    assert all(1 <= r["list_id"] <= 4 for r in rows)
-    assert cents.count() == 4
-
-    one, _, _ = ingest_to_index(
-        docs.limit(5), chunk_threshold=-2.0, dim=16, n_lists=2
-    )
-    got = {r["doc_id"]: r["chunk_text"] for r in one.collect()}
-    want = {r["doc_id"]: " ".join(r["text"].split())
-            for r in docs.limit(5).collect()}
-    assert got == want  # single chunk per doc, text rebuilt in order
-
-
 def test_timed_funnel_windows_enforced(spark):
     """User A converts fully in-window; user B's click lands outside
     30 min (drops at step 2); user C clicks before viewing (no
@@ -1312,7 +1287,7 @@ def test_cc_star_topologies_and_truth(spark):
     assert cc(pairs) == truth
 
 
-def test_cluster_pairs_raises_on_nonconvergence(spark):
+def test_cluster_pairs_raises_on_nonconvergence(spark, monkeypatch):
     """A 30-node path with a 3-round budget cannot converge — the old
     code returned silently-wrong labels; it must now raise and point
     at the star-contraction alternative."""
@@ -1323,207 +1298,18 @@ def test_cluster_pairs_raises_on_nonconvergence(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], ["id_a", "id_b"]
     )
-    # distributed path (driver fast path off): must raise, not lie
-    with pytest.raises(ValueError, match="connected_components_star"):
-        dedup.cluster_pairs(chain, max_iterations=3, driver_max_edges=None)
-    # and with budget it converges to one component
-    out = dedup.cluster_pairs(
-        chain, max_iterations=40, driver_max_edges=None
-    ).collect()
+    with monkeypatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
+        # distributed path (driver fast path off): must raise, not lie
+        with pytest.raises(ValueError, match="connected_components_star"):
+            dedup.cluster_pairs(chain, max_iterations=3)
+        # and with budget it converges to one component
+        out = dedup.cluster_pairs(chain, max_iterations=40).collect()
     assert {r["cluster_id"] for r in out} == {0}
     # the driver union-find fast path needs no iteration budget at all
     out2 = dedup.cluster_pairs(chain, max_iterations=3).collect()
     assert {r["cluster_id"] for r in out2} == {0}
     assert sorted(r["id"] for r in out2) == list(range(31))
-
-
-def test_pdf_pages_python_datasource_parity(spark, tmp_path):
-    """Spark 4 Python DataSource (`pdf_pages`) vs the binaryFile +
-    mapInPandas pipeline: identical page rows from the same decoder
-    kernel; empty folders scan to zero rows; partition planning is one
-    file per task."""
-    from pdf_to_vectordb_etl_spark.sources import pdf as pdfsrc
-    from pdf_to_vectordb_etl_spark.sources.pydatasource import (
-        PdfPagesDataSource,
-        PdfPagesReader,
-    )
-
-    d = tmp_path / "pdfs"
-    d.mkdir()
-    for i, name in enumerate(
-        [
-            "2022_PV_impresso_D1_CD1.pdf",
-            "2021_PV_impresso_D1_CD5.pdf",
-            "2020_PV_impresso_D2_CD7.pdf",
-        ]
-    ):
-        (d / name).write_bytes(b"%PDF-fake-" + bytes([i]) * (50 + i))
-    (d / "notes.txt").write_text("not a pdf")
-
-    spark.dataSource.register(PdfPagesDataSource)
-    via_ds = (
-        spark.read.format("pdf_pages")
-        .option("decoder", "fake")
-        .load(str(d))
-        .orderBy("path", "page_index")
-        .collect()
-    )
-    via_map = (
-        pdfsrc.pages_from_pdfs(
-            pdfsrc.scan_pdf_folder(spark, str(d)), pdfsrc.fake_pdf_decoder
-        )
-        .select("path", "page_index", "page_text", "n_images")
-        .orderBy("path", "page_index")
-        .collect()
-    )
-    assert [tuple(r) for r in via_ds] == [tuple(r) for r in via_map]
-    assert len(via_ds) >= 6  # fake decoder yields 2-4 pages per file
-    # planning: one partition per pdf, names only, non-pdf pruned
-    parts = PdfPagesReader({"path": str(d)}).partitions()
-    assert len(parts) == 3
-    # empty folder: empty scan, no error
-    e = tmp_path / "empty"
-    e.mkdir()
-    assert spark.read.format("pdf_pages").load(str(e)).count() == 0
-
-
-def test_pdf_pages_stream_reader_exactly_once(spark, tmp_path):
-    """The pdf_pages streaming source: files dropped between
-    micro-batches are each decoded exactly once (offset = emitted file
-    list), and readBetweenOffsets replays a batch deterministically."""
-    import json
-
-    from pdf_to_vectordb_etl_spark.sources.pydatasource import (
-        PdfPagesDataSource,
-        PdfPagesStreamReader,
-    )
-
-    d = tmp_path / "drop"
-    d.mkdir()
-    (d / "2022_PV_impresso_D1_CD1.pdf").write_bytes(b"%PDF-a" * 20)
-
-    spark.dataSource.register(PdfPagesDataSource)
-    sink = str(tmp_path / "sink")
-
-    def run_batch():
-        # parquet sink: supports checkpoint recovery (memory sink
-        # refuses to resume from an existing offset log)
-        q = (
-            spark.readStream.format("pdf_pages")
-            .option("decoder", "fake")
-            .load(str(d))
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .start()
-        )
-        await_stream(q)
-        return spark.read.parquet(sink).collect()
-
-    first = run_batch()
-    assert len(first) >= 2 and all("CD1" in r["path"] for r in first)
-    # drop a second file, resume from the SAME checkpoint: only the
-    # new file's pages are appended — each file decoded exactly once
-    (d / "2021_PV_impresso_D1_CD5.pdf").write_bytes(b"%PDF-b" * 25)
-    both = run_batch()
-    added = len(both) - len(first)
-    assert added >= 2
-    assert sum("CD5" in r["path"] for r in both) == added
-    assert sum("CD1" in r["path"] for r in both) == len(first)
-    # replay determinism
-    rd = PdfPagesStreamReader({"path": str(d), "decoder": "fake"})
-    start = rd.initialOffset()
-    rows1, end = rd.read(start)
-    replay = list(rd.readBetweenOffsets(start, end))
-    assert sorted(list(rows1)) == sorted(replay)
-    assert len(json.loads(end["files"])) == 2
-
-
-def test_jsonl_manifest_writer_commit_and_abort(spark, tmp_path):
-    """The transactional writer: committed output is final shard files
-    + _MANIFEST.json whose counts/checksums match, with no staged
-    residue; abort removes staged files."""
-    import json
-    import os
-
-    from pdf_to_vectordb_etl_spark.sources.pydatasource import (
-        JsonlManifestDataSource,
-        JsonlManifestWriter,
-        ShardCommit,
-    )
-
-    spark.dataSource.register(JsonlManifestDataSource)
-    out = tmp_path / "export"
-    df = spark.range(100).selectExpr(
-        "id", "concat('doc-', id) AS name"
-    ).repartition(4)
-    df.write.format("jsonl_manifest").mode("append").save(str(out))
-    files = sorted(os.listdir(out))
-    assert "_MANIFEST.json" in files
-    shards = [f for f in files if f.startswith("shard-")]
-    assert len(shards) == 4
-    assert not [f for f in files if f.startswith(".staged")]
-    manifest = json.loads((out / "_MANIFEST.json").read_text())
-    assert manifest["n_rows"] == 100 and manifest["n_shards"] == 4
-    n_lines = sum(
-        len((out / s).read_text().splitlines()) for s in shards
-    )
-    assert n_lines == 100
-    # every line is valid json with both columns
-    row = json.loads((out / shards[0]).read_text().splitlines()[0])
-    assert set(row) == {"id", "name"}
-    # abort cleans staging
-    staged = out / ".staged-shard-99999-dead.jsonl"
-    staged.write_text("partial\n")
-    JsonlManifestWriter({"path": str(out)}, None).abort(
-        [ShardCommit(str(staged), str(out / "shard-99999.jsonl"), 1, 0)]
-    )
-    assert not staged.exists()
-
-
-def test_pdf_pages_pushdown_prunes_files(spark, tmp_path):
-    """Path predicates reach partition planning: a contains('2022')
-    filter leaves ONE partition (file) and the same rows as post-scan
-    filtering."""
-    from pyspark.sql.datasource import StringContains
-
-    from pdf_to_vectordb_etl_spark.sources.pydatasource import (
-        PdfPagesDataSource,
-        PdfPagesReader,
-    )
-
-    d = tmp_path / "pdfs"
-    d.mkdir()
-    for name in [
-        "2022_PV_impresso_D1_CD1.pdf",
-        "2021_PV_impresso_D1_CD5.pdf",
-        "2020_PV_impresso_D2_CD7.pdf",
-    ]:
-        (d / name).write_bytes(b"%PDF-" + name.encode())
-    from pdf_to_vectordb_etl_spark.sources.pydatasource import (
-        PdfPagesPushdownReader,
-    )
-
-    rd = PdfPagesPushdownReader({"path": str(d)})
-    residual = list(rd.pushFilters([StringContains(("path",), "2022")]))
-    assert residual == []  # fully handled at planning
-    assert len(rd.partitions()) == 1
-    # e2e: same rows as reading all then filtering
-    spark.dataSource.register(PdfPagesDataSource)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        allrows = (
-            spark.read.format("pdf_pages")
-            .option("pushdown", "true")
-            .load(str(d))
-            .filter(F.col("path").contains("2022"))
-            .collect()
-        )
-    finally:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
-    assert allrows and all("2022" in r["path"] for r in allrows)
 
 
 def test_k_anonymity_semantics(spark):
@@ -1679,75 +1465,6 @@ def test_stream_kmv_multibatch_equals_batch(spark, sf_dir, tmp_path):
     }
     assert {k: v[1] for k, v in got.items()} == want_est
     assert {k: v[0] for k, v in got.items()} == want_n
-
-
-def test_maintain_table_verifies_and_catches_corruption(spark, sf_dir, tmp_path):
-    """The compact->summarize->verify lifecycle: a Z-order rewrite of
-    the events table passes content verification; a corrupted rewrite
-    (one value nudged) is caught by the fingerprint compare and
-    raises before publishing."""
-    import pytest
-
-    from pdf_to_vectordb_etl_spark.operators import cdc
-    from pdf_to_vectordb_etl_spark.plans.maintain import maintain_table
-    from tests.conftest import load as _load
-
-    src = str(tmp_path / "src")
-    ev = _load(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type",
-        F.floor(F.col("value") * 10000).cast("long").alias("vi"),
-    )
-    # fragment the source: many small files
-    ev.repartition(23).write.parquet(src)
-    report = maintain_table(
-        spark,
-        src,
-        str(tmp_path / "dest"),
-        key_cols=["event_id"],
-        payload_cols=["user_id", "event_type", "vi"],
-        zorder_cols=("user_id", "vi"),
-        n_files=4,
-        n_buckets=512,
-    )
-    assert report["verified"] and report["n_rows"] == ev.count()
-    import os
-
-    shards = [
-        f
-        for f in os.listdir(tmp_path / "dest")
-        if f.endswith(".parquet")
-    ]
-    assert len(shards) == 4
-    # corruption: one row's payload changes between summary and rewrite
-    bad = ev.withColumn(
-        "vi", F.when(F.col("event_id") == 7, F.col("vi") + 1).otherwise(F.col("vi"))
-    )
-    s_good = cdc.merkle_summary(ev, ["event_id"], ["user_id", "event_type", "vi"], 512)
-    s_bad = cdc.merkle_summary(bad, ["event_id"], ["user_id", "event_type", "vi"], 512)
-    assert cdc.merkle_changed_buckets(s_good, s_bad).count() == 1
-    baddir = str(tmp_path / "badsrc")
-    ev.write.parquet(baddir)
-    # simulate a rewrite that corrupts: write bad data into dest path
-    # by monkeypatching write_zordered's input — simplest equivalent:
-    # verify directly that a corrupt dest fails the plan's check
-    from pdf_to_vectordb_etl_spark.plans import maintain as mt
-
-    orig = mt.zorder.write_zordered
-
-    def corrupt_write(df, path, x, y, n_files=16, mode="overwrite"):
-        orig(bad, path, x, y, n_files=n_files, mode=mode)
-
-    mt.zorder.write_zordered = corrupt_write
-    try:
-        with pytest.raises(ValueError, match="changed 1 bucket"):
-            maintain_table(
-                spark, src, str(tmp_path / "dest2"),
-                key_cols=["event_id"],
-                payload_cols=["user_id", "event_type", "vi"],
-                zorder_cols=("user_id", "vi"), n_files=4, n_buckets=512,
-            )
-    finally:
-        mt.zorder.write_zordered = orig
 
 
 def test_cusum_matches_recurrence_and_detects_shift(spark):
@@ -2002,43 +1719,6 @@ def test_stream_cusum_carries_recurrence_across_batches(spark, sf_dir, tmp_path)
             .start()
         )
         await_stream(q)
-
-
-def test_monitor_deseasonalized_cusum_beats_raw(spark):
-    """The composition's reason to exist: a strong weekly pattern plus
-    a mid-stream +4 level shift. CUSUM on the deseasonalized remainder
-    fires at the shift; the identical detector on the RAW series
-    (same slack/threshold) never fires at all — the seasonal swing
-    inflates sigma so a 4-unit shift is only ~0.8 raw-sigma, drowned
-    in the standardization."""
-    from pdf_to_vectordb_etl_spark.operators import aggregates
-    from pdf_to_vectordb_etl_spark.plans.monitor import monitor_series
-
-    pattern = [6.0, -6.0, 4.0, -4.0, 5.0, -5.0, 0.0]
-    shift_at = 42
-    rows = [
-        ("m", t, pattern[t % 7] + (4.0 if t >= shift_at else 0.0))
-        for t in range(70)
-    ]
-    df = spark.createDataFrame(rows, ["key", "t", "v"])
-    rep = monitor_series(
-        df, value_col="v", time_col="t", by="key", period=7,
-        slack=0.5, threshold=4.0,
-    ).first()
-    assert rep["seasonal_amplitude"] > 8  # the pattern was found
-    assert rep["first_alarm"] is not None
-    # the centered MA sees the shift up to half a window early (the
-    # trend at t in [shift-3, shift) already averages shifted points),
-    # so on-time means within the MA half-window of the truth
-    assert shift_at - 3 <= rep["first_alarm"] <= shift_at + 6
-    raw = aggregates.cusum_changepoints(
-        df, value_col="v", by="key", order_cols=("t",),
-        slack=0.5, threshold=4.0,
-    )
-    raw_first = (
-        raw.filter("alarm_up OR alarm_down").agg(F.min("t")).first()[0]
-    )
-    assert raw_first is None  # the raw detector misses the shift entirely
 
 
 def test_stream_cusum_tolerates_equal_timestamps(spark, tmp_path):

@@ -238,8 +238,7 @@ def test_suffix_ranks_match_python_sort(spark):
 
 def test_suffix_ranks_ties_on_identical_docs(spark):
     """Identical documents produce identical suffixes — dense ranks
-    must TIE (equal srank), not break arbitrarily, and
-    repeated_suffix_groups must surface every tied group."""
+    must TIE (equal srank), not break arbitrarily."""
     from pdf_to_vectordb_etl_spark.operators import suffixes
 
     docs = spark.createDataFrame(
@@ -256,14 +255,6 @@ def test_suffix_ranks_ties_on_identical_docs(spark):
             k for k, v in by_rank.items() if (1, pos) in v and (2, pos) in v
         ]
         assert shared, f"pos {pos} suffixes of identical docs must tie"
-    groups = {
-        r["srank"]: (r["n_suffixes"], r["n_docs"])
-        for r in suffixes.repeated_suffix_groups(ranks).collect()
-    }
-    # exactly the 4 cross-doc ties (the xyzw suffixes); 'qq' vs 'q'
-    # are different strings so doc 3 contributes none
-    assert len(groups) == 4
-    assert sorted(groups.values()) == [(2, 2)] * 4
 
 
 def test_longest_repeated_substring_known_answer(spark):

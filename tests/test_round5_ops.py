@@ -712,23 +712,6 @@ def test_multi_pattern_hits_exact_per_offset(spark):
     assert textsearch.multi_pattern_hits(ddf, empty).count() == 0
 
 
-def test_blocklist_filter_weighted_gate(spark):
-    from pdf_to_vectordb_etl_spark.operators import textsearch
-
-    ddf = spark.createDataFrame(
-        [(1, "bad bad good"), (2, "all good here"), (3, "")],
-        ["doc_id", "text"],
-    )
-    pw = spark.createDataFrame([("bad", 5), ("good", 1)], ["pattern", "w"])
-    out = {
-        r["doc_id"]: (r["total_hits"], r["keep"])
-        for r in textsearch.blocklist_filter(
-            ddf, pw, max_hits=2, weight_col="w"
-        ).collect()
-    }
-    assert out == {1: (11, False), 2: (1, True), 3: (0, True)}
-
-
 # --------------------------------------- content-defined chunking
 
 def test_content_defined_chunks_brute_force_and_shift_robust(spark):
@@ -773,15 +756,6 @@ def test_content_defined_chunks_brute_force_and_shift_robust(spark):
     d1 = {r[4] for r in got if r[0] == 1}
     d2 = {r[4] for r in got if r[0] == 2}
     assert len(d1 & d2) >= len(d1) - 2  # re-synced after the 2-char shift
-
-    stats = {
-        r["digest"]: r
-        for r in chunking.cdc_dedup_stats(
-            chunking.content_defined_chunks(ddf, window=8, avg_size=32)
-        ).collect()
-    }
-    shared = next(iter(d1 & d2))
-    assert stats[shared]["n_copies"] == 2 and stats[shared]["n_docs"] == 2
 
 
 # ------------------------------------------ global row number / ntile

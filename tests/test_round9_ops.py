@@ -146,7 +146,7 @@ def test_nn_descent_incremental_assign_planted_twin(spark):
     )
 
 
-def test_nn_descent_driver_fast_path_equals_distributed(spark, sf_dir):
+def test_nn_descent_driver_fast_path_equals_distributed(spark, sf_dir, monkeypatch):
     """The bounded driver fast path (collected matrix + exact-int
     numpy/GEMM build) must produce the IDENTICAL edge set as the
     distributed join loop — same arithmetic, same (dist, dst) tie
@@ -159,12 +159,12 @@ def test_nn_descent_driver_fast_path_equals_distributed(spark, sf_dir):
     fast = sorted(
         tuple(r) for r in nn_descent_graph(emb, k=5, rounds=3).collect()
     )
-    dist = sorted(
-        tuple(r)
-        for r in nn_descent_graph(
-            emb, k=5, rounds=3, fast_path_max_nodes=None
-        ).collect()
-    )
+    with monkeypatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_PLACEMENT", "distributed")
+        dist = sorted(
+            tuple(r)
+            for r in nn_descent_graph(emb, k=5, rounds=3).collect()
+        )
     assert fast == dist and len(fast) > 0
 
 

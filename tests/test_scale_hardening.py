@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from pdf_to_vectordb_etl_spark import sinks
 from pdf_to_vectordb_etl_spark.operators import joins, skew
 from pdf_to_vectordb_etl_spark.streaming.pipeline import drain_to_memory
-from pdf_to_vectordb_etl_spark.streaming.stateful import running_totals, sessionize
+from pdf_to_vectordb_etl_spark.streaming.stateful import running_totals
 from tests.conftest import load
 
 
@@ -89,61 +89,6 @@ def test_running_totals_stateful_stream(spark, sf_dir, tmp_path):
         | (final["total_value"] != want["total_value"])
     )
     assert want.count() > 0 and diff.count() == 0
-
-
-def test_sessionize_closes_on_gap(spark, tmp_path):
-    hour = 3_600_000_000_000
-    rows = [
-        (1, 0), (1, hour // 2), (1, hour * 3),      # session break after 2nd
-        (1, hour * 3 + 10), (1, hour * 9),          # second break
-        (2, 0), (2, hour * 10),                     # one break for user 2
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts long")
-    src = str(tmp_path / "sess_src")
-    df.coalesce(1).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    sessions = drain_to_memory(
-        sessionize(stream, gap_ns=hour), "sessions_t", mode="append"
-    )
-    got = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in sessions.collect()
-    }
-    # closed sessions only (the trailing session per user stays open in state)
-    assert got == {
-        (1, 0, hour // 2, 2),
-        (1, hour * 3, hour * 3 + 10, 2),
-        (2, 0, 0, 1),
-    }
-
-
-def test_stream_dedup_first_wins_across_batches(spark, sf_dir, tmp_path):
-    from pdf_to_vectordb_etl_spark.streaming.pipeline import stream_dedup
-
-    events = load(spark, sf_dir, "events").filter(F.col("user_id") < 10)
-    # duplicate every row so each micro-batch re-sees known keys
-    doubled = events.union(events)
-    src = str(tmp_path / "dup_src")
-    doubled.repartition(4).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    deduped = stream_dedup(
-        stream.withColumn("t", F.timestamp_micros(F.expr("ts div 1000"))),
-        keys=["event_id"],
-        # wide watermark: fixture files are not time-ordered, so a short
-        # watermark would misclassify later batches as late data
-        time_col="t",
-        watermark="400 days",
-    )
-    got = drain_to_memory(deduped, "stream_dedup_t", mode="append")
-    # every key exactly once despite 2x input across multiple batches
-    assert got.count() == events.count()
-    assert got.select("event_id").distinct().count() == events.count()
 
 
 def test_stream_cap_per_key_enforces_quota_across_batches(spark, sf_dir, tmp_path):
@@ -248,7 +193,8 @@ def test_band_candidates_star_caps_boilerplate(spark):
 
     m = 10_000
     df = _boilerplate(spark, m=m)
-    capped = dedup.minhash_lsh_candidates(df, max_bucket_size=64)
+    sig = dedup.minhash_signatures(df)
+    capped = dedup._band_candidates(sig, 32, 8, max_bucket_size=64)
     pairs = capped.collect()
     # star scheme: every dup connects to the min-id anchor once per
     # bucket -> exactly m-1 pairs from the hot cluster, not m(m-1)/2
@@ -510,18 +456,3 @@ def test_incremental_bloom_plan_broadcasts_bitset(spark, sf_dir):
     # the k=4 screen joins are all broadcast — the batch side never
     # shuffles to meet the bitset
     assert plan.count("BroadcastHashJoin") >= 4
-
-
-def test_lsh_band_plan_midpoints():
-    from pdf_to_vectordb_etl_spark.operators.dedup import lsh_band_plan
-
-    # high threshold -> few bands of many rows; low threshold -> many
-    # bands of few rows; probability at threshold stays meaningful
-    b_hi, r_hi, p_hi, _ = lsh_band_plan(0.9, 32)
-    b_lo, r_lo, p_lo, _ = lsh_band_plan(0.3, 32)
-    assert b_hi < b_lo and r_hi > r_lo
-    assert b_hi * r_hi == 32 and b_lo * r_lo == 32
-    assert 0.2 < p_hi < 1.0 and 0.2 < p_lo < 1.0
-    # the default registry setting (8 bands of 4) is what the solver
-    # picks near its own midpoint (1/8)^(1/4) ~ 0.595
-    assert lsh_band_plan(0.6, 32)[:2] == (8, 4)

@@ -104,18 +104,6 @@ def test_webcorpus_strip_markup(spark):
     assert got == "Hello world &amp; friends <3"
 
 
-def test_webcorpus_domain_stats(spark):
-    from pdf_to_vectordb_etl_spark.operators import webcorpus as wc
-
-    df = spark.createDataFrame(
-        [("https://a.example.com/1",), ("http://www.example.com/2",),
-         ("https://other.org/x",)],
-        "url string",
-    )
-    got = {r["domain"]: r["n_docs"] for r in wc.domain_stats(df).collect()}
-    assert got == {"example.com": 2, "other.org": 1}
-
-
 def test_webcorpus_dehyphenate(spark):
     from pdf_to_vectordb_etl_spark.operators import webcorpus as wc
 

@@ -7,7 +7,8 @@
 # to one of them and a silently-shipped regression.
 #
 # Usage: tools/precommit_gate.sh [quick|full-sf01]
-#   quick     — sf0.01 registry + pytest only (inner-loop edits);
+#   quick     — reachability audit + sf0.01 registry + pytest only
+#               (inner-loop edits);
 #   full-sf01 — launch the ~17-min sf0.1 full-registry sweep DETACHED
 #               (nohup; outlives tool timeouts) and exit; log + verdict
 #               land in /tmp/sweep_sf01.log — REQUIRED whenever a new
@@ -25,6 +26,9 @@ if [[ "${1:-full}" == "full-sf01" ]]; then
   echo "pid $! — tail -1 /tmp/sweep_sf01.log for the verdict"
   exit 0
 fi
+
+echo "== reachability audit (no package def only tests reach) =="
+python tools/audit_reachability.py
 
 echo "== oracle gate @ sf0.01 =="
 python tools/check_oracle.py
