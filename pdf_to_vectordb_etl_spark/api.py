@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import sinks
 from .functions import filename as fn
-from .operators import aggregates, chunking, embedding, joins, topk
+from .operators import aggregates, chunking, embedding, joins
 from .plans import etl, load
 from .sources import pdf as pdfsource
 
@@ -186,23 +186,9 @@ def vector_search(
 
     Like the reference's search hits (qdrant_text_loader.py:137-142),
     each row carries the stored payload — ``page_content`` and the
-    ``materia``/``ano`` metadata — not just (id, score): the k-row
-    top-k result is broadcast back onto the collection for the payload
-    fetch, so the join adds no shuffle at any corpus size."""
+    ``materia``/``ano`` metadata — not just (id, score). The payload
+    rides through the top-k heap (``load.search_vector``): one scan,
+    one dedup exchange, no join back onto the collection."""
     if len(query_vector) != dim:
         raise ValueError(f"query vector must have {dim} dims, got {len(query_vector)}")
-    corpus = topk.dim_guard(
-        sinks.read_embeddings_table(spark, collection_path), "vector", dim
-    )
-    hits = topk.topk_cosine(corpus, query_vector, k=k, vec_col="vector", id_col="id")
-    return (
-        corpus.join(F.broadcast(hits), "id")
-        .select(
-            "id",
-            "cosine_sim",
-            F.col("payload.page_content").alias("page_content"),
-            F.col("payload.metadata.materia").alias("materia"),
-            F.col("payload.metadata.ano").alias("ano"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.col("id"))
-    )
+    return load.search_vector(spark, collection_path, query_vector, k=k, dim=dim)

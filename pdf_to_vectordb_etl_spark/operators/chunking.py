@@ -19,7 +19,6 @@ SPLIT_KEY = "(RESPOSTA CORRETA)"  # reference qdrant_text_loader.py:28
 # group and the split drops only the inner words (caught by the golden-
 # TXT parity test against /root/reference/pdf_content_to_files)
 SPLIT_KEY_RE = re.escape(SPLIT_KEY)
-TAIL_BUFFER = 22  # reference :70 — captures "(RESPOSTA CORRETA): X\n"
 
 
 def split_chunks(
@@ -44,9 +43,10 @@ def split_chunks(
     # the post-final remainder (text after the last answer tail) is
     # dropped AFTER the lead window below — it still supplies the last
     # real chunk's "(RESPOSTA CORRETA): X" tail via lead()
-    # body_{i+1} starts with ": X\n\n…" — its first TAIL_BUFFER-len(KEY)
-    # chars belong to chunk i's tail; simplest faithful form: re-attach
-    # the key and the answer char from the *next* body's head.
+    # body_{i+1} starts with ": X\n\n…" — the reference's fixed +22-char
+    # buffer (reference :70) hands that head to chunk i's tail; simplest
+    # faithful form: re-attach the key and the answer char from the
+    # *next* body's head.
     w = Window.partitionBy(*key_cols).orderBy("chunk_index")
     nxt = F.lead("body").over(w)
     tail = F.concat(

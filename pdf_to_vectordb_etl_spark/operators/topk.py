@@ -13,7 +13,9 @@ signature join is an equi-join, broadcastable for small query sets.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.vector import cosine_similarity
 from ..placement import bounded_collect
@@ -42,17 +44,20 @@ def topk_cosine(
     k: int = 1,
     vec_col: str = "vector",
     id_col: str = "id",
+    payload: Sequence[Column | str] = (),
 ) -> DataFrame:
     """K1 — brute-force top-k by cosine similarity to one query vector.
 
     ``orderBy(desc).limit(k)`` compiles to TakeOrderedAndProject:
     per-partition heap + driver merge of k rows — the right physical
-    plan at any scale. Ties broken by id for determinism.
+    plan at any scale. Ties broken by id for determinism. ``payload``
+    columns ride through the heap beside (id, cosine_sim), so a hit
+    carries them without a join back onto ``df``.
     """
     q = F.array(*[F.lit(float(x)) for x in query_vector])
     sim = cosine_similarity(F.col(vec_col), q)
     return (
-        df.select(F.col(id_col), sim.alias("cosine_sim"))
+        df.select(F.col(id_col), sim.alias("cosine_sim"), *payload)
         .orderBy(F.desc("cosine_sim"), F.col(id_col))
         .limit(k)
     )

@@ -25,7 +25,8 @@ def extract_questions(
     compat_sentinel: bool = False,
 ) -> DataFrame:
     """Page-grain corpus (PV + GB docs) -> question-grain DataFrame
-    (schemas.QUESTION_SCHEMA shape).
+    (one row per question: ``ID``, year, day, subject, number, text,
+    alternatives and the answer-key ``correct_answer``).
 
     Mirrors the reference's 4 handler variants (reference
     enem_pdf_extractor.py:396-938) as flags instead of code branches

@@ -7,9 +7,13 @@ them into chunks, embeds one chunk per HTTPS call, and upserts with
 count-continuation IDs. Here the question-grain DataFrame flows
 straight through: template -> embed (native deterministic or batched
 client UDF) -> deterministic IDs -> payload shaping -> idempotent
-parquet vector table -> brute-force/IVF cosine search over it. The
-chunk re-split exists only as the golden-parity *view* (operators/
+parquet vector table -> brute-force cosine search over it. The chunk
+re-split exists only as the golden-parity *view* (operators/
 chunking.py), not as a lossy intermediate.
+
+A search is one pass: a scan under the pinned point schema, the id
+dedup exchange, and one TakeOrderedAndProject whose heap carries the
+payload — two Spark jobs, none of them before the action.
 """
 
 from __future__ import annotations
@@ -62,6 +66,37 @@ def load_questions(
     sinks.write_embeddings_table(points, table_path)
 
 
+#: hit fields (the reference's search hits, qdrant_text_loader.py:
+#: 137-142) -> their path in the stored point
+HIT_PAYLOAD = {
+    "page_content": "payload.page_content",
+    "materia": "payload.metadata.materia",
+    "ano": "payload.metadata.ano",
+}
+
+
+def search_vector(
+    spark: SparkSession,
+    table_path: str,
+    query_vector: list[float],
+    k: int = 1,
+    dim: int = 64,
+    subject: str | None = None,
+) -> DataFrame:
+    """kNN read path (K1/K2) on a query vector: scan the collection,
+    drop vectors of the wrong dimensionality, return the top-k points
+    by cosine as (id, cosine_sim, page_content, materia, ano) in
+    (cosine desc, id) order. ``subject`` keeps only that ``materia``.
+    The payload rides through the top-k heap, so no second scan or
+    join fetches it."""
+    corpus = sinks.read_embeddings_table(spark, table_path)
+    if subject is not None:
+        corpus = corpus.filter(F.col("payload.metadata.materia") == subject)
+    corpus = topk.dim_guard(corpus, "vector", dim)  # K2
+    payload = [F.col(path).alias(name) for name, path in HIT_PAYLOAD.items()]
+    return topk.topk_cosine(corpus, query_vector, k=k, payload=payload)
+
+
 def search_text(
     spark: SparkSession,
     table_path: str,
@@ -70,25 +105,14 @@ def search_text(
     dim: int = 64,
     subject: str | None = None,
 ) -> DataFrame:
-    """kNN read path (K1/K2): embed the query text with the same
-    embedder, scan the collection, return top-k by cosine. ``subject``
-    pushes a payload filter below the scan (partition/row-group
-    pruning on a partitioned collection)."""
-    corpus = sinks.read_embeddings_table(spark, table_path)
-    if subject is not None:
-        corpus = corpus.filter(F.col("payload.metadata.materia") == subject)
-    corpus = topk.dim_guard(corpus, "vector", dim)  # K2
-    qvec_row = (
-        spark.range(1)
-        .select(
-            embedding.deterministic_embedding(F.lit(query_text), dim=dim).alias("v")
-        )
-        .first()
-    )
-    out = topk.topk_cosine(corpus, list(qvec_row["v"]), k=k, vec_col="vector", id_col="id")
-    return out.join(
-        sinks.read_embeddings_table(spark, table_path).select(
-            "id", "payload.page_content", "payload.metadata.materia", "payload.metadata.ano"
-        ),
-        "id",
-    )
+    """kNN read path on query text: embed it with the collection's
+    embedder, then ``search_vector``. The query is embedded on a
+    one-row Arrow-built frame, a LocalRelation whose projection the
+    optimizer folds to a constant, so it runs no Spark job."""
+    import pyarrow as pa
+
+    query = spark.createDataFrame(pa.table({"t": pa.array([query_text], pa.string())}))
+    qvec = query.select(
+        embedding.deterministic_embedding(F.col("t"), dim=dim).alias("v")
+    ).first()["v"]
+    return search_vector(spark, table_path, list(qvec), k=k, dim=dim, subject=subject)

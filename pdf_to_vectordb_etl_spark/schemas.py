@@ -1,8 +1,11 @@
 """Fixed StructTypes replacing the reference's ad-hoc dict shapes.
 
 The reference builds row dicts whose schema varies by code branch
-(reference enem_pdf_extractor.py:347-388); here every shape is one
-declared StructType with nullable fields (SURVEY.md §1).
+(reference enem_pdf_extractor.py:347-388). Here the two shapes that
+cross a storage boundary are declared StructTypes with nullable fields
+(SURVEY.md §1): the page-grain intermediate a page-file stream reads
+and the vector point the collection stores. The other record shapes
+(questions, answer keys, stats) are fixed by the plans that build them.
 """
 
 from __future__ import annotations
@@ -25,53 +28,32 @@ PAGE_SCHEMA = T.StructType(
     ]
 )
 
-# §1.1 — question record (reference enem_pdf_extractor.py:349-358).
-QUESTION_SCHEMA = T.StructType(
-    [
-        T.StructField("ID", T.StringType(), False),
-        T.StructField("year", T.IntegerType(), True),
-        T.StructField("day", T.StringType(), True),
-        T.StructField("subject", T.StringType(), True),
-        T.StructField("question_num", T.IntegerType(), True),
-        T.StructField("question_text", T.StringType(), True),
-        T.StructField("alternatives", T.ArrayType(T.StringType()), True),
-        T.StructField("correct_answer", T.StringType(), True),  # NULL = sentinel path
-        T.StructField("page_images", T.ArrayType(T.StringType()), True),
-        T.StructField("page_index", T.IntegerType(), True),  # provenance for order
-        T.StructField("pos", T.IntegerType(), True),  # intra-page order
-    ]
-)
-
-# §2.3 J2 broadcast side — parsed answer key.
-ANSWER_KEY_SCHEMA = T.StructType(
-    [
-        T.StructField("year", T.IntegerType(), False),
-        T.StructField("day", T.StringType(), False),
-        T.StructField("color", T.StringType(), False),
-        T.StructField("question_num", T.IntegerType(), False),
-        T.StructField("answer", T.StringType(), True),
-    ]
-)
-
-# §1.5 — vector point (reference qdrant_text_loader.py:205-211).
+# §1.5 — vector point, the shape ``embedding.vector_points`` writes and
+# the pinned read schema of the collection (reference
+# qdrant_text_loader.py:205-211).
 EMBEDDING_SCHEMA = T.StructType(
     [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("vector", T.ArrayType(T.FloatType()), False),
-        T.StructField("page_content", T.StringType(), True),
-        T.StructField("materia", T.StringType(), True),
-        T.StructField("ano", T.IntegerType(), True),
-    ]
-)
-
-# §1.6 — long-form extraction stats (pivoted only at the CSV sink;
-# reference qdrant_text_loader.py:102-120).
-STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("year", T.IntegerType(), False),
-        T.StructField("subject", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),  # todas_questoes | questoes_add
-        T.StructField("n", T.LongType(), False),
+        T.StructField("id", T.LongType(), True),
+        T.StructField("vector", T.ArrayType(T.FloatType()), True),
+        T.StructField(
+            "payload",
+            T.StructType(
+                [
+                    T.StructField("page_content", T.StringType(), True),
+                    T.StructField(
+                        "metadata",
+                        T.StructType(
+                            [
+                                T.StructField("materia", T.StringType(), True),
+                                T.StructField("ano", T.IntegerType(), True),
+                            ]
+                        ),
+                        True,
+                    ),
+                ]
+            ),
+            True,
+        ),
     ]
 )
 

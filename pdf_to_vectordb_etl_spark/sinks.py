@@ -23,6 +23,7 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame, Row, functions as F
 
 from .operators.aggregates import stats_pivot
+from .schemas import EMBEDDING_SCHEMA
 
 
 def write_subject_txt(questions_txt: DataFrame, path: str, text_col: str = "txt") -> None:
@@ -130,15 +131,31 @@ def write_embeddings_table(
     same IDs; readers dedup on id) — compare the reference's count-
     continuation IDs which silently collide under concurrent writers
     (SURVEY §7 guiding decision 2).
+
+    ``points`` must have the ``EMBEDDING_SCHEMA`` shape that
+    ``embedding.vector_points`` builds (nullability aside), else
+    ValueError: the reader pins that schema, so a point written without
+    one of its fields would read back as NULL instead of failing.
     """
+    # simpleString leaves nullability out
+    if points.schema.simpleString() != EMBEDDING_SCHEMA.simpleString():
+        raise ValueError(
+            f"vector points must be {EMBEDDING_SCHEMA.simpleString()}, "
+            f"got {points.schema.simpleString()}"
+        )
     points.write.mode(mode).parquet(path)
 
 
 def read_embeddings_table(spark, path: str) -> DataFrame:
-    """Collection read path; dedup on id keeps re-appended points single."""
+    """Collection read path; dedup on id keeps re-appended points single.
+
+    Reads with the pinned ``EMBEDDING_SCHEMA``, so building the frame
+    runs no schema-inference job; the id window is its one exchange. A
+    missing ``path`` raises; a directory without data files reads as an
+    empty collection."""
     from pyspark.sql import Window
 
-    df = spark.read.parquet(path)
+    df = spark.read.schema(EMBEDDING_SCHEMA).parquet(path)
     w = Window.partitionBy("id").orderBy(F.lit(1))
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 

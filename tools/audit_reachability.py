@@ -3,16 +3,18 @@
 
 A package function that only a unit test calls is code the engine
 carries without using. This lists every top-level ``def`` / ``class``
-under ``pdf_to_vectordb_etl_spark/`` and marks it reached when its name
-is referenced from outside ``tests/``: ``__spark_entry__.py``,
+and module-level constant (``X = ...``) under
+``pdf_to_vectordb_etl_spark/`` and marks it reached when its name is
+referenced from outside ``tests/``: ``__spark_entry__.py``,
 ``bench.py``, ``tools/``, ``perfbench/``, or the package's own code.
 
 Reachability is a fixpoint. The roots are the names referenced
-anywhere outside a package top-level def (module-level code, the
-entry module, the tools) plus :data:`ALLOWLIST`. A def is reached when
-a root names it, or when the body of a reached def names it. So two
-test-only defs that call each other stay unreached; a private helper
-of a reached def is reached.
+anywhere outside a package top-level def or constant (module-level
+code, the entry module, the tools) plus :data:`ALLOWLIST`. A def is
+reached when a root names it, or when the body of a reached def (for a
+constant, its assigned value) names it. So two test-only defs that
+call each other stay unreached; a private helper of a reached def is
+reached.
 
 Pure AST plus name matching (a name matches every def of that name,
 in any module); starts no Spark. Imports inside the package's
@@ -94,6 +96,31 @@ def _names(node: ast.AST, *, imports: bool = True) -> set[str]:
     return out
 
 
+def _defined(stmt: ast.stmt) -> set[str]:
+    """Names a top-level statement defines: a def or class, or the
+    plain-name targets of a constant assignment (``X = ...``,
+    ``X: T = ...``, ``X, Y = ...``; dunders such as ``__all__`` are
+    module protocol, not constants)."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return {stmt.name}
+    if isinstance(stmt, ast.Assign):
+        targets = list(stmt.targets)
+    elif isinstance(stmt, ast.AnnAssign) and stmt.value is not None:
+        targets = [stmt.target]
+    else:
+        return set()
+    names: set[str] = set()
+    while targets:  # unpack X, (Y, *Z) = ...; X.a = / X[k] = are uses
+        t = targets.pop()
+        if isinstance(t, ast.Name) and not t.id.startswith("__"):
+            names.add(t.id)
+        elif isinstance(t, (ast.Tuple, ast.List)):
+            targets.extend(t.elts)
+        elif isinstance(t, ast.Starred):
+            targets.append(t.value)
+    return names
+
+
 def scan(allow=ALLOWLIST) -> tuple[dict[str, list[str]], set[str]]:
     """Return ({def name: [module:line, ...]}, names reached from the
     non-test code plus ``allow``)."""
@@ -105,13 +132,12 @@ def scan(allow=ALLOWLIST) -> tuple[dict[str, list[str]], set[str]]:
         where = path.relative_to(ROOT)
         reexports = path.name == "__init__.py"
         for stmt in tree.body:
-            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef,
-                                 ast.ClassDef)):
-                defs.setdefault(stmt.name, []).append(f"{where}:{stmt.lineno}")
-                body = _names(stmt) - {stmt.name}
-                bodies[stmt.name] = bodies.get(stmt.name, set()) | body
-            else:
+            names = _defined(stmt)
+            if not names:
                 roots |= _names(stmt, imports=not reexports)
+            for name in names:
+                defs.setdefault(name, []).append(f"{where}:{stmt.lineno}")
+                bodies[name] = bodies.get(name, set()) | (_names(stmt) - names)
     for caller in CALLERS:
         for path in _py_files(caller):
             roots |= _names(ast.parse(path.read_text(), filename=str(path)))
@@ -134,7 +160,7 @@ def main() -> int:
         print(f"UNREACHED  {name}  ({', '.join(defs[name])})")
     for name in stale:
         print(f"STALE ALLOWLIST  {name}: no such def, or reached without the allowlist")
-    print(f"{len(defs)} top-level package defs, {len(reached)} reached "
+    print(f"{len(defs)} top-level package defs and constants, {len(reached)} reached "
           f"({len(ALLOWLIST)} allowlisted), {len(unreached)} unreached")
     return 1 if unreached or stale else 0
 
