@@ -44,7 +44,7 @@ def topk_cosine(
     k: int = 1,
     vec_col: str = "vector",
     id_col: str = "id",
-    payload: Sequence[Column | str] = (),
+    payload: Sequence[Column] = (),
 ) -> DataFrame:
     """K1 — brute-force top-k by cosine similarity to one query vector.
 

@@ -107,11 +107,11 @@ def search_text(
 ) -> DataFrame:
     """kNN read path on query text: embed it with the collection's
     embedder, then ``search_vector``. The query is embedded on a
-    one-row Arrow-built frame, a LocalRelation whose projection the
+    one-row pandas-built frame, a LocalRelation whose projection the
     optimizer folds to a constant, so it runs no Spark job."""
-    import pyarrow as pa
+    import pandas as pd
 
-    query = spark.createDataFrame(pa.table({"t": pa.array([query_text], pa.string())}))
+    query = spark.createDataFrame(pd.DataFrame({"t": [query_text]}))
     qvec = query.select(
         embedding.deterministic_embedding(F.col("t"), dim=dim).alias("v")
     ).first()["v"]
