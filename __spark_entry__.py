@@ -16,6 +16,7 @@ matches.
 
 from __future__ import annotations
 
+import textwrap
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -522,9 +523,9 @@ def q_x10_segmentation(spark, sf):
 # every 9th index), image-page drop, malformed drop, shared
 # D1 printed slots, subject ranges, and the deterministic
 # answer-key letter with its missing-slot NULLs — with no
-# dependency on the parse pipeline under test.
-@query(oracle="""
-            WITH params AS (
+# dependency on the parse pipeline under test. The enem_questions,
+# a3_extraction_stats and o7_stats_csv_roundtrip oracles share it.
+_ENEM_EMITTED_SQL = """WITH params AS (
               SELECT y.year, d.day,
                      CASE WHEN d.day = 'D1' THEN 95 ELSE 91 END AS max_i,
                      CASE WHEN d.day = 'D1' THEN 1 ELSE 2 END AS dnum
@@ -543,7 +544,34 @@ def q_x10_segmentation(spark, sf):
             emitted AS (
               SELECT * FROM q2
               WHERE (internal * 31 + year) % 23 <> 0
-                AND (page_idx + year + dnum) % 7 <> 0)
+                AND (page_idx + year + dnum) % 7 <> 0)"""
+
+# per emitted row: year, subject and whether it carries an answer
+_ENEM_ROWS_SQL = f"""{_ENEM_EMITTED_SQL},
+            rows_ AS (
+              SELECT CAST(year AS INT) AS year,
+                     CASE WHEN day = 'D2' AND internal <= 45 THEN 'natu'
+                          WHEN day = 'D2' THEN 'math'
+                          WHEN internal <= 5 THEN 'eng'
+                          WHEN internal <= 10 THEN 'spani'
+                          WHEN internal <= 50 THEN 'lang'
+                          ELSE 'huma' END AS subject,
+                     CASE WHEN (num * 13 + year) % 29 = 0 THEN NULL
+                          ELSE 'x' END AS ca
+              FROM emitted)"""
+
+# the long-form A3 stats over rows_: every question, then the answered
+_ENEM_STATS_SQL = """SELECT year, subject, 'todas_questoes' AS kind,
+                   CAST(count(*) AS BIGINT) AS n
+            FROM rows_ GROUP BY year, subject
+            UNION ALL
+            SELECT year, subject, 'questoes_add' AS kind,
+                   CAST(count(*) AS BIGINT) AS n
+            FROM rows_ WHERE ca IS NOT NULL GROUP BY year, subject"""
+
+
+@query(oracle=f"""
+            {_ENEM_EMITTED_SQL}
             SELECT year || '_' || day || '_N' || num AS ID,
                    CAST(year AS INT) AS year, day,
                    CASE WHEN day = 'D2' AND internal <= 45 THEN 'natu'
@@ -809,47 +837,10 @@ def q_a4_pivot(spark, sf):
     )
 
 
-# Shared closed-form re-derivation of the synthetic enem corpus
-# (same CTE chain as enem_questions) -> long-form A3 stats.
-@query(oracle="""
-            WITH params AS (
-              SELECT y.year, d.day,
-                     CASE WHEN d.day = 'D1' THEN 95 ELSE 91 END AS max_i,
-                     CASE WHEN d.day = 'D1' THEN 1 ELSE 2 END AS dnum
-              FROM (VALUES (2022), (2023)) y(year)
-              CROSS JOIN (VALUES ('D1'), ('D2')) d(day)),
-            q AS (
-              SELECT year, day, dnum, i AS internal,
-                     CASE WHEN day = 'D1' AND i > 5 THEN i - 5
-                          WHEN day = 'D1' THEN i
-                          ELSE i + 90 END AS num,
-                     CAST(ceil(i / 5.0) AS INT) AS c
-              FROM params
-              CROSS JOIN (SELECT unnest(generate_series(1, 95)) AS i) s
-              WHERE i <= max_i),
-            q2 AS (SELECT *, c + (c - 1) // 8 AS page_idx FROM q),
-            emitted AS (
-              SELECT * FROM q2
-              WHERE (internal * 31 + year) % 23 <> 0
-                AND (page_idx + year + dnum) % 7 <> 0),
-            rows_ AS (
-              SELECT CAST(year AS INT) AS year,
-                     CASE WHEN day = 'D2' AND internal <= 45 THEN 'natu'
-                          WHEN day = 'D2' THEN 'math'
-                          WHEN internal <= 5 THEN 'eng'
-                          WHEN internal <= 10 THEN 'spani'
-                          WHEN internal <= 50 THEN 'lang'
-                          ELSE 'huma' END AS subject,
-                     CASE WHEN (num * 13 + year) % 29 = 0 THEN NULL
-                          ELSE 'x' END AS ca
-              FROM emitted)
-            SELECT year, subject, 'todas_questoes' AS kind,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM rows_ GROUP BY year, subject
-            UNION ALL
-            SELECT year, subject, 'questoes_add' AS kind,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM rows_ WHERE ca IS NOT NULL GROUP BY year, subject
+# The closed-form enem corpus rows (_ENEM_ROWS_SQL) -> long-form A3 stats.
+@query(oracle=f"""
+            {_ENEM_ROWS_SQL}
+            {_ENEM_STATS_SQL}
         """)
 def q_a3_extraction_stats(spark, sf):
     """A3 — the tried-vs-inserted long-form stats table (reference
@@ -873,47 +864,12 @@ def q_a3_extraction_stats(spark, sf):
 
 
 # The same stats pivoted to the CSV sink shape (max(CASE) pivot
-# == Spark's first-over-single-value; absent combos NULL).
-@query(oracle="""
-            WITH params AS (
-              SELECT y.year, d.day,
-                     CASE WHEN d.day = 'D1' THEN 95 ELSE 91 END AS max_i,
-                     CASE WHEN d.day = 'D1' THEN 1 ELSE 2 END AS dnum
-              FROM (VALUES (2022), (2023)) y(year)
-              CROSS JOIN (VALUES ('D1'), ('D2')) d(day)),
-            q AS (
-              SELECT year, day, dnum, i AS internal,
-                     CASE WHEN day = 'D1' AND i > 5 THEN i - 5
-                          WHEN day = 'D1' THEN i
-                          ELSE i + 90 END AS num,
-                     CAST(ceil(i / 5.0) AS INT) AS c
-              FROM params
-              CROSS JOIN (SELECT unnest(generate_series(1, 95)) AS i) s
-              WHERE i <= max_i),
-            q2 AS (SELECT *, c + (c - 1) // 8 AS page_idx FROM q),
-            emitted AS (
-              SELECT * FROM q2
-              WHERE (internal * 31 + year) % 23 <> 0
-                AND (page_idx + year + dnum) % 7 <> 0),
-            rows_ AS (
-              SELECT CAST(year AS INT) AS year,
-                     CASE WHEN day = 'D2' AND internal <= 45 THEN 'natu'
-                          WHEN day = 'D2' THEN 'math'
-                          WHEN internal <= 5 THEN 'eng'
-                          WHEN internal <= 10 THEN 'spani'
-                          WHEN internal <= 50 THEN 'lang'
-                          ELSE 'huma' END AS subject,
-                     CASE WHEN (num * 13 + year) % 29 = 0 THEN NULL
-                          ELSE 'x' END AS ca
-              FROM emitted),
+# == Spark's first-over-single-value; absent combos NULL); inside
+# the st CTE the stats SQL sits two columns deeper.
+@query(oracle=f"""
+            {_ENEM_ROWS_SQL},
             st AS (
-              SELECT year, subject, 'todas_questoes' AS kind,
-                     CAST(count(*) AS BIGINT) AS n
-              FROM rows_ GROUP BY year, subject
-              UNION ALL
-              SELECT year, subject, 'questoes_add' AS kind,
-                     CAST(count(*) AS BIGINT) AS n
-              FROM rows_ WHERE ca IS NOT NULL GROUP BY year, subject)
+            {textwrap.indent(_ENEM_STATS_SQL, '  ')})
             SELECT year, kind,
                    max(CASE WHEN subject = 'eng' THEN n END) AS eng,
                    max(CASE WHEN subject = 'lang' THEN n END) AS lang,
@@ -4049,8 +4005,8 @@ def q_kmeans_centroids(spark, sf):
 def q_zorder_key(spark, sf):
     """Morton (Z-order) clustering key over (user_id, value): min-max
     scale each to 16 bits, interleave with magic-number shifts — all
-    codegen integer math. The key drives write_zordered's range
-    clustering; emitted here per event so the oracle can replay the
+    codegen integer math. Range-clustering a write on the key gives
+    2-D file pruning; emitted here per event so the oracle can replay the
     exact bit math."""
     from pdf_to_vectordb_etl_spark.operators import zorder
 

@@ -116,15 +116,17 @@ def process_folder(
     Raises on the reference's error paths instead of returning False:
     odd/too-few PDF counts (A5) and unpaired tests (J1)."""
     files = pdfsource.with_filename_tokens(pdfsource.scan_pdf_folder(spark, folder))
-    parity = aggregates.folder_parity_check(files).first()
-    if not (parity["enough"] and parity["even"]):
-        raise ValueError(
-            f"folder must hold an even count >= 2 of PDFs, got {parity['n_pdfs']}"
-        )
+    # both checks in one action: the parity row joined to the first orphan
     _, orphans = joins.pair_tests_with_keys(files)
-    orphan_rows = orphans.limit(1).collect()
-    if orphan_rows:
-        raise ValueError(f"test without answer key: {orphan_rows[0]['test_doc_id']}")
+    check = aggregates.folder_parity_check(files).crossJoin(
+        orphans.agg(F.min("test_doc_id").alias("orphan"))
+    ).first()
+    if not (check["enough"] and check["even"]):
+        raise ValueError(
+            f"folder must hold an even count >= 2 of PDFs, got {check['n_pdfs']}"
+        )
+    if check["orphan"] is not None:
+        raise ValueError(f"test without answer key: {check['orphan']}")
 
     pages = pdfsource.pages_from_pdfs(
         files, decoder=decoder or pdfsource.real_pdf_decoder

@@ -862,66 +862,6 @@ def ccnet_perplexity_buckets(
     )
 
 
-def token_budget_allocation(
-    df: DataFrame,
-    budget: int,
-    quality: Column,
-    tokens: Column,
-    by: str = "source",
-) -> DataFrame:
-    """Greedy quality-ranked TOKEN-budget fill — the knob a curation
-    team turns after reading the per-source health dashboard: rank
-    sources by a measured quality signal, take each source's tokens in
-    full until the budget runs out, take a partial allocation at the
-    boundary source, zero after. (Greedy is optimal for this
-    fractional-knapsack shape — Dantzig 1957, public.)
-
-    Exactness: quality is an exact per-source micro integer (callers
-    pass a ratio as ``sum(pass)*1e6 div count`` — no doubles in the
-    ORDER), ranking ties break on the group key, and the prefix sum
-    runs over the GROUP-CARDINALITY table (a bounded global window —
-    one row per source, kilobytes at any corpus scale). Returns per
-    group: (group, quality_q6, n_tokens, alloc_tokens, alloc_frac_q6)
-    with sum(alloc_tokens) == min(budget, total tokens).
-
-    NULL group keys coalesce to '' BEFORE grouping (the
-    mixture_temperature_sweep convention): the prefix window orders by
-    (quality DESC, key), and a NULL key that ties on quality sorts
-    NULLS FIRST in Spark but NULLS LAST in DuckDB — which would shift
-    the greedy prefix and every downstream allocation.
-    """
-    from pyspark.sql import Window
-
-    per = df.groupBy(F.coalesce(F.col(by), F.lit("")).alias(by)).agg(
-        quality.alias("_q_micro"),
-        F.coalesce(F.sum(tokens), F.lit(0)).cast("long").alias("n_tokens"),
-    )
-    # bounded global window: one row per group (audit-allowlisted)
-    w = (
-        Window.orderBy(F.desc("_q_micro"), F.col(by))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prev = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    alloc = F.greatest(
-        F.lit(0).cast("long"),
-        F.least(F.col("n_tokens"), F.lit(budget) - prev),
-    )
-    return (
-        per.withColumn("alloc_tokens", alloc)
-        .select(
-            by,
-            (F.col("_q_micro") / 1e6).alias("quality_q6"),
-            "n_tokens",
-            "alloc_tokens",
-            F.expr(
-                "CASE WHEN n_tokens > 0 THEN"
-                " (CAST(alloc_tokens AS DECIMAL(38,0)) * 1000000"
-                " div n_tokens) / 1e6 END"
-            ).alias("alloc_frac_q6"),
-        )
-    )
-
-
 def token_budget_cells(
     df: DataFrame,
     pass_cond: Column,
@@ -933,7 +873,7 @@ def token_budget_cells(
     n_tokens), all plain sums, so a streaming aggregation maintains it
     live (state = one row per group) and the T40 twin snapshots it.
     NULL group keys coalesce to '' (the cross-engine NULL-rank-order
-    convention — see token_budget_allocation)."""
+    convention — see token_budget_from_cells)."""
     return df.groupBy(F.coalesce(F.col(by), F.lit("")).alias(by)).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.coalesce(F.sum(pass_cond.cast("int")), F.lit(0))
@@ -946,12 +886,22 @@ def token_budget_cells(
 def token_budget_from_cells(
     cells: DataFrame, budget: int, by: str = "source"
 ) -> DataFrame:
-    """Finale of the greedy token-budget fill over the pre-aggregated
-    cell table — the exact micro-int quality, ranking, bounded global
-    prefix window and allocation of :func:`token_budget_allocation`,
-    shared verbatim by the batch query and the T40 stream twin.
-    Defensively coalesces a NULL key to '' AND re-aggregates on the
-    coalesced key (the cells builders already coalesce — this covers
+    """Greedy quality-ranked TOKEN-budget fill over the pre-aggregated
+    cell table, shared verbatim by the batch query and the T40 stream
+    twin: rank groups by pass rate, take each group's tokens in full
+    until the budget runs out, a partial allocation at the boundary
+    group, zero after (greedy is optimal for this fractional-knapsack
+    shape — Dantzig 1957). Returns per group: (group, quality_q6,
+    n_tokens, alloc_tokens, alloc_frac_q6) with sum(alloc_tokens) ==
+    min(budget, total tokens).
+
+    Exactness: quality is the exact micro integer n_pass*1e6 div n_docs
+    (no doubles in the ORDER), ranking ties break on the group key, and
+    the prefix sum runs over the group-cardinality table (a bounded
+    global window). NULL keys coalesce to '' before ranking: a NULL key
+    that ties on quality sorts NULLS FIRST in Spark but NULLS LAST in
+    DuckDB, which would shift the greedy prefix. The finale re-aggregates
+    on the coalesced key (the cells builders already coalesce — this covers
     raw-cells callers whose table carries BOTH a NULL and a real ''
     group: projecting without re-aggregating would hand the greedy
     prefix window two rows with the same key and emit duplicate-key

@@ -12,8 +12,7 @@ strategies, all shuffle-conscious:
                  candidate join is an equi-join on a band-bucket hash.
 - SimHash:      64-bit signature; duplicates = equal signatures (or
                  Hamming<=r via rotations) — again an equi-join.
-- embedding:    cosine >= threshold over an embedding column; LSH-
-                 bucketed variant shares topk.lsh_signature.
+- embedding:    cosine >= threshold over an embedding column.
 
 All hashing is deterministic (xxhash64 built-in) — re-runs and retries
 of a 1000-executor job produce identical clusters.
@@ -252,29 +251,6 @@ def prefix_filter_jaccard_pairs(
 
 # ---------------------------------------------------------------- MinHash/LSH
 
-def minhash_signatures(
-    df: DataFrame,
-    n_hashes: int = 32,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, h0..h{n-1}) MinHash signatures.
-
-    One explode, one long-hash per shingle, then ``n_hashes`` cheap
-    long-rehashes reduced with map-side partial min aggregation — the
-    shuffle carries one (id, n longs) row per doc. Docs with no
-    shingles keep a row (all-null mins) so they still bucket together.
-    """
-    ex = _spread(df.select(F.col(id_col).alias("id"), F.col(text_col)), "id").select(
-        "id", F.explode_outer(word_shingles(F.col(text_col), shingle_n)).alias("_s")
-    ).select("id", F.xxhash64("_s").alias("h"))
-    mins = [
-        F.min(F.xxhash64("h", F.lit(i))).alias(f"h{i}") for i in range(n_hashes)
-    ]
-    return ex.groupBy("id").agg(*mins)
-
-
 def _band_table(sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
     """(id, bucket) rows: one folded band-bucket hash per band."""
     rows = n_hashes // bands
@@ -307,8 +283,7 @@ def _band_candidates(
     minhashes), so anchor pairs survive the exact-Jaccard verify and
     connected-components clustering reconnects the full cluster — the
     final dedup decision is unchanged while stage output stays linear.
-    ``lsh_bucket_stats`` reports how many buckets took the capped path
-    (no silent caps). ``max_bucket_size=None`` disables the cap.
+    ``max_bucket_size=None`` disables the cap.
     ``flag_capped=True`` adds a ``from_capped_bucket`` boolean — True
     for pairs that exist ONLY via an oversized bucket's star (i.e.
     their mutual links went through the anchor), so downstream
@@ -349,34 +324,6 @@ def _band_candidates(
     # a pair seen via any small bucket is NOT capped-only -> min(False)
     return pairs.groupBy("id_a", "id_b").agg(
         F.min("from_capped_bucket").alias("from_capped_bucket")
-    )
-
-
-def lsh_bucket_stats(
-    df: DataFrame,
-    n_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_bucket_size: int = DEFAULT_MAX_BUCKET_SIZE,
-) -> DataFrame:
-    """One-row occupancy report for the LSH band buckets: total buckets,
-    max occupancy, and how many buckets / rows exceeded the cap (i.e.
-    took the O(m) star path in :func:`_band_candidates`). Run this next
-    to any capped dedup job — the no-silent-caps companion."""
-    sig = minhash_signatures(df, n_hashes, shingle_n, text_col, id_col)
-    occ = _band_table(sig, n_hashes, bands).groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    over = F.col("n") > max_bucket_size
-    return occ.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.max("n").alias("max_occupancy"),
-        F.sum(over.cast("long")).alias("oversized_buckets"),
-        F.coalesce(F.sum(F.when(over, F.col("n"))), F.lit(0)).alias(
-            "rows_in_oversized"
-        ),
     )
 
 
@@ -737,42 +684,6 @@ def incremental_minhash_pairs(
 
 # ------------------------------------------------------------------- SimHash
 
-def simhash64(text, shingle_n: int = 2) -> Column:
-    """64-bit SimHash over word shingles as a single-pass column
-    expression.
-
-    One aggregate walks the shingle-hash array once, accumulating a
-    64-slot vote vector (+1/-1 per bit); a final fold packs vote signs
-    into the signature long. The shingle array is built exactly once —
-    the naive per-bit formulation re-evaluates it 64x per row.
-    """
-    hashed = F.transform(word_shingles(text, shingle_n), lambda s: F.xxhash64(s))
-    one = F.lit(1).cast("long")
-    zeros = F.array_repeat(F.lit(0).cast("long"), 64)
-    # two's-complement powers of two: bit 63 is Long.MIN_VALUE, matching
-    # shiftleft(1L, 63) in the distributed form
-    powers = F.array(
-        *[
-            F.lit((1 << i) if i < 63 else (1 << i) - (1 << 64)).cast("long")
-            for i in range(64)
-        ]
-    )
-    votes = F.aggregate(
-        hashed,
-        zeros,
-        lambda acc, h: F.zip_with(
-            acc,
-            powers,
-            lambda a, p: a
-            + F.when(h.bitwiseAND(p) != 0, one).otherwise(F.lit(-1).cast("long")),
-        ),
-    )
-    packed = F.zip_with(
-        votes, powers, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long"))
-    )
-    return F.aggregate(packed, F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-
 def simhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -780,10 +691,9 @@ def simhash_signatures(
     shingle_n: int = 2,
     portable_hash: bool = False,
 ) -> DataFrame:
-    """(id, simhash) via explode + 64 partial-aggregated bit votes — the
-    distributed form of :func:`simhash64` (identical values). Preferred
-    for wide scans: per-shingle work parallelizes past a one-task scan
-    and the shuffle carries 64 small longs per doc.
+    """(id, simhash) via explode + 64 partial-aggregated bit votes:
+    per-shingle work parallelizes past a one-task scan and the shuffle
+    carries 64 small longs per doc.
 
     ``portable_hash=True`` swaps xxhash64 for the top 60 bits of md5 —
     bit-for-bit reproducible in any engine with md5 (DuckDB, Postgres,
@@ -972,17 +882,11 @@ def embedding_near_duplicates(
     threshold: float = 0.95,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    use_lsh: bool = False,
-    n_planes: int = 8,
-    dim: int | None = None,
 ) -> DataFrame:
-    """Pairs of rows whose embeddings' cosine similarity >= threshold.
-
-    Exact mode: broadcast nested-loop self-join (quadratic — the
-    correctness baseline; norms precomputed per row so the per-pair
-    kernel is one dot product). LSH mode: prune with random-hyperplane
-    buckets first (the scale path; same signature as
-    topk.lsh_signature).
+    """Pairs of rows whose embeddings' cosine similarity >= threshold:
+    a broadcast nested-loop self-join (quadratic — the correctness
+    baseline the block-matmul paths are checked against; norms
+    precomputed per row so the per-pair kernel is one dot product).
     """
     a = _spread(
         df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")), "id_a"
@@ -990,17 +894,7 @@ def embedding_near_duplicates(
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")).withColumn(
         "nb", l2_norm("vb")
     )
-    if use_lsh:
-        from .topk import lsh_signature, random_hyperplanes
-
-        if dim is None:
-            dim = len(df.select(vec_col).first()[0])
-        planes = random_hyperplanes(dim, n_planes)
-        a = a.withColumn("_sig", lsh_signature("va", planes))
-        b = b.withColumn("_sig", lsh_signature("vb", planes))
-        pairs = a.join(b, "_sig").drop("_sig")
-    else:
-        pairs = a.crossJoin(F.broadcast(b))
+    pairs = a.crossJoin(F.broadcast(b))
     sim = cosine_similarity(F.col("va"), F.col("vb"), norm_a=F.col("na"), norm_b=F.col("nb"))
     return (
         pairs.filter(F.col("id_a") < F.col("id_b"))
@@ -1019,7 +913,7 @@ def embedding_near_duplicates_blas(
 ) -> DataFrame:
     """Exact cosine near-dup pairs via broadcast block matrix multiply.
 
-    Same semantics as :func:`embedding_near_duplicates` exact mode, but
+    Same semantics as :func:`embedding_near_duplicates`, but
     the kernel is one numpy matmul per Arrow batch instead of a per-pair
     expression fold: the comparison matrix (ids, vectors, norms) ships
     once per executor as a broadcast variable, each ``mapInPandas``
@@ -1032,7 +926,8 @@ def embedding_near_duplicates_blas(
     fit in executor memory (float64 matrix ~ n*dim*8 bytes). The guard
     counts rows first and raises past ``max_broadcast_rows`` (default
     1e6 — ~3 GB at dim 384) instead of silently taking down the driver;
-    past that, use the LSH mode, or shard the broadcast side and union.
+    past that, use :func:`embedding_near_duplicates_blocked` or
+    :func:`semantic_dedup_pairs`.
     """
     import numpy as np
     import pandas as pd
@@ -1047,8 +942,8 @@ def embedding_near_duplicates_blas(
             "the full corpus would be materialized on the driver. Use "
             "embedding_near_duplicates_blocked (executor-side block "
             "matmul, nothing on the driver) or "
-            "embedding_near_duplicates(use_lsh=True) at this scale, or "
-            "raise max_broadcast_rows explicitly if the driver can hold "
+            "semantic_dedup_pairs at this scale, or raise "
+            "max_broadcast_rows explicitly if the driver can hold "
             "n*dim*8 bytes."
         )
     b_pdf = src.toPandas()
@@ -1102,7 +997,7 @@ def embedding_near_duplicates_blocked(
     standard all-pairs block tradeoff (n_blocks ~ sqrt(corpus bytes /
     executor memory) balances the two). Exact all-pairs is inherently
     quadratic in compute at any layout — for corpora where even that is
-    too much, use the LSH mode.
+    too much, use :func:`semantic_dedup_pairs`.
     """
     import numpy as np
     import pandas as pd

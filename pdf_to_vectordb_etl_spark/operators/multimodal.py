@@ -1,8 +1,9 @@
 """Multimodal column operators (beyond-reference, north-star scale).
 
 Image/audio/video payloads are opaque ``binary`` columns with a typed
-metadata struct; decode / feature-extract / resize / frame-sample run
-as Arrow-batched ``mapInPandas`` kernels. The media libraries are not
+metadata struct; decode / feature-extract run as Arrow-batched
+``mapInPandas`` kernels, resize planning and frame sampling as native
+column math. The media libraries are not
 in this container, so the decode kernels are import-gated stubs with a
 deterministic fake — the Spark-side plumbing (schema, partitioning,
 UDF signature, batch shape) is real and tested.
@@ -17,27 +18,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, functions as F, types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("n_bytes", T.LongType(), True),
-                    T.StructField("digest", T.StringType(), True),
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.LongType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 DECODED_SCHEMA = T.StructType(
     [
@@ -142,9 +122,9 @@ def plan_resize(
 ) -> DataFrame:
     """The NATIVE half of image resizing: target dimensions from the
     metadata struct alone — aspect-preserving, longest side capped at
-    ``max_side``, never upscaled — so the expensive pixel pass
-    (resize_images) runs only on rows whose target differs from the
-    source, selected WITHOUT touching payload bytes. Pure column math;
+    ``max_side``, never upscaled — so an expensive pixel pass runs
+    only on rows whose target differs from the source, selected
+    WITHOUT touching payload bytes. Pure column math;
     floor semantics match any external planner."""
     w = F.col(f"{meta_col}.width").cast("double")
     h = F.col(f"{meta_col}.height").cast("double")
@@ -158,93 +138,6 @@ def plan_resize(
         (tw != F.col(f"{meta_col}.width"))
         | (th != F.col(f"{meta_col}.height")),
     )
-
-
-def _real_resize(payload: bytes, tw: int, th: int) -> bytes:
-    """PIL-backed resize — import-gated: the container has no imaging
-    libraries, so this kernel has never executed here; fake_resize is
-    the hermetic twin with the identical signature."""
-    try:
-        import io
-
-        from PIL import Image  # noqa: PLC0415
-    except ImportError as e:  # pragma: no cover - env without PIL
-        raise NotImplementedError(
-            "real image resize requires pillow; use fake_resize"
-        ) from e
-    im = Image.open(io.BytesIO(payload))
-    out = io.BytesIO()
-    im.resize((tw, th)).save(out, format=im.format or "PNG")
-    return out.getvalue()
-
-
-def fake_resize(payload: bytes, tw: int, th: int) -> bytes:
-    """Deterministic stand-in: output length = 3·tw·th (RGB byte
-    count), content derived from md5(payload) — size math and
-    determinism are testable without an imaging library."""
-    import hashlib
-
-    seed = hashlib.md5(payload or b"").digest()
-    need = 3 * tw * th
-    return (seed * (need // len(seed) + 1))[:need]
-
-
-def resize_images(
-    media: DataFrame,
-    max_side: int = 224,
-    resizer=_real_resize,
-) -> DataFrame:
-    """Arrow-batched resize pass: plan_resize picks targets natively,
-    rows already at target pass through byte-for-byte (no Python
-    round-trip cost beyond the filter), and only ``needs_resize`` rows'
-    payloads cross to the kernel. Output keeps MEDIA_SCHEMA's
-    (media_id, kind, payload, meta) shape with refreshed dimensions —
-    composable with decode_media / sample_frames downstream."""
-    import hashlib
-
-    import pandas as pd
-
-    planned = plan_resize(media, max_side=max_side)
-    passthrough = planned.filter(~F.col("needs_resize")).select(
-        "media_id", "kind", "payload", "meta"
-    )
-    todo = planned.filter(F.col("needs_resize")).select(
-        "media_id", "kind", "payload",
-        F.col("meta.duration_ms").alias("dur_ms"),
-        "target_width", "target_height",
-    )
-
-    out_schema = MEDIA_SCHEMA
-
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                data = resizer(
-                    bytes(r.payload) if r.payload is not None else b"",
-                    int(r.target_width),
-                    int(r.target_height),
-                )
-                rows.append(
-                    {
-                        "media_id": r.media_id,
-                        "kind": r.kind,
-                        "payload": data,
-                        "meta": {
-                            "n_bytes": len(data),
-                            "digest": hashlib.sha256(data).hexdigest(),
-                            "width": int(r.target_width),
-                            "height": int(r.target_height),
-                            "duration_ms": r.dur_ms,
-                        },
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in out_schema.fields]
-            )
-
-    resized = todo.mapInPandas(_run, out_schema)
-    return passthrough.unionByName(resized)
 
 
 def fake_feature_kernel(kind: str, payload: bytes, n_dims: int = 16) -> list[int]:

@@ -2,13 +2,14 @@
 
 The reference delegates kNN to Qdrant (reference qdrant_text_loader.py:
 122-142); here the baseline is brute-force cosine top-k as pure Catalyst
-expressions, plus an LSH-bucketed variant for the 100 TB path.
+expressions, plus approximate variants (IVF lists, an NN-descent
+graph) for the 100 TB path.
 
 Scale notes: brute-force is one narrow projection + TakeOrderedAndProject
 (limit pushed into per-partition sort — no full global sort, no shuffle
-of the scan side). The LSH variant prunes candidates with a random-
-hyperplane signature so each query touches only matching buckets; the
-signature join is an equi-join, broadcastable for small query sets.
+of the scan side). IVF prunes candidates to each query's closest
+centroid lists; the probe join is an equi-join, broadcastable for small
+query sets.
 """
 
 from __future__ import annotations
@@ -98,38 +99,6 @@ def topk_cosine_join(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes for LSH signatures
-    (splitmix-style integer scramble -> [-1, 1) floats; no RNG state)."""
-    planes = []
-    for p in range(n_planes):
-        row = []
-        for d in range(dim):
-            x = (p * dim + d + seed) * 0x9E3779B97F4A7C15 % (1 << 64)
-            x = (x ^ (x >> 31)) * 0xBF58476D1CE4E5B9 % (1 << 64)
-            row.append(((x >> 11) / float(1 << 53)) * 2.0 - 1.0)
-        planes.append(row)
-    return planes
-
-
-def lsh_signature(vec_col: str, planes: list[list[float]]):
-    """Random-hyperplane signature: bit i = sign(v . plane_i), packed
-    into a long — equal signatures => likely-similar vectors."""
-    bits = []
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        d = F.aggregate(
-            F.zip_with(F.col(vec_col), p, lambda a, b: a.cast("double") * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return sig.cast("long")
 
 
 def ivf_centroids(
@@ -271,7 +240,7 @@ def topk_cosine_ivf(
     centroid list; each query scans only its ``n_probe`` closest lists.
 
     vs. brute force: compute drops to ~n_probe/n_lists of the corpus per
-    query. vs. LSH: recall is tunable per query (raise n_probe) without
+    query, and recall is tunable per query (raise n_probe) without
     re-bucketing. The probe join is a broadcast equi-join on list_id for
     small query batches; at 100 TB the corpus side would be written
     bucketed by list_id so probes prune files (partition pruning).

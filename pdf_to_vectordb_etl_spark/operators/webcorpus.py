@@ -7,8 +7,6 @@ they run at scan speed and push no work to Python:
 
   strip_markup       — drop tags/comments, unescape common entities,
                        collapse whitespace
-  dehyphenate        — rejoin words split by line-break hyphenation
-                       (PDF/print extraction artifact)
   canonicalize_url   — lowercase scheme+host, drop default ports,
                        fragments, tracking params, trailing slashes
   registrable_domain — host -> eTLD+1-ish grouping key for per-domain
@@ -51,11 +49,6 @@ def strip_markup(c: Column) -> Column:
         out = F.replace(out, F.lit(ent), F.lit(rep))
     out = F.regexp_replace(out, r"\s+", " ")
     return F.trim(out)
-
-
-def dehyphenate(c: Column) -> Column:
-    """Rejoin ``exam-\\nple`` -> ``example`` (line-break hyphenation)."""
-    return F.regexp_replace(c, r"([\p{L}])-\n([\p{L}])", r"$1$2")
 
 
 def canonicalize_url(c: Column) -> Column:

@@ -10,9 +10,9 @@ behind Delta/Iceberg OPTIMIZE ZORDER; public algorithm, Morton 1966).
 
 Everything is native integer expressions (shiftleft / & / |) inside
 whole-stage codegen — no UDF; the only non-narrow step is the 1-row
-min/max aggregate broadcast back for scaling, then one
-repartitionByRange on the z-key (a single shuffle, same cost class as
-any clustered write).
+min/max aggregate broadcast back for scaling. Clustering a write by
+the key is then one repartitionByRange on it (a single shuffle, same
+cost class as any clustered write).
 """
 
 from __future__ import annotations
@@ -69,31 +69,6 @@ def zorder_key(df: DataFrame, x_col: str, y_col: str, z_name: str = "z") -> Data
     ys = _scale16(F.col(y_col), F.col("_ylo"), F.col("_yhi"))
     z = spread_bits16(xs).bitwiseOR(F.shiftleft(spread_bits16(ys), 1))
     return with_b.withColumn(z_name, z).drop("_xlo", "_xhi", "_ylo", "_yhi")
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    n_files: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Cluster ``df`` into ``n_files`` parquet files by Morton key:
-    each file covers a compact (x, y) rectangle, so min/max footer
-    stats prune files for range predicates on either column.
-
-    One shuffle (repartitionByRange on z) + in-partition sort; the
-    z column itself is dropped before writing — it's a layout device,
-    not data."""
-    keyed = zorder_key(df, x_col, y_col, "_zorder")
-    (
-        keyed.repartitionByRange(n_files, "_zorder")
-        .sortWithinPartitions("_zorder")
-        .drop("_zorder")
-        .write.mode(mode)
-        .parquet(path)
-    )
 
 
 def zonemap_prune_report(

@@ -208,44 +208,6 @@ def write_bucketed(
     w.mode("overwrite").format("parquet").saveAsTable(table)
 
 
-def compact_parquet(
-    spark,
-    src_path: str,
-    dest_path: str,
-    target_file_bytes: int = 128 << 20,
-    sort_cols: tuple[str, ...] = (),
-) -> int:
-    """Small-files compaction: rewrite a fragmented parquet dataset into
-    ~``target_file_bytes``-sized files; returns the file count written.
-
-    The 100 TB housekeeping op: streaming/incremental writers leave
-    thousands of KB-scale files whose open/footer overhead dominates
-    scans. File count = ceil(dataset bytes / target). With ``sort_cols``
-    the rewrite range-partitions and sorts, so every output file covers
-    a disjoint key range and min/max row-group stats prune scans
-    (poor-man's clustering index); without, a shuffle-free coalesce.
-    Sizing uses the Hadoop FileSystem API, so it works on any supported
-    storage (local/HDFS/object store), not just local paths.
-    """
-    import math
-
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(src_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    total_bytes = fs.getContentSummary(hpath).getLength()
-    n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-
-    df = spark.read.parquet(src_path)
-    if sort_cols:
-        out = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
-    else:
-        out = df.coalesce(n_files)
-    out.write.mode("overwrite").parquet(dest_path)
-    return n_files
-
-
 def console_progress(stats_long: DataFrame) -> str:
     """O8 — the reference's per-subject tried/inserted console report
     (qdrant_text_loader.py:187,:220-224), as a deterministic string the

@@ -214,75 +214,11 @@ def _snapshot_latest_version(spark: SparkSession, snapshot_path: str):
 
 def read_snapshot(spark: SparkSession, snapshot_path: str) -> DataFrame:
     """Read the latest committed version of a
-    :func:`stream_compact_snapshot` snapshot."""
+    :func:`stream_apply_changes` snapshot."""
     v = _snapshot_latest_version(spark, snapshot_path)
     if v is None:
         raise FileNotFoundError(f"no committed snapshot at {snapshot_path}")
     return spark.read.parquet(f"{snapshot_path}/v-{v}")
-
-
-def stream_compact_snapshot(
-    events_stream: DataFrame,
-    snapshot_path: str,
-    checkpoint_dir: str,
-    key: str = "user_id",
-    order_col: str = "tus",
-    payload_cols: list[str] | None = None,
-):
-    """Streaming materialized view: maintain a latest-per-key snapshot
-    of a changelog stream with a foreachBatch merge.
-
-    Each micro-batch is compacted (aggregates.latest_per_key — tiny),
-    unioned with the existing snapshot, compacted again, and written to
-    a NEW versioned directory ``v-<n>``; an empty ``_LATEST-<n>``
-    marker commits it atomically (read via :func:`read_snapshot`).
-    Work per batch is O(snapshot + batch), never O(stream history) —
-    the streaming twin of CDC compaction; at warehouse scale the
-    versioned rewrite becomes a keyed MERGE into a table format, same
-    dataflow.
-
-    Failure semantics: only "no committed snapshot yet" falls back to
-    the bare batch; a real read error on an existing snapshot
-    propagates and fails the stream instead of silently discarding all
-    prior state. The writer never overwrites the directory it reads
-    from, so a crash mid-write leaves the previous version intact, and
-    a replayed micro-batch after restart re-merges idempotently
-    (latest-per-key is a no-op on duplicate rows)."""
-    from ..operators.aggregates import latest_per_key
-
-    cols = payload_cols or ["event_type", "value"]
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        compact = latest_per_key(batch_df, key, order_col, cols)
-        prev_v = _snapshot_latest_version(spark, snapshot_path)
-        if prev_v is None:
-            merged = compact
-        else:
-            prev = spark.read.parquet(f"{snapshot_path}/v-{prev_v}")
-            merged = latest_per_key(
-                prev.unionByName(compact), key, order_col, cols
-            )
-        new_v = 0 if prev_v is None else prev_v + 1
-        merged.write.mode("overwrite").parquet(f"{snapshot_path}/v-{new_v}")
-        fs, jvm = _hadoop_fs(spark, snapshot_path)
-        Path = jvm.org.apache.hadoop.fs.Path
-        fs.create(Path(f"{snapshot_path}/_LATEST-{new_v}"), True).close()
-        # best-effort GC of superseded versions (keep one prior for
-        # in-flight readers); failures here never fail the stream
-        try:
-            for s in fs.globStatus(Path(snapshot_path + "/_LATEST-*")) or []:
-                if int(s.getPath().getName().split("-", 1)[1]) < new_v:
-                    fs.delete(s.getPath(), False)
-            for s in fs.globStatus(Path(snapshot_path + "/v-*")) or []:
-                if int(s.getPath().getName().split("-", 1)[1]) < new_v - 1:
-                    fs.delete(s.getPath(), True)
-        except Exception:  # noqa: BLE001 — GC only; snapshot is committed
-            pass
-
-    return events_stream.writeStream.foreachBatch(merge).option(
-        "checkpointLocation", checkpoint_dir
-    ).trigger(availableNow=True).start()
 
 
 def stream_sessionize(
@@ -431,10 +367,11 @@ def stream_apply_changes(
     of the changelog converges to the one-shot MERGE result — batch
     boundaries are arbitrary relative to version order, and without
     retained (_op, _ver) a late low-versioned change would corrupt the
-    snapshot. Same versioned-directory commit protocol as
-    stream_compact_snapshot (new v-<n> + atomic _LATEST marker; replay
-    re-merges idempotently because max_by version is a no-op on
-    duplicates). Read the live view with cdc.live_rows(read_snapshot)."""
+    snapshot. Each batch writes a new v-<n> directory and commits it
+    with an atomic _LATEST-<n> marker, never overwriting the version it
+    read; a replayed batch re-merges idempotently (max_by version is a
+    no-op on duplicates). A committed snapshot that cannot be read fails
+    the stream. Read the live view with cdc.live_rows(read_snapshot)."""
     from ..operators.cdc import merge_changelog
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:

@@ -3,10 +3,10 @@
 The reference's only cross-batch state is the sink-count ID continuation
 (SURVEY §2.11 T4), which deterministic IDs eliminate. These operators
 are the beyond-reference stateful surface: arbitrary per-key state kept
-by the engine across micro-batches — running totals, per-key ingestion
-quotas, rolling z-score flags, KMV and CUSUM state — the pattern any
-100 TB streaming curation pipeline needs (per-source dedup state, rate
-accounting, change detection).
+by the engine across micro-batches — running totals, rolling z-score
+flags, KMV and CUSUM state — the pattern any 100 TB streaming curation
+pipeline needs (per-source dedup state, rate accounting, change
+detection).
 
 State is per group key, stored in the state store (checkpointed,
 fault-tolerant); each micro-batch hands the operator the key's new rows
@@ -66,126 +66,6 @@ def running_totals(events_stream: DataFrame) -> DataFrame:
         stateStructType=RUNNING_STATE,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_cap_per_key(
-    stream: DataFrame,
-    key: str = "source",
-    cap: int = 100,
-    id_col: str = "doc_id",
-):
-    """Streaming ingestion quota — the streaming twin of
-    curation.cap_per_group: admit at most ``cap`` rows per key ACROSS
-    micro-batches (first-arrival wins). State per key is ONE bigint
-    (rows admitted so far) — bounded by key cardinality, independent of
-    stream length; rows past the quota are dropped inside the operator,
-    so downstream stages never see them.
-
-    Built on ``applyInPandasWithState`` (runs everywhere);
-    :func:`stream_cap_per_key_tws` is the same operator on Spark 4's
-    successor API, import-gated on protobuf.
-    """
-    from pyspark.sql.types import StringType
-
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("admitted_id", LongType()),
-        ]
-    )
-    state_schema = StructType([StructField("n", LongType())])
-
-    def _cap(key_t, pdfs, state: GroupState):
-        n = state.get[0] if state.exists else 0
-        frames = []
-        for pdf in pdfs:
-            if n >= cap:
-                break
-            take = pdf.iloc[: max(0, cap - n)]
-            n += len(take)
-            if len(take):
-                frames.append(
-                    pd.DataFrame(
-                        {"key": [key_t[0]] * len(take),
-                         "admitted_id": take[id_col].values}
-                    )
-                )
-        state.update((n,))
-        yield from frames or [pd.DataFrame({"key": [], "admitted_id": []})]
-
-    return stream.groupBy(key).applyInPandasWithState(
-        _cap, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def stream_cap_per_key_tws(
-    stream: DataFrame,
-    key: str = "source",
-    cap: int = 100,
-    id_col: str = "doc_id",
-):
-    """:func:`stream_cap_per_key` on Spark 4's
-    ``transformWithStateInPandas`` (typed per-key state handles, TTL,
-    composable state variables — the successor stateful API). The TWS
-    Python worker needs protobuf, which this container lacks, so the
-    kernel is import-gated exactly like the pymupdf decode path; the
-    applyInPandasWithState twin above is the hermetic equivalent.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as ex:  # pragma: no cover - env without protobuf
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package; use "
-            "stream_cap_per_key (applyInPandasWithState twin) instead"
-        ) from ex
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql.types import StringType
-
-    # transformWithState requires the RocksDB state store (the HDFS-backed
-    # default doesn't implement the v2 state API); harmless if already set
-    stream.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("admitted_id", LongType()),
-        ]
-    )
-
-    class CapProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._count = handle.getValueState(
-                "admitted", StructType([StructField("n", LongType())])
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = self._count.get()[0] if self._count.exists() else 0
-            for pdf in rows:
-                if n >= cap:
-                    break
-                take = pdf.iloc[: max(0, cap - n)]
-                n += len(take)
-                if len(take):
-                    yield pd.DataFrame(
-                        {"key": [key[0]] * len(take), "admitted_id": take[id_col].values}
-                    )
-            self._count.update((n,))
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.groupBy(key)
-        .transformWithStateInPandas(
-            CapProcessor(),
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="none",
-        )
     )
 
 

@@ -218,9 +218,10 @@ def test_multimodal_plumbing(spark, sf_dir):
     media = multimodal.as_media(
         docs.withColumn("payload", F.encode("text", "UTF-8")), "payload", "doc_id"
     )
-    assert [(f.name, f.dataType) for f in media.schema.fields] == [
-        (f.name, f.dataType) for f in multimodal.MEDIA_SCHEMA.fields
-    ]
+    assert media.schema.simpleString() == (
+        "struct<media_id:bigint,kind:string,payload:binary,meta:struct<"
+        "n_bytes:bigint,digest:string,width:int,height:int,duration_ms:bigint>>"
+    )
     meta_only = media.select("media_id", "meta.n_bytes", "meta.digest")
     assert meta_only.filter(F.col("n_bytes") > 0).count() == 30
 
@@ -277,97 +278,19 @@ def test_stream_interval_join_matches_batch(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_compact_parquet_reduces_files_and_clusters(spark, sf_dir, tmp_path):
-    """Compaction must preserve rows, cut file count, and (with
-    sort_cols) give files disjoint key ranges for min/max pruning."""
-    import glob as g
-
-    import pyarrow.parquet as pq
-
-    events = load(spark, sf_dir, "events")
-    frag = str(tmp_path / "frag")
-    events.repartition(40).write.parquet(frag)
-    assert len(g.glob(f"{frag}/part-*.parquet")) == 40
-
-    dest = str(tmp_path / "compacted")
-    sinks.compact_parquet(
-        spark, frag, dest, target_file_bytes=256 << 10, sort_cols=("user_id",)
-    )
-    files = g.glob(f"{dest}/part-*.parquet")
-    assert 1 <= len(files) < 40
-    got = spark.read.parquet(dest)
-    assert got.count() == events.count()
-    assert sorted(r["event_id"] for r in got.collect()) == sorted(
-        r["event_id"] for r in events.collect()
-    )
-    # range-partitioned: per-file user_id [min,max] intervals are disjoint
-    spans = []
-    for f in files:
-        md = pq.read_metadata(f)
-        idx = md.schema.names.index("user_id")
-        lo = min(md.row_group(i).column(idx).statistics.min for i in range(md.num_row_groups))
-        hi = max(md.row_group(i).column(idx).statistics.max for i in range(md.num_row_groups))
-        spans.append((lo, hi))
-    spans.sort()
-    for (alo, ahi), (blo, bhi) in zip(spans, spans[1:]):
-        assert ahi <= blo
-
-
-def test_stream_compact_snapshot_matches_batch(spark, sf_dir, tmp_path):
-    """The foreachBatch-maintained latest-per-key snapshot after N
-    micro-batches must equal batch compaction of the whole changelog."""
-    from pdf_to_vectordb_etl_spark.operators.aggregates import latest_per_key
-    from pdf_to_vectordb_etl_spark.streaming.pipeline import (
-        read_snapshot,
-        stream_compact_snapshot,
-    )
-
-    events = load(spark, sf_dir, "events").withColumn(
-        "tus", F.expr("ts div 1000")
-    ).select("user_id", "tus", "event_type", "value")
-    src = str(tmp_path / "changelog")
-    events.repartition(4).write.parquet(src)  # 4 files -> 4 micro-batches
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    snap = str(tmp_path / "snapshot")
-    q = stream_compact_snapshot(
-        stream, snap, str(tmp_path / "ckpt"), key="user_id", order_col="tus"
-    )
-    await_stream(q)
-
-    got = sorted(tuple(r) for r in read_snapshot(spark, snap).collect())
-    want = sorted(
-        tuple(r)
-        for r in latest_per_key(
-            events, "user_id", "tus", ["event_type", "value"]
-        ).collect()
-    )
-    assert got == want and len(got) > 0
-    # exactly one committed marker remains; at most two version dirs
-    import os
-
-    names = os.listdir(snap)
-    assert sum(n.startswith("_LATEST-") for n in names) == 1
-    assert sum(n.startswith("v-") for n in names) <= 2
-
-
-def test_stream_compact_snapshot_fails_loud_on_corrupt_state(
+def test_stream_apply_changes_fails_loud_on_corrupt_state(
     spark, sf_dir, tmp_path
 ):
     """A committed-but-unreadable snapshot must fail the stream, not be
     silently replaced by the current batch (prior-state discard)."""
     from pdf_to_vectordb_etl_spark.streaming.pipeline import (
         read_snapshot,
-        stream_compact_snapshot,
+        stream_apply_changes,
     )
 
     events = load(spark, sf_dir, "events").withColumn(
         "tus", F.expr("ts div 1000")
-    ).select("user_id", "tus", "event_type", "value")
+    ).select("user_id", "tus", F.lit("upsert").alias("op"), "value")
     src = str(tmp_path / "changelog")
     events.limit(100).write.parquet(src)
 
@@ -383,8 +306,8 @@ def test_stream_compact_snapshot_fails_loud_on_corrupt_state(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = stream_compact_snapshot(
-        stream, str(snap), str(tmp_path / "ckpt"), key="user_id", order_col="tus"
+    q = stream_apply_changes(
+        stream, str(snap), str(tmp_path / "ckpt"), ["user_id"], "tus"
     )
     with pytest.raises(Exception, match="(?i)parquet|FileReadException"):
         await_stream(q)
@@ -394,51 +317,6 @@ def test_stream_compact_snapshot_fails_loud_on_corrupt_state(
     assert "_LATEST-7" in os.listdir(snap)
     with pytest.raises(Exception):
         read_snapshot(spark, str(snap)).collect()
-
-
-def test_read_documents_multiformat_and_quarantine(spark, tmp_path):
-    """JSONL with a malformed line, CSV and evolved parquet each read
-    onto the document contract; the bad line lands in quarantine."""
-    from pdf_to_vectordb_etl_spark.sources import docs as D
-
-    jl = tmp_path / "drop.jsonl"
-    jl.write_text(
-        '{"doc_id": 1, "text": "hello json", "lang": "en", "source": "a", "n_chars": 10}\n'
-        'NOT JSON AT ALL{{{\n'
-        '{"doc_id": 2, "text": "second", "lang": "de", "source": "a", "n_chars": 6}\n'
-    )
-    cs = tmp_path / "drop.csv"
-    cs.write_text("doc_id,text,lang,source,n_chars\n3,from csv,fr,b,8\n")
-    # evolved parquet: missing n_chars, extra column "extra"
-    pq_dir = str(tmp_path / "drop.parquet")
-    spark.createDataFrame(
-        [(4, "from parquet", "es", "c", "x")],
-        "doc_id long, text string, lang string, source string, extra string",
-    ).write.parquet(pq_dir)
-
-    j = D.read_documents(spark, str(jl))
-    good, bad = D.split_quarantine(j)
-    assert bad.count() == 1 and "NOT JSON" in bad.first()[D.CORRUPT_COL]
-    assert {r["doc_id"] for r in good.collect()} == {1, 2}
-
-    csv_row = D.split_quarantine(D.read_documents(spark, str(cs)))[0].first()
-    assert csv_row["text"] == "from csv" and csv_row["n_chars"] == 8
-    pq = D.read_documents(spark, pq_dir)
-    assert pq.first()["n_chars"] is None  # evolved: padded with typed NULL
-    assert [f.name for f in pq.schema.fields] == [
-        "doc_id", "text", "lang", "source", "n_chars"
-    ]  # "extra" dropped
-
-
-def test_read_documents_text_lines(spark, tmp_path):
-    from pdf_to_vectordb_etl_spark.sources import docs as D
-
-    t = tmp_path / "lines.txt"
-    t.write_text("first line\nsecond line\n")
-    df = D.read_documents(spark, str(t))
-    got = sorted(r["text"] for r in df.collect())
-    assert got == ["first line", "second line"]
-    assert df.filter(F.col("doc_id").isNull()).count() == 0
 
 
 def test_expectations_one_pass_report_and_enforce(spark, sf_dir):
@@ -494,25 +372,6 @@ def test_write_sharded_with_manifest(spark, sf_dir, tmp_path):
     # manifest json readable
     man = spark.read.json(f"{dest}/_manifest")
     assert man.count() == 4
-
-
-def test_read_documents_orc_roundtrip(spark, tmp_path):
-    """ORC drops read back through the same contract (mergeSchema on,
-    aligned to the documents schema)."""
-    from pdf_to_vectordb_etl_spark.sources import docs as D
-
-    df = spark.createDataFrame(
-        [(1, "hello world", "en", "s1", 11)],
-        ["doc_id", "text", "lang", "source", "n_chars"],
-    )
-    p = str(tmp_path / "drop.orc")
-    df.write.orc(p)
-    back = D.read_documents(spark, p)
-    assert [f.name for f in back.schema.fields] == [
-        "doc_id", "text", "lang", "source", "n_chars"
-    ]
-    row = back.first()
-    assert row["doc_id"] == 1 and row["text"] == "hello world"
 
 
 def test_cli_list_and_query(tmp_path):

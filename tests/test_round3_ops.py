@@ -878,35 +878,6 @@ def test_weighted_sample_without_replacement_favors_heavy(spark):
     assert all(r["doc_id"] < 100 for r in out2)  # zero-weight rows last
 
 
-def test_resize_images_kernel_and_passthrough(spark):
-    """resize_images: rows already within max_side pass through with
-    payload IDENTITY (no Python round-trip); resized rows come back
-    with exactly 3·tw·th fake-RGB bytes, refreshed meta, and
-    aspect-preserved dims."""
-    from pdf_to_vectordb_etl_spark.operators import multimodal as mm
-
-    rows = [
-        (1, "image", b"small-image-bytes", (17, "d1", 50, 40, None)),
-        (2, "image", b"big-image-bytes!!", (17, "d2", 640, 480, None)),
-    ]
-    schema = mm.MEDIA_SCHEMA
-    media = spark.createDataFrame(rows, schema)
-    out = {r["media_id"]: r for r in mm.resize_images(
-        media, max_side=224, resizer=mm.fake_resize).collect()}
-    assert len(out) == 2
-    # small image untouched, payload identical
-    assert bytes(out[1]["payload"]) == b"small-image-bytes"
-    assert out[1]["meta"]["width"] == 50 and out[1]["meta"]["height"] == 40
-    # big image scaled 640x480 -> 224x168, 3*tw*th fake bytes
-    m2 = out[2]["meta"]
-    assert (m2["width"], m2["height"]) == (224, 168)
-    assert m2["n_bytes"] == 3 * 224 * 168
-    assert len(bytes(out[2]["payload"])) == 3 * 224 * 168
-    import hashlib
-
-    assert m2["digest"] == hashlib.sha256(bytes(out[2]["payload"])).hexdigest()
-
-
 def test_observation_metrics_single_pass(spark, sf_dir):
     """Pipeline instrumentation via the Observation API: quality-gate
     metrics (row count, null count, value sum) ride along with the

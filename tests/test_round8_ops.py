@@ -507,7 +507,8 @@ def test_auc_by_group_null_labels_count_as_negatives(spark):
 
 def test_token_budget_allocation_conserves_budget(spark):
     from pdf_to_vectordb_etl_spark.operators.curation import (
-        token_budget_allocation,
+        token_budget_cells,
+        token_budget_from_cells,
     )
 
     rows = [
@@ -518,13 +519,11 @@ def test_token_budget_allocation_conserves_budget(spark):
     df = spark.createDataFrame(rows, "source string, n int, good int")
     out = {
         r["source"]: r
-        for r in token_budget_allocation(
-            df,
-            budget=300,
-            quality=F.expr(
-                "CAST(sum(good) AS DECIMAL(38,0)) * 1000000 div count(*)"
+        for r in token_budget_from_cells(
+            token_budget_cells(
+                df, pass_cond=F.col("good") == 1, tokens=F.col("n")
             ),
-            tokens=F.col("n"),
+            budget=300,
         ).collect()
     }
     assert out["a"]["alloc_tokens"] == 200      # best source: in full

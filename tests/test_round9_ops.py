@@ -21,7 +21,6 @@ def test_token_budget_null_source_coalesces_to_empty(spark):
     NULL key that ties on quality would shift every downstream
     allocation cross-engine."""
     from pdf_to_vectordb_etl_spark.operators.curation import (
-        token_budget_allocation,
         token_budget_cells,
         token_budget_from_cells,
     )
@@ -34,13 +33,11 @@ def test_token_budget_null_source_coalesces_to_empty(spark):
     df = spark.createDataFrame(rows, "source string, n int, good int")
     out = {
         r["source"]: r
-        for r in token_budget_allocation(
-            df,
-            budget=300,
-            quality=F.expr(
-                "CAST(sum(good) AS DECIMAL(38,0)) * 1000000 div count(*)"
+        for r in token_budget_from_cells(
+            token_budget_cells(
+                df, pass_cond=F.col("good") == 1, tokens=F.col("n")
             ),
-            tokens=F.col("n"),
+            budget=300,
         ).collect()
     }
     assert None not in out and "" in out
@@ -48,16 +45,6 @@ def test_token_budget_null_source_coalesces_to_empty(spark):
     assert out[""]["alloc_tokens"] == 200
     assert out["a"]["alloc_tokens"] == 100
     assert out["b"]["alloc_tokens"] == 0
-
-    # the cells/finale split agrees with the one-shot operator
-    cells = token_budget_cells(
-        df, pass_cond=F.col("good") == 1, tokens=F.col("n")
-    )
-    out2 = {
-        r["source"]: r["alloc_tokens"]
-        for r in token_budget_from_cells(cells, budget=300).collect()
-    }
-    assert out2 == {k: v["alloc_tokens"] for k, v in out.items()}
 
 
 def test_bytebpe_export_min_words0_keeps_zero_pretoken_docs(spark):

@@ -91,48 +91,6 @@ def test_running_totals_stateful_stream(spark, sf_dir, tmp_path):
     assert want.count() > 0 and diff.count() == 0
 
 
-def test_stream_cap_per_key_enforces_quota_across_batches(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas quota: at most `cap` docs admitted per
-    source across ALL micro-batches; admitted ids are a subset of input."""
-    from pdf_to_vectordb_etl_spark.streaming.stateful import (
-        stream_cap_per_key,
-        stream_cap_per_key_tws,
-    )
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "source")
-    src = str(tmp_path / "docs_src")
-    docs.repartition(4).write.mode("overwrite").parquet(src)  # 4 micro-batches
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    got = drain_to_memory(
-        stream_cap_per_key(stream, key="source", cap=7, id_col="doc_id"),
-        "cap_stream",
-        mode="append",
-    ).collect()
-    per_key = {}
-    for r in got:
-        per_key.setdefault(r["key"], []).append(r["admitted_id"])
-    totals = {r["source"]: c for r, c in
-              [(x, x["n"]) for x in docs.groupBy("source").agg(F.count("*").alias("n")).collect()]}
-    assert per_key, "stream admitted nothing"
-    for k, ids in per_key.items():
-        assert len(ids) == min(7, totals[k]), (k, len(ids))
-        assert len(set(ids)) == len(ids)  # no id admitted twice
-    all_ids = {r["doc_id"] for r in docs.collect()}
-    assert all(i in all_ids for ids in per_key.values() for i in ids)
-    # the transformWithState twin gates cleanly when protobuf is absent
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        import pytest
-
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stream_cap_per_key_tws(stream)
-
-
 def test_stream_anomaly_matches_batch_across_microbatches(spark, sf_dir, tmp_path):
     """The streaming flagger's state carries the trailing window across
     micro-batches: time-split files fed one per trigger must produce
@@ -193,7 +151,10 @@ def test_band_candidates_star_caps_boilerplate(spark):
 
     m = 10_000
     df = _boilerplate(spark, m=m)
-    sig = dedup.minhash_signatures(df)
+    # the 32-hash signature minhash_dedup_pairs builds before banding
+    sig = dedup._shingle_hashes(df, "text", "doc_id", 3).groupBy("id").agg(
+        *[F.min(F.xxhash64("h", F.lit(i))).alias(f"h{i}") for i in range(32)]
+    )
     capped = dedup._band_candidates(sig, 32, 8, max_bucket_size=64)
     pairs = capped.collect()
     # star scheme: every dup connects to the min-id anchor once per
@@ -229,17 +190,6 @@ def test_capped_equals_uncapped_when_under_cap(spark, sf_dir):
         ).collect()
     }
     assert capped == uncapped
-
-
-def test_lsh_bucket_stats_reports_oversize(spark):
-    from pdf_to_vectordb_etl_spark.operators import dedup
-
-    df = _boilerplate(spark, m=200, uniques=5)
-    row = dedup.lsh_bucket_stats(df, max_bucket_size=64).first()
-    assert row.max_occupancy == 200
-    # all 8 bands of the duplicated template collapse to 8 hot buckets
-    assert row.oversized_buckets == 8
-    assert row.rows_in_oversized == 8 * 200
 
 
 def test_collapse_exact_star_pairs_and_closure(spark):

@@ -219,6 +219,39 @@ def test_pandas_udf_embedder_batches(spark, sf_dir):
     assert [round(x, 5) for x in rows[0]["vector"]] == [round(x, 5) for x in one]
 
 
+def test_openai_embed_fn_wraps_client_and_gates_sdk(monkeypatch):
+    """U3: the factory drives an OpenAI-style client (model and key
+    passed through, one vector per text in order) and raises a clear
+    error when the SDK is absent. No Spark, no network."""
+    import sys
+    import types
+
+    import pytest
+
+    calls = []
+
+    class FakeOpenAI:
+        def __init__(self, api_key=None):
+            self.embeddings = self
+            self.api_key = api_key
+
+        def create(self, model, input):
+            calls.append((self.api_key, model, list(input)))
+            vecs = embedding.fake_client_embed(input, dim=4)
+            return types.SimpleNamespace(
+                data=[types.SimpleNamespace(embedding=v) for v in vecs]
+            )
+
+    monkeypatch.setitem(sys.modules, "openai", types.SimpleNamespace(OpenAI=FakeOpenAI))
+    embed = embedding.openai_embed_fn(model="m-1", api_key="k")
+    assert embed(["a", "b"]) == embedding.fake_client_embed(["a", "b"], dim=4)
+    assert calls == [("k", "m-1", ["a", "b"])]
+
+    monkeypatch.setitem(sys.modules, "openai", None)  # import raises
+    with pytest.raises(NotImplementedError, match="fake_client_embed"):
+        embedding.openai_embed_fn()
+
+
 def test_assign_ids_modes(spark, sf_dir):
     docs = load(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("ID"), F.lit("math").alias("materia"),
@@ -352,48 +385,6 @@ def test_zorder_bit_interleave_exact(spark):
     assert r["sx"] == 0b10001  # 0b101 spread to even bits
     assert r["sy"] == 0b101  # 0b11 spread to even bits
     # z(5,3) = sx | (sy << 1) = 0b10001 | 0b1010 = 0b11011 = 27
-
-
-def test_zorder_write_prunes_both_dimensions(spark, sf_dir, tmp_path):
-    """Z-ordered files cover compact (x, y) rectangles: a range
-    predicate on EITHER column must exclude most files via footer
-    min/max — a single-column sort only prunes its own column."""
-    import glob as g
-
-    import pyarrow.parquet as pq
-
-    from pdf_to_vectordb_etl_spark.operators.zorder import write_zordered
-
-    events = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    dest = str(tmp_path / "zordered")
-    write_zordered(events, dest, "user_id", "value", n_files=16)
-
-    files = g.glob(f"{dest}/part-*.parquet")
-    assert len(files) >= 8
-    got = spark.read.parquet(dest)
-    assert got.count() == events.count()
-
-    def spans(col):
-        out = []
-        for f in files:
-            md = pq.read_metadata(f)
-            idx = md.schema.names.index(col)
-            st = [md.row_group(i).column(idx).statistics for i in range(md.num_row_groups)]
-            out.append((min(s.min for s in st), max(s.max for s in st)))
-        return out
-
-    stats = events.agg(
-        F.min("user_id"), F.max("user_id"), F.min("value"), F.max("value")
-    ).first()
-    ulo, uhi, vlo, vhi = stats
-    # a 10%-wide box on each dimension in turn
-    uq = (ulo + (uhi - ulo) * 0.45, ulo + (uhi - ulo) * 0.55)
-    vq = (vlo + (vhi - vlo) * 0.45, vlo + (vhi - vlo) * 0.55)
-    u_hit = sum(1 for lo, hi in spans("user_id") if not (hi < uq[0] or lo > uq[1]))
-    v_hit = sum(1 for lo, hi in spans("value") if not (hi < vq[0] or lo > vq[1]))
-    # both dimensions prune: neither predicate touches all files
-    assert u_hit <= len(files) * 0.75
-    assert v_hit <= len(files) * 0.75
 
 
 def test_cdc_apply_changes_merge_semantics(spark):

@@ -104,14 +104,6 @@ def test_webcorpus_strip_markup(spark):
     assert got == "Hello world &amp; friends <3"
 
 
-def test_webcorpus_dehyphenate(spark):
-    from pdf_to_vectordb_etl_spark.operators import webcorpus as wc
-
-    df = spark.createDataFrame([("exam-\nple stays-afloat end-\n2",)], "t string")
-    got = df.select(wc.dehyphenate(F.col("t"))).first()[0]
-    assert got == "example stays-afloat end-\n2"  # digits: not hyphenation
-
-
 # ------------------------------------------------------------- r6:
 # full Gopher rule set — each rule pinned by a planted doc that fails
 # exactly that rule (bitmask isolates it).

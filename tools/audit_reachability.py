@@ -21,8 +21,9 @@ in any module); starts no Spark. Imports inside the package's
 ``__init__.py`` files are re-exports, not uses, and do not count.
 
 Exit 1 when a def is unreached and not allowlisted, or when an
-allowlist entry is stale: no such def, or one that non-test code
-reaches without the allowlist.
+allowlist entry is stale: no such def, one that non-test code reaches
+without the allowlist, or one that no file outside its own module
+names, tests included (nothing uses it at all).
 
 Usage: python tools/audit_reachability.py
 """
@@ -38,10 +39,12 @@ PACKAGE = ROOT / "pdf_to_vectordb_etl_spark"
 #: the non-test code whose references count (besides the package)
 CALLERS = [ROOT / "__spark_entry__.py", ROOT / "bench.py", ROOT / "tools",
            ROOT / "perfbench"]
+TESTS = ROOT / "tests"
 
-#: defs kept although only tests reach them, one per capability, each
-#: with the COVERAGE.md row it implements (no registry query reaches
-#: these through the package; the query twin inlines its own plan)
+#: defs kept although only tests reach them: the reference surface,
+#: each with the COVERAGE.md row it implements (no registry query
+#: reaches these through the package; the query twin inlines its own
+#: plan), and the references that tests check a registry path against
 ALLOWLIST = {
     # §2.1–§3: the reference's own surface
     "write_page_images": "S3 page image scan / O4 image sink (§2.1, §2.10)",
@@ -59,22 +62,7 @@ ALLOWLIST = {
     "fake_client_embed": "U3 offline client for openai_embed_fn (§2.12)",
     "extract_pdf": "§3 entry point extract_pdf (df/txt/json/dict modes)",
     "file_to_vector_table": "§3 entry point file_to_vector_table",
-    # beyond-reference rows: test-only operators still listed in
-    # COVERAGE.md's beyond-reference section (ROADMAP: map or delete)
-    "simhash64": "beyond: SimHash, the driver twin of simhash_signatures",
-    "embedding_near_duplicates": "beyond: embedding near-dup (HOF + LSH modes)",
-    "token_budget_allocation": "beyond: token-budget allocation, one-frame form",
-    "stream_compact_snapshot": "beyond: streaming materialized snapshot",
-    "compact_parquet": "beyond: small-files compaction",
-    "lsh_bucket_stats": "beyond: LSH band-bucket occupancy report",
-    "write_zordered": "beyond: Z-order clustered file layout",
-    "dehyphenate": "beyond: web-corpus hygiene",
-    "read_documents": "beyond: multi-format document source",
-    "split_quarantine": "beyond: multi-format document source, corrupt-row quarantine",
-    "stream_cap_per_key": "beyond: streaming ingestion quota",
-    "stream_cap_per_key_tws": "beyond: streaming ingestion quota, transformWithState twin",
-    "resize_images": "beyond: multimodal resize kernel",
-    "fake_resize": "beyond: multimodal resize, the offline kernel",
+    "embedding_near_duplicates": "test reference: the baseline test_blas_embedding_pairs_match_hof checks the registry's _blas path against",
 }
 
 
@@ -152,14 +140,40 @@ def scan(allow=ALLOWLIST) -> tuple[dict[str, list[str]], set[str]]:
     return defs, reached
 
 
+def mentions() -> dict[str, set[str]]:
+    """{file: names it references} over the package, the non-test
+    callers and ``tests/`` (re-exports in ``__init__.py`` excluded)."""
+    out: dict[str, set[str]] = {}
+    for root in [PACKAGE, *CALLERS, TESTS]:
+        for path in _py_files(root):
+            tree = ast.parse(path.read_text(), filename=str(path))
+            imports = not (root == PACKAGE and path.name == "__init__.py")
+            out[str(path.relative_to(ROOT))] = _names(tree, imports=imports)
+    return out
+
+
+def stale_entries(allow, defs, reached_bare, named) -> list[str]:
+    """Allowlist entries to drop: no such def, a def in
+    ``reached_bare`` (reached without the allowlist), or a def that no
+    file of ``named`` outside its own module references."""
+    stale = []
+    for name in sorted(allow):
+        homes = {where.rsplit(":", 1)[0] for where in defs.get(name, ())}
+        used = any(name in names for f, names in named.items() if f not in homes)
+        if not homes or name in reached_bare or not used:
+            stale.append(name)
+    return stale
+
+
 def main() -> int:
     defs, reached = scan()
     unreached = sorted(set(defs) - reached)
-    stale = sorted((set(ALLOWLIST) - set(defs)) | (set(ALLOWLIST) & scan(())[1]))
+    stale = stale_entries(ALLOWLIST, defs, scan(())[1], mentions())
     for name in unreached:
         print(f"UNREACHED  {name}  ({', '.join(defs[name])})")
     for name in stale:
-        print(f"STALE ALLOWLIST  {name}: no such def, or reached without the allowlist")
+        print(f"STALE ALLOWLIST  {name}: no such def, reached without the "
+              "allowlist, or named nowhere outside its module")
     print(f"{len(defs)} top-level package defs and constants, {len(reached)} reached "
           f"({len(ALLOWLIST)} allowlisted), {len(unreached)} unreached")
     return 1 if unreached or stale else 0
